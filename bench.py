@@ -284,6 +284,16 @@ HEADLINE = [
 ]
 
 
+def _cpus_requested() -> int | None:
+    """SPARK_GRAFT_CPUS as a positive int, or None when unset or
+    malformed (the effective count is ``cpus_effective``)."""
+    try:
+        n = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return None
+    return n if n > 0 else None
+
+
 def _load_evidence() -> dict:
     """1/5/15-min loadavg + competing Spark driver count, so a bench
     artifact taken on a contended host identifies itself."""
@@ -328,7 +338,7 @@ def _load_evidence() -> dict:
         # artifact couldn't prove the 8-cpu run used 8 cpus, so the
         # driver's scaling probe false-flagged suspect_cpus_ignored).
         "cpus": os.cpu_count() or -1,
-        "cpus_requested": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus_requested": _cpus_requested(),
         "competing_spark_pids": competing,
     }
 

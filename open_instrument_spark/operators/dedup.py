@@ -840,10 +840,12 @@ def connected_components(pairs: DataFrame, a: str = "a_id", b: str = "b_id",
     directed.unpersist()
     src_type = dict(edges.dtypes)["src"]
     if src_type in ("smallint", "int", "bigint"):
-        # the count scans the just-checkpointed blocks — cheap at any
-        # scale, and it buys the whole strategy decision
-        n_edges = edges.count()
-        if n_edges <= driver_max_edges:
+        # one scan of the just-checkpointed blocks — cheap at any scale —
+        # buys the whole strategy decision. A null endpoint takes the
+        # distributed path, whose joins define how a null id clusters
+        # (the symmetric list carries every endpoint as src).
+        n_edges, n_ids = edges.agg(F.count(F.lit(1)), F.count("src")).first()
+        if n_edges == n_ids and n_edges <= driver_max_edges:
             return _cc_driver_union_find(edges, src_type)
     labels = (
         edges.select(F.col("src").alias("id"))

@@ -32,7 +32,7 @@ Two reference kernels exist:
   from Mean in the reference — flush on ``ts >= anchor + duration``,
   output stamped at the TRIGGERING sample's ts (which is excluded from
   the flushed bucket and re-anchors the next one), and the final
-  partial bucket is never emitted. See _minmax_anchored_kernel.
+  partial bucket is never emitted. See _minmax_anchored_scan.
   Data-dependent anchoring ⇒ grouped-map kernel for all three; the
   engine's declared aligned-window variants live in mutate.py.
 
@@ -56,8 +56,11 @@ reference-faithful pre-1970 behavior all three ways.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -186,44 +189,87 @@ def uniform_average(points: DataFrame, interval, max_gap_interpolate: int | None
 
 
 # ---------------------------------------------------------------------------
-# numpy kernels (pure functions — golden-tested without Spark)
+# per-series recurrences, each defined once as a resumable scan
 # ---------------------------------------------------------------------------
+#
+# ``scan(state, t, vals, interval, **params) -> (state, out_t, out_vals)``
+# folds one ts-sorted chunk of a series: ``t`` int64 (epoch-µs on the
+# engine's paths; the golden vectors use ms — the grid math is
+# unit-agnostic, only rate's seconds conversion assumes µs), ``vals``
+# float64, ``interval`` the grid/bucket width in ``t``'s unit (ignored
+# by the smoothers). ``state`` is a tuple of plain Python values laid out
+# as ``state_schema``, so it is also the Spark state row. Folding
+# consecutive chunks with the returned state equals one scan over their
+# concatenation — the rule the streaming driver
+# (``streaming.recurrence``) relies on, pinned by
+# test_scan_chunk_fold_equals_one_shot. The batch ``*_kernel``s are the
+# scan run once from ``init(**params)`` over the whole series. Each loop
+# walks the whole chunk as Python scalars (``tolist``), which is
+# IEEE-identical to numpy scalar arithmetic and cheaper per step.
 
-def uniform_series_kernel(ts: np.ndarray, vals: np.ndarray, interval: int
-                          ) -> tuple[np.ndarray, np.ndarray]:
-    """Reference-exact C++ UniformTimeSeries (lib/counter.cc:18-64).
-    ts, interval in the same integer unit (reference: ms)."""
+
+class Recurrence(NamedTuple):
+    state_schema: str
+    init: Callable[..., tuple]
+    scan: Callable[..., tuple]
+
+
+def _batch_kernel(rec: Recurrence):
+    def kernel(ts, vals, interval, **params):
+        _, out_t, out_v = rec.scan(
+            rec.init(**params), np.asarray(ts, dtype=np.int64),
+            np.asarray(vals, dtype=np.float64), interval, **params,
+        )
+        return out_t, out_v
+
+    kernel.__doc__ = rec.scan.__doc__
+    return kernel
+
+
+def _arrays(out_t, out_v):
+    return np.array(out_t, dtype=np.int64), np.array(out_v, dtype=np.float64)
+
+
+def _uniform_scan(state, t, vals, interval, max_gap=None):
+    """Reference-exact C++ UniformTimeSeries (lib/counter.cc:18-64): the
+    grid is the multiples of ``interval`` and the first input is never
+    emitted (counter.cc:21-29). Each later input emits the grid points
+    in (prev_t, t] interpolated between the ADJACENT pair — no input is
+    skipped — or its own value on an exact hit (counter.cc:35-41). An
+    equal-ts input replaces the carried predecessor, as the reference
+    loop does; an older one is dropped. ``max_gap`` adds the proto's
+    ``max_gap_interpolate`` (lib/openinstrument.proto:45-52): a pair gap
+    over max_gap·interval is left unfilled, except an exact grid hit.
+    Same IEEE ops as the SQL plan (uniform_average)."""
+    nxt, prev_t, prev_v = state
     out_t, out_v = [], []
-    if len(ts) == 0:
-        return np.array(out_t, dtype=np.int64), np.array(out_v)
-    base = ts[0] - ts[0] % interval
-    n_out = 1
-    last_t, last_v = ts[0], vals[0]
-    for t, v in zip(ts[1:], vals[1:]):
-        while True:
-            nxt = base + interval * n_out
-            if t == nxt:
-                out_t.append(t)
-                out_v.append(v)
-                n_out += 1
-                break
-            if t < nxt:
-                break
-            while t > nxt:
-                newv = (v - last_v) / (t - last_t) * (nxt - last_t) + last_v
+    for ti, v in zip(t.tolist(), vals.tolist()):
+        if prev_t is None:
+            nxt = ti - ti % interval + interval
+        elif ti < prev_t:
+            continue
+        else:
+            if max_gap is not None and ti - prev_t > max_gap * interval:
+                nxt = ti - ti % interval
+                if nxt < ti:
+                    nxt += interval
+            while nxt <= ti:
                 out_t.append(nxt)
-                out_v.append(newv)
-                n_out += 1
-                nxt = base + interval * n_out
-        last_t, last_v = t, v
-    return np.array(out_t, dtype=np.int64), np.array(out_v)
+                out_v.append(
+                    v if nxt == ti
+                    else (v - prev_v) / (ti - prev_t) * (nxt - prev_t) + prev_v
+                )
+                nxt += interval
+        prev_t, prev_v = ti, v
+    return (nxt, prev_t, prev_v), *_arrays(out_t, out_v)
 
 
-def interpolate_kernel(ts: np.ndarray, vals: np.ndarray, interval: int,
-                       max_gap: int | None = None
-                       ) -> tuple[np.ndarray, np.ndarray]:
+def _interpolate_scan(state, t, vals, interval, max_gap=None):
     """Reference-exact Go Interpolate (mutations/mutations.go:90-137),
     minus its duplicate-emit on exact boundary hits (see module doc).
+    The first input anchors the grid and passes through when on-grid
+    (mutations.go:99-105); inputs that do not reach the pending grid
+    point are skipped (mutations.go:112), so a late input is dropped.
 
     ``max_gap`` adds the proto's ``max_gap_interpolate`` semantics
     (lib/openinstrument.proto:45-52, ignored by both reference code
@@ -232,41 +278,40 @@ def interpolate_kernel(ts: np.ndarray, vals: np.ndarray, interval: int,
     point, which still passes through (it is a real value, not a fill;
     same carve-out as uniform_average's). Emission arithmetic matches
     the SQL plan bit-for-bit (prev_v + rate at pct == 1)."""
+    prev_t, prev_v, pending = state
     out_t, out_v = [], []
-    if len(ts) == 0:
-        return np.array(out_t, dtype=np.int64), np.array(out_v)
-    if ts[0] % interval == 0:
-        out_t.append(ts[0])
-        out_v.append(vals[0])
-        prev_t, prev_v = ts[0], vals[0]
-    else:
-        prev_t, prev_v = ts[0] // interval * interval, vals[0]
-    pending = prev_t + interval
-    for t, v in zip(ts[1:], vals[1:]):
-        if t < pending:
-            continue  # non-crossing inputs are skipped (mutations.go:112)
+    for ti, v in zip(t.tolist(), vals.tolist()):
+        if prev_t is None:
+            if ti % interval == 0:
+                out_t.append(ti)
+                out_v.append(v)
+            prev_t, prev_v = ti - ti % interval, v
+            pending = prev_t + interval
+            continue
+        if ti < pending:
+            continue
         rate = v - prev_v
-        if max_gap is not None and t - prev_t > max_gap * interval:
-            if t % interval == 0:  # exact grid hit passes through
-                out_t.append(t)
+        if max_gap is not None and ti - prev_t > max_gap * interval:
+            if ti % interval == 0:  # exact grid hit passes through
+                out_t.append(ti)
                 out_v.append(prev_v + rate)
-            pending = t - t % interval + interval
+            pending = ti - ti % interval + interval
         else:
-            while pending <= t:
-                pct = (pending - prev_t) / (t - prev_t)
+            while pending <= ti:
                 out_t.append(pending)
-                out_v.append(prev_v + rate * pct)
+                out_v.append(prev_v + rate * ((pending - prev_t) / (ti - prev_t)))
                 pending += interval
-        if prev_t < t:
-            prev_t, prev_v = t, v  # single emit even on exact boundary
-    return np.array(out_t, dtype=np.int64), np.array(out_v)
+        if prev_t < ti:
+            prev_t, prev_v = ti, v  # single emit even on exact boundary
+    return (prev_t, prev_v, pending), *_arrays(out_t, out_v)
 
 
 def mean_anchored_kernel(ts: np.ndarray, vals: np.ndarray, duration: int
                          ) -> tuple[np.ndarray, np.ndarray]:
     """Reference-exact Go Mean (mutations/mutations.go:10-49): buckets
     anchored at first-in-bucket ts, flushed when ts-first > duration,
-    stamped at last included ts."""
+    stamped at last included ts. Batch-only: the final partial bucket is
+    emitted after the loop, so it is not an append-mode recurrence."""
     out_t, out_v = [], []
     if len(ts) == 0:
         return np.array(out_t, dtype=np.int64), np.array(out_v)
@@ -288,7 +333,7 @@ def mean_anchored_kernel(ts: np.ndarray, vals: np.ndarray, duration: int
     return np.array(out_t, dtype=np.int64), np.array(out_v)
 
 
-def _minmax_anchored_kernel(ts, vals, duration, fn):
+def _minmax_anchored_scan(state, t, vals, duration, is_min):
     """Go Min/Max (mutations.go:139-191). NOT the same bucketing as
     Mean — three deliberate reference behaviors, each visible in the Go
     loop: (1) flush when ``t >= anchor + duration`` (Mean uses strict
@@ -296,41 +341,48 @@ def _minmax_anchored_kernel(ts, vals, duration, fn):
     timestamp, and that sample is excluded from the flushed bucket —
     it re-anchors and seeds the next bucket; (3) the final partial
     bucket is never emitted (Go flushes only on arrival of a
-    triggering sample, and there is no post-loop flush like Mean's).
-    """
+    triggering sample, and there is no post-loop flush like Mean's),
+    which is what makes it append-mode streamable."""
+    anchor, acc = state
     out_t, out_v = [], []
-    if len(ts) == 0:
-        return np.array(out_t, dtype=np.int64), np.array(out_v)
-    anchor = ts[0]
-    acc = vals[0]
-    for t, v in zip(ts[1:], vals[1:]):
-        if t >= anchor + duration:
-            out_t.append(t)
+    for ti, v in zip(t.tolist(), vals.tolist()):
+        if anchor is None:
+            anchor, acc = ti, v
+        elif ti >= anchor + duration:
+            out_t.append(ti)
             out_v.append(acc)
-            anchor, acc = t, v
-        else:
-            acc = fn(acc, v)
-    return np.array(out_t, dtype=np.int64), np.array(out_v)
+            anchor, acc = ti, v
+        elif v < acc if is_min else v > acc:
+            acc = v
+    return (anchor, acc), *_arrays(out_t, out_v)
 
 
-def ewma_kernel(ts, vals, duration, alpha: float = 0.25):
+def _min_anchored_scan(state, t, vals, duration):
+    return _minmax_anchored_scan(state, t, vals, duration, True)
+
+
+def _max_anchored_scan(state, t, vals, duration):
+    return _minmax_anchored_scan(state, t, vals, duration, False)
+
+
+def _ewma_scan(state, t, vals, interval, alpha: float = 0.25):
     """Exponentially weighted moving average: y₀ = x₀,
     yᵢ = α·xᵢ + (1-α)·yᵢ₋₁ — the classic smoothing mutation monitoring
     UIs apply before display (not in the reference; north-star TSDB
-    extension). ``duration`` is unused (kernel-contract placeholder).
-    With α chosen binary-exact (default 1/4) every step is the same two
-    multiplies + add in any IEEE engine, so the recursive-CTE oracle
-    matches BIT-EXACTLY — no rounding needed."""
-    out = np.empty(len(vals), dtype=np.float64)
-    y = 0.0
+    extension). With α chosen binary-exact (default 1/4) every step is
+    the same two multiplies + add in any IEEE engine, so the
+    recursive-CTE oracle matches BIT-EXACTLY — no rounding needed."""
+    (y,) = state
     beta = 1.0 - alpha
-    for i, x in enumerate(vals):
-        y = x if i == 0 else alpha * x + beta * y
-        out[i] = y
-    return np.asarray(ts, dtype=np.int64), out
+    out = []
+    for x in vals.tolist():
+        y = x if y is None else alpha * x + beta * y
+        out.append(y)
+    return (y,), t, np.array(out, dtype=np.float64)
 
 
-def holt_kernel(ts, vals, duration, alpha: float = 0.25, beta: float = 0.5):
+def _holt_scan(state, t, vals, interval, alpha: float = 0.25,
+               beta: float = 0.5):
     """Holt linear (double exponential) smoothing per series — the
     level+trend forecaster one step up from EWMA (Holt 1957, public):
 
@@ -343,24 +395,23 @@ def holt_kernel(ts, vals, duration, alpha: float = 0.25, beta: float = 0.5):
     anomaly alerts compare against). Not in the reference; north-star
     TSDB extension. With α=1/4, β=1/2 binary-exact every step is the
     same IEEE multiplies + adds in any engine, so the recursive-CTE
-    oracle matches BIT-EXACTLY (the ewma_kernel precedent).
-    ``duration`` is unused (kernel-contract placeholder)."""
-    out = np.empty(len(vals), dtype=np.float64)
-    l = b = 0.0
-    for i, x in enumerate(vals):
-        if i == 0:
+    oracle matches BIT-EXACTLY."""
+    l, b = state
+    out = []
+    for x in vals.tolist():
+        if l is None:
             l, b = x, 0.0
         else:
             lp = l
             l = alpha * x + (1.0 - alpha) * (l + b)
             b = beta * (l - lp) + (1.0 - beta) * b
-        out[i] = l + b
-    return np.asarray(ts, dtype=np.int64), out
+        out.append(l + b)
+    return (l, b), t, np.array(out, dtype=np.float64)
 
 
-def holt_winters_kernel(ts, vals, duration, alpha: float = 0.25,
-                        beta: float = 0.5, gamma: float = 0.25,
-                        period: int = 24):
+def _holt_winters_scan(state, t, vals, interval, alpha: float = 0.25,
+                       beta: float = 0.5, gamma: float = 0.25,
+                       period: int = 24):
     """Holt-Winters ADDITIVE seasonal smoothing per series — the
     seasonal rung above Holt (Winters 1960, public): level + trend +
     a ``period``-slot seasonal component updated cyclically,
@@ -377,15 +428,14 @@ def holt_winters_kernel(ts, vals, duration, alpha: float = 0.25,
     warm-up) keeps every step pure IEEE multiply/add so, with
     binary-exact α=1/4, β=1/2, γ=1/4, the recursive-CTE oracle —
     which carries the seasonal slots as a LIST column — matches
-    BIT-EXACTLY (the ewma/holt precedent, one more rung up).
-    Not in the reference; north-star TSDB extension. ``duration``
-    unused (kernel-contract placeholder)."""
-    out = np.empty(len(vals), dtype=np.float64)
-    sl = [0.0] * period
-    l = b = 0.0
-    for i, x in enumerate(vals):
-        ph = i % period
-        if i == 0:
+    BIT-EXACTLY. State carries the sample count i. Not in the
+    reference; north-star TSDB extension."""
+    n, l, b, sl = state
+    sl = list(sl)
+    out = []
+    for x in vals.tolist():
+        ph = n % period
+        if n == 0:
             l, b = x, 0.0
         else:
             sp = sl[ph]
@@ -393,11 +443,12 @@ def holt_winters_kernel(ts, vals, duration, alpha: float = 0.25,
             l = alpha * (x - sp) + (1.0 - alpha) * (l + b)
             b = beta * (l - lp) + (1.0 - beta) * b
             sl[ph] = gamma * (x - l) + (1.0 - gamma) * sp
-        out[i] = l + b + sl[(i + 1) % period]
-    return np.asarray(ts, dtype=np.int64), out
+        n += 1
+        out.append(l + b + sl[n % period])
+    return (n, l, b, sl), t, np.array(out, dtype=np.float64)
 
 
-def cusum_kernel(ts, vals, duration, slack: float = 0.0):
+def _cusum_scan(state, t, vals, interval, slack: float = 0.0):
     """One-sided (positive) CUSUM change detector per series (Page
     1954, public) — the sequential drift alarm one rung up from
     thresholding a z-score:
@@ -409,25 +460,81 @@ def cusum_kernel(ts, vals, duration, slack: float = 0.0):
     allowance k. The statistic accumulates only sustained upward
     drift; a single spike decays the next step. All ops are one IEEE
     subtract/add/max per step, so with a binary-exact slack the
-    recursive-CTE oracle matches BIT-EXACTLY (the ewma precedent).
-    The ``+ 0.0`` on emit normalizes a signed zero so engines cannot
-    disagree on -0.0 vs 0.0. Not in the reference; north-star TSDB
-    extension. ``duration`` unused (kernel-contract placeholder)."""
-    out = np.empty(len(vals), dtype=np.float64)
-    target = float(vals[0]) + slack
-    c = 0.0
-    for i, x in enumerate(vals):
-        c = max(0.0, c + (float(x) - target))
-        out[i] = c + 0.0
-    return np.asarray(ts, dtype=np.int64), out
+    recursive-CTE oracle matches BIT-EXACTLY. The clamp maps -0.0 (and
+    NaN) to 0.0, so engines cannot disagree on a signed zero. Not in
+    the reference; north-star TSDB extension."""
+    ref, c = state
+    out = []
+    for x in vals.tolist():
+        if ref is None:
+            ref = x + slack
+        c += x - ref
+        if not c > 0.0:
+            c = 0.0
+        out.append(c)
+    return (ref, c), t, np.array(out, dtype=np.float64)
 
 
-def min_anchored_kernel(ts, vals, duration):
-    return _minmax_anchored_kernel(ts, vals, duration, min)
+def _rate_scan(state, t, vals, interval, signed: bool = False):
+    """M1/M2 RATE, (v - pv) / (t - pt) per second, negatives dropped
+    unless ``signed`` (counter-reset suppression, server/store.cc:
+    301-318). ``t`` must be epoch-µs: seconds are ``µs / 1e6``, the
+    same IEEE division Spark's timestamp→double cast performs, so a
+    rate equals the batch SQL plan's (``mutate.rate``) bit-for-bit. An
+    equal-ts input replaces the carried predecessor (the last equal-ts
+    row is the batch lag's predecessor too) and emits nothing; an older
+    one is dropped, as the batch operator never pairs backwards."""
+    last_t, last_v = state
+    out_t, out_v = [], []
+    for ti, v in zip(t.tolist(), vals.tolist()):
+        if last_t is not None and ti > last_t:
+            r = (v - last_v) / (ti / 1e6 - last_t / 1e6)
+            if signed or r >= 0:
+                out_t.append(ti)
+                out_v.append(r)
+        if last_t is None or ti >= last_t:
+            last_t, last_v = ti, v
+    return (last_t, last_v), *_arrays(out_t, out_v)
 
 
-def max_anchored_kernel(ts, vals, duration):
-    return _minmax_anchored_kernel(ts, vals, duration, max)
+def _fresh(*state):
+    return lambda **_params: state
+
+
+RECURRENCES: dict[str, Recurrence] = {
+    "ewma": Recurrence("y double", _fresh(None), _ewma_scan),
+    "holt": Recurrence("l double, b double", _fresh(None, 0.0), _holt_scan),
+    "holt_winters": Recurrence(
+        "n long, l double, b double, sl array<double>",
+        lambda period=24, **_params: (0, 0.0, 0.0, [0.0] * period),
+        _holt_winters_scan,
+    ),
+    "cusum": Recurrence("ref double, c double", _fresh(None, 0.0), _cusum_scan),
+    "min_anchored": Recurrence(
+        "anchor_us long, acc double", _fresh(None, 0.0), _min_anchored_scan
+    ),
+    "max_anchored": Recurrence(
+        "anchor_us long, acc double", _fresh(None, 0.0), _max_anchored_scan
+    ),
+    "interpolate": Recurrence(
+        "prev_us long, prev_v double, pending_us long",
+        _fresh(None, 0.0, 0), _interpolate_scan,
+    ),
+    "uniform_average": Recurrence(
+        "next_us long, prev_us long, prev_v double",
+        _fresh(None, None, 0.0), _uniform_scan,
+    ),
+    "rate": Recurrence("last_us long, last_v double", _fresh(None, None), _rate_scan),
+}
+
+uniform_series_kernel = _batch_kernel(RECURRENCES["uniform_average"])
+interpolate_kernel = _batch_kernel(RECURRENCES["interpolate"])
+min_anchored_kernel = _batch_kernel(RECURRENCES["min_anchored"])
+max_anchored_kernel = _batch_kernel(RECURRENCES["max_anchored"])
+ewma_kernel = _batch_kernel(RECURRENCES["ewma"])
+holt_kernel = _batch_kernel(RECURRENCES["holt"])
+holt_winters_kernel = _batch_kernel(RECURRENCES["holt_winters"])
+cusum_kernel = _batch_kernel(RECURRENCES["cusum"])
 
 
 # ---------------------------------------------------------------------------
@@ -436,6 +543,8 @@ def max_anchored_kernel(ts, vals, duration):
 
 _OUT_SCHEMA = "series_key string, ts timestamp, dval double"
 
+# rate's batch path is the SQL lag plan (mutate.rate); its scan serves
+# only the stream
 _KERNELS = {
     "ewma": ewma_kernel,
     "holt": holt_kernel,
@@ -492,10 +601,10 @@ def apply_kernel(points: DataFrame, kind: str, interval,
             size = int(
                 points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            if 0 < size < (1 << 50):
-                n_buckets = max(n_buckets, -(-size // (128 << 20)))
-        except Exception:
-            pass
+        except Py4JJavaError:  # no estimate: keep the core-count floor
+            size = 0
+        if 0 < size < (1 << 50):
+            n_buckets = max(n_buckets, -(-size // (128 << 20)))
     pts = pts.withColumn(
         "_b", F.pmod(F.xxhash64(SERIES_KEY_COL), F.lit(n_buckets))
     )
@@ -510,8 +619,8 @@ def apply_kernel(points: DataFrame, kind: str, interval,
         # one batch-wide sort; groupby preserves intra-group row order,
         # so each group arrives ts-sorted (vs one small sort per series).
         # dval is a tie-break so equal-ts points walk in the same order
-        # as the streaming *_state twins and the recursive-CTE oracles
-        # (same pin aggregate_anchored carries).
+        # as the streaming driver (streaming.recurrence) and the
+        # recursive-CTE oracles (same pin aggregate_anchored carries).
         pdf = pdf.sort_values(["series_key", "_t", "dval"])
         for sk, g in pdf.groupby("series_key", sort=False):
             out_t, out_v = kernel(

@@ -57,15 +57,19 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
     FIRST wrapped API call (``pyspark.errors.utils._enable_debugging_cache``),
     so a session that ran any DataFrame op before ``prepare()`` (the
     verify driver's) would keep paying the per-call overhead even after
-    the conf is set. The conf is set for transparency and the cache is
-    pinned False to cover the already-populated case."""
+    the conf is set. The cache is pinned False to cover the
+    already-populated case; the conf is set for transparency where the
+    session still allows it (it is static in pyspark 4.1, so a session
+    built without it keeps its value)."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors import utils as _errutils
+
+    _errutils._enable_debugging_cache = False
     try:
         spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
-        from pyspark.errors import utils as _errutils
-
-        _errutils._enable_debugging_cache = False
-    except Exception:
-        pass
+    except AnalysisException as e:
+        if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+            raise
 
 
 def prepare(spark: SparkSession) -> SparkSession:

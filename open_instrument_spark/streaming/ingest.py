@@ -180,7 +180,7 @@ def windowed_rate_sum(points_stream: DataFrame, interval: str = "5 minutes",
     SUM with a watermark for state cleanup. (Per-stream mutations that
     need total order — rate/delta — are batch/compaction-time ops for
     late data; the in-order streaming rate is
-    ``streaming.rate_state.rate_stream``, applyInPandasWithState keyed
+    ``streaming.recurrence.rate_stream``, applyInPandasWithState keyed
     on the series.)
     """
     return (

@@ -547,7 +547,7 @@ def test_streaming_rate_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import mutate
-    from open_instrument_spark.streaming.rate_state import rate_stream
+    from open_instrument_spark.streaming.recurrence import rate_stream
 
     src = str(tmp_path / "rate_src")
     dest = str(tmp_path / "rate_out")
@@ -637,7 +637,7 @@ def test_streaming_rate_duplicate_ts_matches_batch_convention(spark, tmp_path):
     predecessor, and the equal-ts pair itself emits nothing."""
     import datetime as dt
 
-    from open_instrument_spark.streaming.rate_state import rate_stream
+    from open_instrument_spark.streaming.recurrence import rate_stream
 
     src = str(tmp_path / "dup_src")
     dest = str(tmp_path / "dup_out")
@@ -667,7 +667,7 @@ def test_streaming_rate_skips_non_numeric_samples(spark, tmp_path):
     batch operator (which rates numeric samples only) would."""
     import datetime as dt
 
-    from open_instrument_spark.streaming.rate_state import rate_stream
+    from open_instrument_spark.streaming.recurrence import rate_stream
 
     src = str(tmp_path / "null_src")
     dest = str(tmp_path / "null_out")
@@ -905,7 +905,7 @@ def test_streaming_interpolate_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.interpolate_state import interpolate_stream
+    from open_instrument_spark.streaming.recurrence import interpolate_stream
 
     schema = "series_key string, ts timestamp, dval double"
 
@@ -973,7 +973,7 @@ def test_streaming_uniform_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.uniform_state import uniform_stream
+    from open_instrument_spark.streaming.recurrence import uniform_stream
 
     schema = "series_key string, ts timestamp, dval double"
 
@@ -1078,7 +1078,7 @@ def test_streaming_minmax_anchored_matches_batch_across_batches(spark, tmp_path)
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.minmax_state import (
+    from open_instrument_spark.streaming.recurrence import (
         max_anchored_stream,
         min_anchored_stream,
     )
@@ -1240,7 +1240,7 @@ def test_streaming_ewma_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.ewma_state import ewma_stream
+    from open_instrument_spark.streaming.recurrence import ewma_stream
 
     schema = "series_key string, ts timestamp, dval double"
 
@@ -1392,7 +1392,7 @@ def test_streaming_holt_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.holt_state import holt_stream
+    from open_instrument_spark.streaming.recurrence import holt_stream
 
     schema = "series_key string, ts timestamp, dval double"
 
@@ -1694,7 +1694,7 @@ def test_streaming_holt_winters_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.holt_winters_state import (
+    from open_instrument_spark.streaming.recurrence import (
         holt_winters_stream,
     )
 
@@ -1764,7 +1764,7 @@ def test_streaming_cusum_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators import resample
-    from open_instrument_spark.streaming.cusum_state import cusum_stream
+    from open_instrument_spark.streaming.recurrence import cusum_stream
 
     schema = "series_key string, ts timestamp, dval double"
 

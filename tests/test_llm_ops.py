@@ -744,6 +744,18 @@ def test_connected_components_random_graphs_match_union_find(spark):
         assert got_dist == want, (trial, sorted(pairs)[:10])
 
 
+def test_connected_components_null_endpoint_takes_distributed_path(spark):
+    """A null endpoint cannot be ordered against numeric ids, so it must
+    not reach the driver union-find. The distributed fixpoint's joins
+    define how a null id clusters: it takes its neighbour's label (a
+    null src never joins, so it links nothing)."""
+    df = spark.createDataFrame([(1, 2), (2, None), (5, 6)],
+                               "a_id long, b_id long")
+    got = {(r["doc_id"], r["cluster_id"])
+           for r in dedup.connected_components(df).collect()}
+    assert got == {(1, 1), (2, 1), (None, 1), (5, 5), (6, 5)}
+
+
 def test_video_frames_pixel_fidelity(spark, docs):
     """MJPEG frame decode: every frame's per-channel means must sit
     within JPEG rounding (±2/LSB at quality 100) of the fixture

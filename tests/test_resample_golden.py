@@ -366,3 +366,51 @@ def test_uniform_sql_equals_kernel_randomized(spark, data):
         .select("series_key", "ts", "dval").collect()
     )
     assert got == sorted(expect)
+
+
+# ---------------------------------------------------------------------------
+# resumable-scan contract: chunk fold ≡ one-shot batch kernel (no Spark)
+# ---------------------------------------------------------------------------
+
+_SCAN_CASES = [
+    ("ewma", {}), ("holt", {}), ("holt_winters", {"period": 3}),
+    ("cusum", {"slack": 0.5}), ("min_anchored", {}), ("max_anchored", {}),
+    ("interpolate", {}), ("interpolate", {"max_gap": 2}),
+    ("uniform_average", {}), ("uniform_average", {"max_gap": 2}),
+    ("rate", {}), ("rate", {"signed": True}),
+]
+
+# (ts, 4·value) pairs from a narrow ts range, so ties are common; sorted
+# by (ts, value) as both drivers walk them. Values k/4 are binary-exact.
+_TIED_SERIES = st.lists(
+    st.tuples(st.integers(0, 60), st.integers(-64, 64)), min_size=1, max_size=40
+).map(sorted)
+
+
+def test_scan_cases_cover_every_recurrence():
+    assert {kind for kind, _ in _SCAN_CASES} == set(resample.RECURRENCES)
+
+
+@pytest.mark.parametrize("kind,params", _SCAN_CASES)
+@settings(max_examples=100, deadline=None)
+@given(pairs=_TIED_SERIES, data=st.data())
+def test_scan_chunk_fold_equals_one_shot(kind, params, pairs, data):
+    """The rule the streaming driver relies on: folding a series' chunks
+    through a recurrence's scan with the carried state equals the
+    one-shot batch kernel bit for bit, wherever the chunks are cut
+    (empty chunks and chunks splitting a run of tied ts included)."""
+    rec = resample.RECURRENCES[kind]
+    t = np.array([p[0] for p in pairs], dtype=np.int64)
+    v = np.array([p[1] / 4 for p in pairs], dtype=np.float64)
+    interval = 7
+    cuts = data.draw(st.lists(st.integers(0, len(t)), max_size=6))
+    bounds = [0, *sorted(cuts), len(t)]
+    state, got_t, got_v = rec.init(**params), [], []
+    for a, b in zip(bounds, bounds[1:]):
+        state, out_t, out_v = rec.scan(state, t[a:b], v[a:b], interval, **params)
+        got_t.append(out_t)
+        got_v.append(out_v)
+    kernel = resample._KERNELS.get(kind) or resample._batch_kernel(rec)
+    want_t, want_v = kernel(t, v, interval, **params)
+    assert np.concatenate(got_t).tolist() == want_t.tolist()
+    assert np.concatenate(got_v).tobytes() == want_v.tobytes()
