@@ -144,13 +144,8 @@ def rebuild_edge_cells(spark, path: str, cells: list[int], k: int,
         .select("vec_id", "v", "cell")
     )
     new_edges = _knn_edges(vec, k)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        new_edges.write.partitionBy("cell").mode("overwrite").parquet(eroot)
-    finally:
-        spark.conf.set(mode_key, prev)
+    new_edges.write.option("partitionOverwriteMode", "dynamic").partitionBy(
+        "cell").mode("overwrite").parquet(eroot)
     # one bounded action over the touched cells' vectors (no join):
     # cells with ≥2 members always emit edges; the rest went empty.
     with_members = {
@@ -215,13 +210,8 @@ def rebuild_edge_pcells(spark, path: str, pcells: list[int], k: int,
     )
     new_edges = _knn_edges_multi(cand, k).where(
         F.col("pcell").isin(pcells))
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        new_edges.write.partitionBy("pcell").mode("overwrite").parquet(eroot)
-    finally:
-        spark.conf.set(mode_key, prev)
+    new_edges.write.option("partitionOverwriteMode", "dynamic").partitionBy(
+        "pcell").mode("overwrite").parquet(eroot)
     # a primary cell keeps edges iff any of its srcs shares a candidate
     # cell with ≥1 other vector — decidable on the thin projection
     # (column pruning skips the v arrays; no cosine work repeated).
@@ -322,17 +312,21 @@ def absorb_into_knn_graph_store(path: str, new_vectors: DataFrame,
     epoch_dir = f"{path}/vectors/epoch={int(epoch)}"
     if n_probe > 1:
         asg = _cell_assign_multi(new_vectors, C, id_col, vec_col,
-                                 n_probe, assign, with_primary=True)
-        asg.select("vec_id", "v", "prank", "pcell", "cell").write.\
-            partitionBy("cell").mode("overwrite").parquet(epoch_dir)
-        cells = _landed_cells(epoch_dir)
+                                 n_probe, assign, with_primary=True
+                                 ).select("vec_id", "v", "prank", "pcell", "cell")
+    else:
+        asg = _cell_assign(new_vectors, C, id_col, vec_col, assign
+                           ).select("vec_id", "v", "cell")
+    # static overwrite replaces the whole epoch dir, so _landed_cells
+    # lists exactly this batch's cells even on a replay (a dynamic one
+    # would keep the cell dirs of an earlier attempt)
+    asg.write.option("partitionOverwriteMode", "static").partitionBy(
+        "cell").mode("overwrite").parquet(epoch_dir)
+    cells = _landed_cells(epoch_dir)
+    if n_probe > 1:
         pcells = affected_pcells(spark, f"{path}/vectors", cells)
         edge_cells = rebuild_edge_pcells(spark, path, pcells, k)
     else:
-        asg = _cell_assign(new_vectors, C, id_col, vec_col, assign)
-        asg.select("vec_id", "v", "cell").write.partitionBy("cell").mode(
-            "overwrite").parquet(epoch_dir)
-        cells = _landed_cells(epoch_dir)
         edge_cells = rebuild_edge_cells(spark, path, cells, k)
     _write_graph_meta(spark, path, dim, n_cells, k,
                       max(nxt, int(epoch) + 1), n_probe)

@@ -148,17 +148,18 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     ``interval`` seconds, default 600 — lib/openinstrument.proto:211,
     runner server/store_file_manager.cc:87-191): read the partitioned
     store, apply the policy, rewrite ONLY the date partitions whose
-    contents changed (dynamic partition overwrite — untouched recent
-    partitions are never rewritten, so the job's write cost tracks the
-    aged data, not the store size)."""
-    import os
-    import shutil
-
-    from open_instrument_spark.sources.ingest import write_points
+    contents changed (untouched recent partitions are never rewritten,
+    so the job's write cost tracks the aged data, not the store size).
+    The rewrite is ``sources.ingest.replace_dates``."""
+    from open_instrument_spark.sources.ingest import (
+        POINTS_PARTITION_COLS,
+        replace_dates,
+    )
 
     # drop() ignores absent columns, so both the plain dt/bucket layout
     # and the streaming sink's epoch=N/dt/bucket layout normalize here.
-    pts = spark.read.parquet(store_path).drop("dt", "bucket", "epoch")
+    store = spark.read.parquet(store_path)
+    pts = store.drop(*POINTS_PARTITION_COLS)
     tagged = pts.withColumn("_policy", policy_index(pts, policy, now))
     plain_idx = [
         i for i, item in enumerate(policy) if item.keep and not item.mutations
@@ -205,9 +206,7 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     # plus the full downsampled output of every mutated KEEP band (its
     # source rows are non-plain, hence inside touched partitions; its
     # output may also anchor into other dates — appended there, which is
-    # additive and safe). Staged to DISK before deleting source
-    # partitions — a .persist() would not survive cache eviction, and a
-    # lazy plan re-reading deleted files would corrupt the rewrite.
+    # additive and safe).
     cols = pts.columns
     outs = []
     if plain_idx:
@@ -218,43 +217,7 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
         if item.keep and item.mutations:
             band = tagged.filter(F.col("_policy") == i).drop("_policy")
             outs.append(_mutate.pipeline(band, list(item.mutations)).select(*cols))
-    staging = store_path.rstrip("/") + "_retention_staging"
     replacement = outs[0] if outs else pts.limit(0)
     for o in outs[1:]:
         replacement = replacement.unionByName(o)
-    replacement.write.mode("overwrite").parquet(staging)
-
-    # Delete the touched date dirs wholesale (covers buckets that became
-    # empty), at either layout depth — store/dt=D or the streaming
-    # sink's store/epoch=N/dt=D — then append the staged rows. Local-FS
-    # removal here; on a cluster this is the same two steps via the
-    # Hadoop FileSystem API or a table format's replaceWhere.
-    import glob as _glob
-
-    for d in del_dates:
-        for part in (
-            [os.path.join(store_path, f"dt={d}")]
-            + _glob.glob(os.path.join(store_path, "epoch=*", f"dt={d}"))
-        ):
-            if os.path.exists(part):
-                shutil.rmtree(part)
-    # Replacements must land at the SAME partition depth as the store:
-    # appending dt=/bucket= at the root of an epoch=N store mixes
-    # partition schemas and makes every later read fail with
-    # CONFLICTING_PARTITION_COLUMN_NAMES. On an epoch store, stage the
-    # rewrite into a retention-owned epoch dir. Epoch values are the
-    # streaming sink's checkpointed batch ids (always >= 0), so NEGATIVE
-    # epochs are a collision-free namespace: a resumed stream can never
-    # overwrite a retention rewrite, and each run gets a fresh id.
-    epoch_dirs = _glob.glob(os.path.join(store_path, "epoch=*"))
-    dest = store_path
-    if epoch_dirs:
-        epochs = []
-        for p in epoch_dirs:
-            try:
-                epochs.append(int(os.path.basename(p).split("=", 1)[1]))
-            except ValueError:
-                pass
-        dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(spark.read.parquet(staging), dest, n_buckets=n_buckets, mode="append")
-    shutil.rmtree(staging, ignore_errors=True)
+    replace_dates(store, store_path, del_dates, replacement, n_buckets=n_buckets)

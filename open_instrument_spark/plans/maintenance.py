@@ -11,11 +11,25 @@ horizon) and logs a summary, but never rewrites a file
 (store_file_manager.cc:87-177). ``maintenance_tick(dry_run=True)`` is
 that pass: it returns the report rows and leaves the store untouched.
 ``dry_run=False`` is the pass the log-only runner stops short of:
-apply the policy in place (``retention.run_retention_job`` — dynamic
-partition overwrite, write cost tracks aged data, not store size),
-then compact any date partition that has accumulated more parquet
-files than its bucket count (appends leave >1 file per bucket; the
-canonical compacted state is one).
+apply the policy in place (``retention.run_retention_job`` — write
+cost tracks aged data, not store size), then compact any date
+partition that has accumulated more parquet files than its bucket
+count (appends leave >1 file per bucket; the canonical compacted state
+is one).
+
+Every rewrite goes through one of two crash-safe protocols:
+
+- the points store's **date replacement**
+  (``sources.ingest.replace_dates``): stage the new rows, delete the
+  dates' directories, append at a fresh negative epoch;
+- the index stores' **sibling swap**: :func:`_recover_old` promotes a
+  ``.old`` left by a crash, the new store is written to a fresh
+  sibling, and :func:`_swap_in` promotes it. :func:`_compact_store`
+  and :func:`_forget_store` are the two skeletons every index
+  compaction and forget runs through.
+
+Both keep the same invariants: staging before delete, epoch ids never
+recycle, and a single writer (the loop that owns the store).
 
 Idempotence contract: a second tick at the same ``now`` leaves the
 point set identical. Holds for the sample-fold mutations a retention
@@ -31,6 +45,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -41,16 +56,11 @@ from open_instrument_spark.operators.retention import (
     retention_report,
     run_retention_job,
 )
-
-
-def _dt_dirs(store_path: str) -> dict[str, list[str]]:
-    """date string → its partition dirs, at either layout depth
-    (store/dt=D and the streaming sink's store/epoch=N/dt=D)."""
-    out: dict[str, list[str]] = {}
-    for pat in ("dt=*", os.path.join("epoch=*", "dt=*")):
-        for d in glob.glob(os.path.join(store_path, pat)):
-            out.setdefault(os.path.basename(d).split("=", 1)[1], []).append(d)
-    return out
+from open_instrument_spark.sources.ingest import (
+    POINTS_PARTITION_COLS,
+    _dt_dirs,
+    replace_dates,
+)
 
 
 def compact_dates(spark, store_path: str, n_buckets: int = 16,
@@ -58,80 +68,117 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
     """W2 in place: rewrite every date partition whose parquet file
     count exceeds ``max_files_per_date`` (default: the bucket count —
     i.e. some bucket holds more than one file) back to one sorted file
-    per bucket. Same staging discipline as the retention rewrite
-    (stage to disk BEFORE deleting sources; negative-epoch dir on an
-    epoch-layout store — see retention.run_retention_job). Local-FS
-    dir removal; on a cluster the same two steps go through the Hadoop
-    FileSystem API or a table format's replaceWhere. Returns the
+    per bucket, through ``sources.ingest.replace_dates``. Returns the
     compacted dates."""
-    from open_instrument_spark.sources.ingest import write_points
-
     limit = n_buckets if max_files_per_date is None else max_files_per_date
-    todo = [
-        (date, dirs)
-        for date, dirs in _dt_dirs(store_path).items()
+    dates = sorted(
+        date for date, dirs in _dt_dirs(store_path).items()
         if sum(
             len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
             for d in dirs
         ) > limit
-    ]
-    if not todo:
-        return []
-    dates = sorted(date for date, _ in todo)
-    pts = (
-        spark.read.parquet(store_path)
-        .filter(F.col("dt").cast("string").isin(dates))
-        .drop("dt", "bucket", "name_bucket", "epoch")
     )
-    staging = store_path.rstrip("/") + "_compact_staging"
-    pts.write.mode("overwrite").parquet(staging)
-    for _, dirs in todo:
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
-    epoch_dirs = glob.glob(os.path.join(store_path, "epoch=*"))
-    dest = store_path
-    if epoch_dirs:
-        epochs = []
-        for p in epoch_dirs:
-            try:
-                epochs.append(int(os.path.basename(p).split("=", 1)[1]))
-            except ValueError:
-                pass
-        dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(spark.read.parquet(staging), dest, n_buckets=n_buckets,
-                 mode="append")
-    shutil.rmtree(staging, ignore_errors=True)
+    if not dates:
+        return []
+    store = spark.read.parquet(store_path)
+    pts = (
+        store.filter(F.col("dt").cast("string").isin(dates))
+        .drop(*POINTS_PARTITION_COLS)
+    )
+    replace_dates(store, store_path, dates, pts, n_buckets=n_buckets)
     return dates
+
+
+def _recover_old(path: str) -> bool:
+    """Crash recovery of the sibling swap: a crash between
+    :func:`_swap_in`'s two moves leaves the complete pre-swap store at
+    ``.old`` and nothing at the live path — promote it back. Returns
+    whether it did."""
+    old = path.rstrip("/") + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        shutil.move(old, path)
+        return True
+    return False
+
+
+def _swap_in(path: str, sib: str) -> None:
+    """Promote a fully written sibling store: the live store moves to
+    ``.old`` first, the sibling moves in, THEN the old bytes go. A crash
+    at any point leaves a complete store at the live or the ``.old``
+    path, which :func:`_recover_old` repairs on the next tick. Local-FS
+    moves; on a cluster the same steps are object-store renames."""
+    old = path.rstrip("/") + ".old"
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.move(path, old)
+    shutil.move(sib, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _present(path: str, tables) -> list[str]:
+    """The subset of ``tables`` the store at ``path`` has."""
+    return [t for t in tables if os.path.isdir(os.path.join(path, t))]
+
+
+def _copy_tables(spark, path: str, sib: str, tables) -> None:
+    """Carry the store's ``tables`` that exist over to the sibling
+    unchanged."""
+    for t in _present(path, tables):
+        spark.read.parquet(f"{path}/{t}").write.mode(
+            "overwrite").parquet(f"{sib}/{t}")
+
+
+def _epoch_count(path: str, table: str) -> int:
+    return len(glob.glob(os.path.join(path, table, "epoch=*")))
+
+
+def _compact_store(path: str, table: str, max_epochs: int,
+                   write: Callable[[str], None]) -> dict:
+    """The compaction skeleton of every epoch-layout index store: when
+    ``table`` holds more than ``max_epochs`` epoch partitions,
+    ``write(sib)`` fills a fresh ``.compact`` sibling with the folded
+    store and :func:`_swap_in` promotes it. Returns
+    {epochs_before, compacted, swapped, recovered}."""
+    recovered = _recover_old(path)
+    n_epochs = _epoch_count(path, table)
+    res = {"epochs_before": n_epochs, "compacted": False,
+           "swapped": False, "recovered": recovered}
+    if n_epochs <= max_epochs:
+        return res
+    sib = path.rstrip("/") + ".compact"
+    shutil.rmtree(sib, ignore_errors=True)
+    write(sib)
+    _swap_in(path, sib)
+    res["compacted"] = True
+    res["swapped"] = True
+    return res
+
+
+def _fold_to_base(spark, path: str, sib: str, table: str) -> None:
+    """Write a cell-partitioned epoch table to the sibling with every
+    epoch folded into ``epoch=-1``, the base-build epoch. Every live
+    read unions epochs (and probes read below a ``before_epoch`` >= 0),
+    so the fold is invisible to them. The repartition ON the partition
+    column matters: without it each of the many tiny input splits
+    writes its own file into every cell dir, so the fold would collapse
+    the epoch count but keep the small files (which also gut a codes
+    table's dictionary encoding). One corpus-sized shuffle, like the
+    rewrite itself; output is ~one file per cell."""
+    spark.read.parquet(f"{path}/{table}").drop("epoch").repartition(
+        "cell").write.partitionBy("cell").mode("overwrite").parquet(
+        f"{sib}/{table}/epoch=-1")
 
 
 def rebalance_ann_index(spark, path: str, skew_threshold: float = 4.0,
                         train_n: int = 2048, seed: int = 43) -> dict:
-    """One index's maintenance step, swap included: check occupancy
-    skew, and when it exceeds the threshold rebuild via
-    ``similarity.rebalance_ivf_index`` (sibling layout) then promote
-    the rebuild into the live path with staging-before-delete — the
-    same discipline as compact_dates: the old index moves aside first,
-    the sibling moves in, THEN the old bytes go, so a crash at any
-    point leaves a complete index at either the live or the ``.old``
-    path. That invariant is self-healing: the tick starts by promoting
-    a leftover ``.old`` back to a missing live path (the only state a
-    mid-swap crash can leave), so the next tick always finds a
-    readable index. Local-FS moves; on a cluster the same three steps
-    are object store renames. Returns the rebalance_ivf_index dict
-    plus ``swapped`` (and ``recovered`` when crash repair ran)."""
+    """One ANN index's maintenance step: check occupancy skew, and when
+    it exceeds the threshold rebuild via
+    ``similarity.rebalance_ivf_index`` (or ``pq.rebalance_ivfpq_index``
+    for an IVFPQ index, which carries a ``codes`` table) into a sibling,
+    then promote it with the sibling swap. Returns the rebalance dict
+    plus ``swapped`` and ``recovered``."""
     from open_instrument_spark.operators.similarity import rebalance_ivf_index
 
-    old = path.rstrip("/") + ".old"
-    recovered = False
-    if not os.path.exists(path) and os.path.exists(old):
-        # crash between the two moves of a previous swap: the complete
-        # pre-swap index sits at .old and nothing at live — promote it
-        shutil.move(old, path)
-        recovered = True
-    # layout dispatch: an IVFPQ index carries a codes table; its
-    # rebalance re-partitions rows under re-trained centroids (code
-    # bytes are centroid-independent) — same skew trigger, same
-    # sibling-then-swap discipline (operators/pq.py).
+    recovered = _recover_old(path)
     if os.path.isdir(os.path.join(path, "codes")):
         from open_instrument_spark.operators.pq import rebalance_ivfpq_index
 
@@ -144,213 +191,222 @@ def rebalance_ann_index(spark, path: str, skew_threshold: float = 4.0,
     res["recovered"] = recovered
     res["swapped"] = False
     if res["rebalanced"]:
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(path, old)
-        shutil.move(res["out_path"], path)
-        shutil.rmtree(old, ignore_errors=True)
+        _swap_in(path, res["out_path"])
         res["out_path"] = path
         res["swapped"] = True
     return res
 
 
 def compact_minhash_index(spark, path: str, max_epochs: int = 8) -> dict:
-    """Fold a dedup-at-ingest MinHash store's accumulated epochs back
-    into one base epoch (r12 scale hardening). The streaming loop
-    (streaming/minhash_ingest.py) absorbs one ``epoch=N`` partition
-    per micro-batch, and probes read ALL epochs — so epoch count is
-    pure file-listing + small-file overhead, the same pathology
-    :func:`compact_dates` exists for, growing without bound under
-    continuous ingest.
+    """Fold a dedup-at-ingest MinHash store's epochs back into one base
+    epoch. The streaming loop (streaming/minhash_ingest.py) absorbs one
+    ``epoch=N`` partition per micro-batch and probes read ALL epochs, so
+    the epoch count is pure file-listing and small-file overhead that
+    grows without bound under continuous ingest.
 
-    When the store holds more than ``max_epochs`` sigs epochs: read
-    sigs+bands wholesale (signature-sized — the rewrite is linear in
-    INDEX size, never touches corpus text), stage a sibling store
-    (``{path}.compact``: everything under ``epoch=-1`` plus the meta),
-    then promote with the same staging-before-delete swap + ``.old``
-    crash recovery as :func:`rebalance_ann_index`. Probe results are
-    invariant (the probe unions epochs; content is unchanged), pinned
-    by test. The meta's ``next_epoch`` is PRESERVED, not reset — epoch
-    ids never recycle, so a later absorb can't collide with a
-    pre-compaction batch id. Single-writer contract: run from the same
-    maintenance loop that owns the store, with no in-flight absorb
-    (build_minhash_index's one-writer-regime note)."""
+    Past ``max_epochs`` sigs epochs, sigs and bands are rewritten under
+    ``epoch=-1`` (signature-sized; corpus text is never touched). Probe
+    results are invariant (the probe unions epochs), pinned by test.
+    The meta's ``next_epoch`` is preserved, not reset, so a later absorb
+    can't collide with a pre-compaction batch id. Single writer: no
+    in-flight absorb."""
     from open_instrument_spark.operators.dedup import (
         _read_minhash_meta,
         _write_minhash_meta,
     )
 
-    old = path.rstrip("/") + ".old"
-    sib = path.rstrip("/") + ".compact"
-    recovered = False
-    if not os.path.exists(path) and os.path.exists(old):
-        shutil.move(old, path)
-        recovered = True
-    n_epochs = len(glob.glob(os.path.join(path, "sigs", "epoch=*")))
-    res = {"epochs_before": n_epochs, "compacted": False,
-           "swapped": False, "recovered": recovered}
-    if n_epochs <= max_epochs:
-        return res
-    num_perm, bands, nxt = _read_minhash_meta(spark, path)
-    shutil.rmtree(sib, ignore_errors=True)
-    spark.read.parquet(f"{path}/sigs").select("doc_id", "sig").write.mode(
-        "overwrite").parquet(f"{sib}/sigs/epoch=-1")
-    spark.read.parquet(f"{path}/bands").select(
-        "doc_id", "band", "bh").write.mode(
-        "overwrite").parquet(f"{sib}/bands/epoch=-1")
-    _write_minhash_meta(spark, sib, num_perm, bands, nxt)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(path, old)
-    shutil.move(sib, path)
-    shutil.rmtree(old, ignore_errors=True)
-    res["compacted"] = True
-    res["swapped"] = True
-    return res
+    def write(sib: str) -> None:
+        num_perm, bands, nxt = _read_minhash_meta(spark, path)
+        for t, cols in (("sigs", ("doc_id", "sig")),
+                        ("bands", ("doc_id", "band", "bh"))):
+            spark.read.parquet(f"{path}/{t}").select(*cols).write.mode(
+                "overwrite").parquet(f"{sib}/{t}/epoch=-1")
+        _write_minhash_meta(spark, sib, num_perm, bands, nxt)
+
+    return _compact_store(path, "sigs", max_epochs, write)
 
 
 def compact_text_index(spark, path: str, max_epochs: int = 8) -> dict:
-    """Fold an index-at-ingest BM25 inverted index's accumulated
-    epochs back into one (r12). The streaming loop
-    (streaming/text_index_ingest.py) lands one ``postings/epoch=N`` +
-    one ``meta/epoch=N`` row per micro-batch; searches union all
-    epochs, so unbounded epoch count is pure file-listing overhead —
-    the compact_minhash_index pathology on the lexical store.
+    """Fold an index-at-ingest BM25 inverted index's epochs back into
+    one. The streaming loop (streaming/text_index_ingest.py) lands one
+    ``postings/epoch=N`` and one ``meta/epoch=N`` row per micro-batch,
+    and searches union all epochs.
 
-    When the index holds more than ``max_epochs`` postings epochs:
-    read the postings wholesale (postings-sized — never re-tokenizes
-    corpus text), stage a sibling index with everything under ONE
-    epoch, then promote with the staging-before-delete swap + ``.old``
-    crash recovery shared with the other index stores. The folded
-    epoch id is the CURRENT MAX epoch (not −1): per-epoch meta rows
-    derive next_epoch from max(epoch)+1, so folding to the max
-    preserves it and epoch ids never recycle — a later append can't
-    collide with a pre-compaction batch id. Search results are
+    Past ``max_epochs`` postings epochs, the postings are rewritten
+    under ONE epoch (postings-sized; never re-tokenizes corpus text).
+    The folded epoch id is the current MAX epoch, not −1: per-epoch meta
+    rows derive next_epoch from max(epoch)+1, so folding to the max
+    preserves it and epoch ids never recycle. Search results are
     invariant (same postings multiset, same summed stats), pinned by
-    test. Single-writer contract: run from the maintenance loop that
-    owns the index, with no in-flight append."""
+    test. Single writer: no in-flight append."""
     from open_instrument_spark.operators.retrieval import (
         _read_text_meta,
         _write_text_meta,
     )
 
-    old = path.rstrip("/") + ".old"
-    sib = path.rstrip("/") + ".compact"
-    recovered = False
-    if not os.path.exists(path) and os.path.exists(old):
-        shutil.move(old, path)
-        recovered = True
-    epochs = glob.glob(os.path.join(path, "postings", "epoch=*"))
-    res = {"epochs_before": len(epochs), "compacted": False,
-           "swapped": False, "recovered": recovered}
-    if len(epochs) <= max_epochs:
-        return res
-    n_docs, sum_dl, n_buckets, next_epoch = _read_text_meta(spark, path)
-    fold_to = next_epoch - 1  # the current max epoch id
-    shutil.rmtree(sib, ignore_errors=True)
-    spark.read.parquet(f"{path}/postings").select(
-        "doc_id", "term", "tf", "dl", "bucket"
-    ).write.partitionBy("bucket").mode("overwrite").parquet(
-        f"{sib}/postings/epoch={fold_to}"
+    def write(sib: str) -> None:
+        n_docs, sum_dl, n_buckets, next_epoch = _read_text_meta(spark, path)
+        fold_to = next_epoch - 1
+        spark.read.parquet(f"{path}/postings").select(
+            "doc_id", "term", "tf", "dl", "bucket"
+        ).write.partitionBy("bucket").mode("overwrite").parquet(
+            f"{sib}/postings/epoch={fold_to}"
+        )
+        _write_text_meta(spark, sib, n_docs, sum_dl, n_buckets, epoch=fold_to)
+
+    return _compact_store(path, "postings", max_epochs, write)
+
+
+# The semantic dedup-at-ingest store's data tables: ``vectors`` (raw
+# (vec_id, v), always present — it is also the exact re-rank sidecar of
+# the quantized layout) and ``codes`` (SQ8 1-byte-per-dim encodings,
+# present when the store was built with layout="sq8").
+_SEMANTIC_DATA_DIRS = ("vectors", "codes")
+# sq_bounds carries the probe-margin bound (max decode error, min norm);
+# carrying it UNCHANGED through compaction and forget is sound — both
+# only remove or move rows, so the true bounds can only shrink and the
+# persisted ones stay conservative.
+_SEMANTIC_AUX_DIRS = ("centroids", "sq", "sq_bounds")
+
+
+def compact_semantic_index(spark, path: str, max_epochs: int = 8) -> dict:
+    """Fold a semantic dedup-at-ingest store's epochs back into the base
+    epoch. The streaming loop (streaming/semantic_ingest.py) absorbs one
+    ``vectors/epoch=N`` partition per micro-batch and probes read all
+    epochs below their ``before_epoch``.
+
+    Past ``max_epochs`` vector epochs, each data table (``vectors``,
+    plus ``codes`` on the SQ8 layout) is folded to ``epoch=-1``
+    (:func:`_fold_to_base`); the centroid, sq-stats and meta tables
+    carry over unchanged. Probe results are invariant, pinned by test.
+    The meta's ``next_epoch`` is preserved, so epoch ids never recycle.
+    Single writer: no in-flight absorb."""
+    from open_instrument_spark.operators.similarity import (
+        _read_semantic_meta,
+        _write_semantic_meta,
     )
-    _write_text_meta(spark, sib, n_docs, sum_dl, n_buckets, epoch=fold_to)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(path, old)
-    shutil.move(sib, path)
-    shutil.rmtree(old, ignore_errors=True)
-    res["compacted"] = True
-    res["swapped"] = True
-    return res
+
+    def write(sib: str) -> None:
+        dim, n_cells, nxt = _read_semantic_meta(spark, path)
+        for t in _present(path, _SEMANTIC_DATA_DIRS):
+            _fold_to_base(spark, path, sib, t)
+        _copy_tables(spark, path, sib, _SEMANTIC_AUX_DIRS)
+        _write_semantic_meta(spark, sib, dim, n_cells, nxt)
+
+    return _compact_store(path, "vectors", max_epochs, write)
 
 
-def _recover_old(path: str) -> bool:
-    """Shared ``.old`` crash-recovery preamble: a crash between the
-    staging swap's two moves leaves the pre-swap index at ``.old`` and
-    nothing at the live path — promote it back."""
-    old = path.rstrip("/") + ".old"
-    if not os.path.exists(path) and os.path.exists(old):
-        shutil.move(old, path)
-        return True
-    return False
+def compact_knn_graph_store(spark, path: str, max_epochs: int = 8) -> dict:
+    """Fold a kNN-graph store's VECTOR epochs back into the base epoch.
+    Absorbs land one ``vectors/epoch=N`` per batch and edge rebuilds
+    read all epochs of the touched cells.
 
+    Past ``max_epochs`` vector epochs, the vectors fold to ``epoch=-1``
+    (:func:`_fold_to_base`). The EDGE table is unchanged in content (a
+    pure function of the vector union, which folding preserves) but is
+    rewritten through a repartition on its partition column, so the
+    per-cell small files the incremental rewrites accumulate
+    consolidate to ~one file per cell. Centroids and meta carry over;
+    ``next_epoch`` is preserved, so epoch ids never recycle. The fold is
+    invariant, pinned by test. Single writer: no in-flight absorb."""
+    from open_instrument_spark.operators.graphstore import (
+        _read_graph_meta,
+        _write_graph_meta,
+    )
 
-def _swap_in(path: str, sib: str) -> None:
-    """Staging-before-delete promotion with ``.old`` recovery window —
-    the rebalance_ann_index idiom shared by every index rewrite."""
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(path, old)
-    shutil.move(sib, path)
-    shutil.rmtree(old, ignore_errors=True)
+    def write(sib: str) -> None:
+        meta = _read_graph_meta(spark, path)
+        _fold_to_base(spark, path, sib, "vectors")
+        edges = spark.read.parquet(f"{path}/edges")
+        epart = "pcell" if "pcell" in edges.columns else "cell"
+        edges.repartition(epart).write.partitionBy(epart).mode(
+            "overwrite").parquet(f"{sib}/edges")
+        _copy_tables(spark, path, sib, ("centroids",))
+        _write_graph_meta(spark, sib, *meta)
+
+    return _compact_store(path, "vectors", max_epochs, write)
 
 
 # An `id IN (...)` literal list keeps the forget plan free of any extra
 # frame for the takedown batches a tick normally sees; past this size
 # the In-expression's analysis/driver cost grows with the list, so the
-# rewrite switches to a broadcast id-frame join (semi to count, anti to
-# keep) — a large takedown batch costs one broadcast, not a giant
-# expression tree (r13, advisor).
+# rewrite switches to a broadcast id-frame join (semi to select, anti
+# to keep) — a large takedown batch costs one broadcast, not a giant
+# expression tree.
 FORGET_ISIN_MAX = 1000
 
 
 def _forget_split(df: DataFrame, col: str, ids: list[int]):
-    """(removed_count, keep_frame) for one store component. Two scans
-    of an INDEX-sized frame either way (count + staged rewrite — the
-    price of reporting what a forget did); the mechanism scales with
-    the id-list size instead of pinning it into the plan."""
+    """(hit, keep) frames of one store table: the rows whose ``col`` is
+    in ``ids`` and the rest. The mechanism scales with the id-list size
+    instead of pinning it into the plan."""
     if len(ids) <= FORGET_ISIN_MAX:
-        return (df.filter(F.col(col).isin(ids)).count(),
-                df.filter(~F.col(col).isin(ids)))
+        sel = F.col(col).isin(ids)
+        return df.filter(sel), df.filter(~sel)
     idf = local_df(
         df.sparkSession, [(int(i),) for i in ids], f"{col} long"
     )
     gone = F.broadcast(idf.withColumnRenamed(col, "_forget_id"))
     on = df[col] == gone["_forget_id"]
-    return (df.join(gone, on, "left_semi").count(),
-            df.join(gone, on, "left_anti"))
+    return df.join(gone, on, "left_semi"), df.join(gone, on, "left_anti")
+
+
+def _forget_store(spark, path: str, ids, col: str, tables,
+                  report: Callable[[dict], dict], write: Callable,
+                  optional=()) -> dict:
+    """The forget skeleton of every index store: split each of
+    ``tables`` (plus those of ``optional`` the store has) on ``col``,
+    and unless nothing matched (a replayed forget is a no-op) let
+    ``write(sib, keeps, hits)`` fill a fresh ``.forget`` sibling and
+    promote it with :func:`_swap_in`. Two scans of each INDEX-sized
+    table (count + staged rewrite — the price of reporting what a
+    forget did). ``report`` shapes the per-table removed counts into
+    the store's result dict; ``write`` may return extra result
+    fields."""
+    recovered = _recover_old(path)
+    ids = [int(i) for i in ids]
+    tables = [*tables, *_present(path, optional)]
+    hits, keeps = {}, {}
+    for t in tables:
+        hits[t], keeps[t] = _forget_split(
+            spark.read.parquet(f"{path}/{t}"), col, ids)
+    removed = {t: hits[t].count() for t in tables}
+    res = {**report(removed), "swapped": False, "recovered": recovered}
+    if not any(removed.values()):
+        return res
+    sib = path.rstrip("/") + ".forget"
+    shutil.rmtree(sib, ignore_errors=True)
+    res.update(write(sib, keeps, hits) or {})
+    _swap_in(path, sib)
+    res["swapped"] = True
+    return res
 
 
 def forget_from_minhash_index(spark, path: str, doc_ids) -> dict:
     """Deletion propagation (right-to-be-forgotten / takedown) for the
     dedup-at-ingest MinHash store: remove every signature and band row
     belonging to ``doc_ids`` so forgotten documents can never again
-    surface as prior-corpus matches in a probe. The epoch layout is
-    PRESERVED (each surviving row stays in its epoch partition) and the
-    meta's ``next_epoch`` is untouched — epoch ids never recycle, so
-    in-flight ingest batch ids can't collide with the rewrite.
-
-    Staged as a ``.forget`` sibling and promoted with the
-    staging-before-delete swap + ``.old`` crash recovery shared with
-    the compactors; a replayed forget of the same ids is a no-op
-    (second call removes 0 rows and skips the swap). The rewrite is
-    INDEX-sized (signatures, never corpus text) — batch forget sets
-    and run them from the maintenance tick, the way compaction
-    amortizes. Returns {removed_sigs, removed_bands, swapped,
+    surface as prior-corpus matches in a probe. Each surviving row stays
+    in its epoch partition and the meta's ``next_epoch`` is untouched —
+    epoch ids never recycle. The rewrite is INDEX-sized (signatures,
+    never corpus text); batch forget sets and run them from the
+    maintenance tick. Returns {removed_sigs, removed_bands, swapped,
     recovered}."""
     from open_instrument_spark.operators.dedup import (
         _read_minhash_meta,
         _write_minhash_meta,
     )
 
-    recovered = _recover_old(path)
-    ids = [int(i) for i in doc_ids]
-    rm_s, keep_s = _forget_split(
-        spark.read.parquet(f"{path}/sigs"), "doc_id", ids)
-    rm_b, keep_b = _forget_split(
-        spark.read.parquet(f"{path}/bands"), "doc_id", ids)
-    res = {"removed_sigs": rm_s, "removed_bands": rm_b,
-           "swapped": False, "recovered": recovered}
-    if rm_s == 0 and rm_b == 0:
-        return res
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
-    keep_s.write.partitionBy(
-        "epoch").mode("overwrite").parquet(f"{sib}/sigs")
-    keep_b.write.partitionBy(
-        "epoch").mode("overwrite").parquet(f"{sib}/bands")
-    num_perm, n_bands, nxt = _read_minhash_meta(spark, path)
-    _write_minhash_meta(spark, sib, num_perm, n_bands, nxt)
-    _swap_in(path, sib)
-    res["swapped"] = True
-    return res
+    def write(sib, keeps, hits):
+        for t in ("sigs", "bands"):
+            keeps[t].write.partitionBy(
+                "epoch").mode("overwrite").parquet(f"{sib}/{t}")
+        _write_minhash_meta(spark, sib, *_read_minhash_meta(spark, path))
+
+    return _forget_store(
+        spark, path, doc_ids, "doc_id", ("sigs", "bands"),
+        lambda rm: {"removed_sigs": rm["sigs"], "removed_bands": rm["bands"]},
+        write)
 
 
 def forget_from_text_index(spark, path: str, doc_ids) -> dict:
@@ -361,259 +417,95 @@ def forget_from_text_index(spark, path: str, doc_ids) -> dict:
     built without the forgotten docs (pytest-pinned). Every
     pre-existing epoch keeps a meta row (zeroed if emptied), so
     ``next_epoch`` derivation (max epoch + 1) is preserved and batch
-    ids never recycle. Same ``.forget`` staging + ``.old`` recovery as
-    the other index rewrites; replay is a no-op."""
+    ids never recycle. Returns {removed_postings, swapped,
+    recovered}."""
     from open_instrument_spark.operators.retrieval import (
         _read_text_meta,
         _write_text_meta,
     )
 
-    recovered = _recover_old(path)
-    ids = [int(i) for i in doc_ids]
-    _, _, n_buckets, _ = _read_text_meta(spark, path)
-    rm, keep = _forget_split(
-        spark.read.parquet(f"{path}/postings"), "doc_id", ids)
-    res = {"removed_postings": rm, "swapped": False, "recovered": recovered}
-    if rm == 0:
-        return res
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
-    keep.write.partitionBy("epoch", "bucket").mode("overwrite").parquet(
-        f"{sib}/postings"
-    )
-    # per-epoch contributions recomputed from the SURVIVING postings;
-    # emptied epochs keep a zero row so max(epoch) never goes backwards
-    stats = {
-        int(r["epoch"]): (int(r["n"]), int(r["s"] or 0))
-        for r in keep.groupBy("epoch", "doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .groupBy("epoch")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()
-    }
-    for d in glob.glob(os.path.join(path, "meta", "epoch=*")):
-        e = int(os.path.basename(d).split("=", 1)[1])
-        n, s = stats.get(e, (0, 0))
-        _write_text_meta(spark, sib, n, s, n_buckets, epoch=e)
-    _swap_in(path, sib)
-    res["swapped"] = True
-    return res
+    def write(sib, keeps, hits):
+        _, _, n_buckets, _ = _read_text_meta(spark, path)
+        keep = keeps["postings"]
+        keep.write.partitionBy("epoch", "bucket").mode("overwrite").parquet(
+            f"{sib}/postings"
+        )
+        # per-epoch contributions recomputed from the SURVIVING postings;
+        # emptied epochs keep a zero row so max(epoch) never goes backwards
+        stats = {
+            int(r["epoch"]): (int(r["n"]), int(r["s"] or 0))
+            for r in keep.groupBy("epoch", "doc_id")
+            .agg(F.first("dl").alias("dl"))
+            .groupBy("epoch")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+            .collect()
+        }
+        for d in glob.glob(os.path.join(path, "meta", "epoch=*")):
+            e = int(os.path.basename(d).split("=", 1)[1])
+            n, s = stats.get(e, (0, 0))
+            _write_text_meta(spark, sib, n, s, n_buckets, epoch=e)
+
+    return _forget_store(
+        spark, path, doc_ids, "doc_id", ("postings",),
+        lambda rm: {"removed_postings": rm["postings"]}, write)
 
 
 def forget_from_ann_index(spark, path: str, vec_ids) -> dict:
     """Deletion propagation for the ANN serving indexes: drop the
-    forgotten vectors from whichever row stores the layout has —
+    forgotten vectors from whichever row tables the layout has —
     ``vectors`` (IVF, and the IVFPQ exact-rerank sidecar) and ``codes``
     (IVFPQ) — preserving the cell partitioning (searches keep their
     partition-pruned reads; an emptied cell simply yields no rows).
     Centroids and codebooks are NOT retrained: codes are raw-vector
     encodings (by_residual=False), so surviving rows' bytes are
     invariant — the same property that makes append/rebalance safe.
-    Same staging + ``.old`` recovery; replay is a no-op."""
-    recovered = _recover_old(path)
-    ids = [int(i) for i in vec_ids]
-    res = {"removed": {}, "swapped": False, "recovered": recovered}
-    parts = [s for s in ("vectors", "codes")
-             if os.path.isdir(os.path.join(path, s))]
-    keeps = {}
-    total = 0
-    for s in parts:
-        rm, keeps[s] = _forget_split(
-            spark.read.parquet(f"{path}/{s}"), "n_id", ids)
-        res["removed"][s] = rm
-        total += rm
-    if total == 0:
-        return res
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
-    for s in parts:
-        keeps[s].write.partitionBy(
-            "cell").mode("overwrite").parquet(f"{sib}/{s}")
-    for aux in ("centroids", "codebooks"):
-        if os.path.isdir(os.path.join(path, aux)):
-            spark.read.parquet(f"{path}/{aux}").write.mode(
-                "overwrite").parquet(f"{sib}/{aux}")
-    _swap_in(path, sib)
-    res["swapped"] = True
-    return res
+    Returns {removed: {table: n}, swapped, recovered}."""
 
+    def write(sib, keeps, hits):
+        for t, keep in keeps.items():
+            keep.write.partitionBy(
+                "cell").mode("overwrite").parquet(f"{sib}/{t}")
+        _copy_tables(spark, path, sib, ("centroids", "codebooks"))
 
-# The semantic dedup-at-ingest store's data subdirs: ``vectors`` (raw
-# (vec_id, v), always present — it is also the exact re-rank sidecar of
-# the quantized layout) and ``codes`` (SQ8 1-byte-per-dim encodings,
-# present when the store was built with layout="sq8").
-_SEMANTIC_DATA_DIRS = ("vectors", "codes")
-# sq_bounds (r14) carries the probe-margin bound (max decode error,
-# min norm); carrying it UNCHANGED through compaction and forget is
-# sound — both only remove or move rows, so the true bounds can only
-# shrink and the persisted ones stay conservative.
-_SEMANTIC_AUX_DIRS = ("centroids", "sq", "sq_bounds")
-
-
-def compact_semantic_index(spark, path: str, max_epochs: int = 8) -> dict:
-    """Fold a semantic dedup-at-ingest store's accumulated epochs back
-    into the base epoch (r13 — the store's MinHash sibling had this
-    from r12; judge r12 "What's wrong" #1). The streaming loop
-    (streaming/semantic_ingest.py) absorbs one ``vectors/epoch=N``
-    partition per micro-batch and probes read all epochs below their
-    ``before_epoch`` — so epoch count is pure file-listing + small-file
-    overhead growing without bound under continuous ingest.
-
-    When the store holds more than ``max_epochs`` vector epochs: read
-    each data subdir wholesale (``vectors``, plus ``codes`` on the SQ8
-    layout — both store-sized, the rewrite never touches corpus text),
-    stage a sibling store with everything under ``epoch=-1`` (the
-    base-build convention — every live probe's ``before_epoch`` is ≥ 0,
-    so the folded base stays visible to all of them), carry the
-    centroid / sq-stats / meta tables unchanged, then promote with the
-    staging-before-delete swap + ``.old`` crash recovery shared with
-    every index rewrite here. Probe results are invariant (the probe
-    unions epochs; content is unchanged), pinned by test. The meta's
-    ``next_epoch`` is PRESERVED — epoch ids never recycle, so a later
-    absorb can't collide with a pre-compaction batch id. Single-writer
-    contract: run from the maintenance loop that owns the store, with
-    no in-flight absorb."""
-    from open_instrument_spark.operators.similarity import (
-        _read_semantic_meta,
-        _write_semantic_meta,
-    )
-
-    recovered = _recover_old(path)
-    n_epochs = len(glob.glob(os.path.join(path, "vectors", "epoch=*")))
-    res = {"epochs_before": n_epochs, "compacted": False,
-           "swapped": False, "recovered": recovered}
-    if n_epochs <= max_epochs:
-        return res
-    dim, n_cells, nxt = _read_semantic_meta(spark, path)
-    sib = path.rstrip("/") + ".compact"
-    shutil.rmtree(sib, ignore_errors=True)
-    for s in _SEMANTIC_DATA_DIRS:
-        if not os.path.isdir(os.path.join(path, s)):
-            continue
-        df = spark.read.parquet(f"{path}/{s}")
-        # repartition ON the partition column: without it each of the
-        # (many tiny) input splits writes its own file into every cell
-        # dir, so the fold would collapse epoch COUNT but keep the
-        # small files — and small parquet files also gut the codes
-        # table's dictionary encoding (per-file dict pages dominate).
-        # One shuffle, corpus-sized like the rewrite itself; output is
-        # ~one file per cell (spark.sql.files.maxRecordsPerFile caps
-        # it on a real tier).
-        df.drop("epoch").repartition("cell").write.partitionBy(
-            "cell").mode("overwrite").parquet(f"{sib}/{s}/epoch=-1")
-    for aux in _SEMANTIC_AUX_DIRS:
-        if os.path.isdir(os.path.join(path, aux)):
-            spark.read.parquet(f"{path}/{aux}").write.mode(
-                "overwrite").parquet(f"{sib}/{aux}")
-    _write_semantic_meta(spark, sib, dim, n_cells, nxt)
-    _swap_in(path, sib)
-    res["compacted"] = True
-    res["swapped"] = True
-    return res
+    return _forget_store(spark, path, vec_ids, "n_id", (),
+                         lambda rm: {"removed": rm}, write,
+                         optional=("vectors", "codes"))
 
 
 def forget_from_semantic_index(spark, path: str, vec_ids) -> dict:
-    """Deletion propagation for the semantic dedup-at-ingest store
-    (r13 — closes the store-discipline gap vs its MinHash / BM25 / ANN
-    siblings): remove every row belonging to ``vec_ids`` from each
-    data subdir (``vectors``, plus ``codes`` on the SQ8 layout) so a
-    forgotten vector can never again surface as a prior-corpus match
-    in a probe. The epoch AND cell layout is preserved (probes keep
-    both partition-pruning filters; an emptied partition simply yields
-    no rows), centroids are NOT retrained (the fresh-build equality
-    pin holds because build assigns against the same centroids), and
-    the meta's ``next_epoch`` is untouched — epoch ids never recycle.
-
-    Same ``.forget`` staging + ``.old`` crash recovery as the other
-    index rewrites; a replayed forget of the same ids removes 0 rows
-    and skips the swap. Post-forget store is pytest-pinned EQUAL to a
-    fresh ``build_semantic_index`` over the surviving corpus
-    (tests/test_forget.py). Returns {removed, swapped, recovered}."""
+    """Deletion propagation for the semantic dedup-at-ingest store:
+    remove every row belonging to ``vec_ids`` from each data table
+    (``vectors``, plus ``codes`` on the SQ8 layout) so a forgotten
+    vector can never again surface as a prior-corpus match in a probe.
+    The epoch AND cell layout is preserved (probes keep both
+    partition-pruning filters; an emptied partition simply yields no
+    rows), centroids are NOT retrained (the fresh-build equality pin
+    holds because build assigns against the same centroids), and the
+    meta's ``next_epoch`` is untouched — epoch ids never recycle. The
+    post-forget store is pytest-pinned EQUAL to a fresh
+    ``build_semantic_index`` over the surviving corpus
+    (tests/test_forget.py). Returns {removed: {table: n}, swapped,
+    recovered}."""
     from open_instrument_spark.operators.similarity import (
         _read_semantic_meta,
         _write_semantic_meta,
     )
 
-    recovered = _recover_old(path)
-    ids = [int(i) for i in vec_ids]
-    res = {"removed": {}, "swapped": False, "recovered": recovered}
-    parts = [s for s in _SEMANTIC_DATA_DIRS
-             if os.path.isdir(os.path.join(path, s))]
-    keeps = {}
-    total = 0
-    for s in parts:
-        rm, keeps[s] = _forget_split(
-            spark.read.parquet(f"{path}/{s}"), "vec_id", ids)
-        res["removed"][s] = rm
-        total += rm
-    if total == 0:
-        return res
-    dim, n_cells, nxt = _read_semantic_meta(spark, path)
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
-    for s in parts:
-        keeps[s].write.partitionBy("epoch", "cell").mode(
-            "overwrite").parquet(f"{sib}/{s}")
-    for aux in _SEMANTIC_AUX_DIRS:
-        if os.path.isdir(os.path.join(path, aux)):
-            spark.read.parquet(f"{path}/{aux}").write.mode(
-                "overwrite").parquet(f"{sib}/{aux}")
-    _write_semantic_meta(spark, sib, dim, n_cells, nxt)
-    _swap_in(path, sib)
-    res["swapped"] = True
-    return res
+    def write(sib, keeps, hits):
+        meta = _read_semantic_meta(spark, path)
+        for t, keep in keeps.items():
+            keep.write.partitionBy("epoch", "cell").mode(
+                "overwrite").parquet(f"{sib}/{t}")
+        _copy_tables(spark, path, sib, _SEMANTIC_AUX_DIRS)
+        _write_semantic_meta(spark, sib, *meta)
 
-
-def compact_knn_graph_store(spark, path: str, max_epochs: int = 8) -> dict:
-    """Fold a kNN-graph store's accumulated VECTOR epochs back into the
-    base epoch (r14 — the fifth store joins the discipline; judge r13
-    "Next round" #3). Absorbs land one ``vectors/epoch=N`` per batch;
-    edge rebuilds read all epochs of the touched cells — so epoch count
-    is pure file-listing overhead, the compact_minhash_index pathology.
-
-    The EDGE table is untouched in content (it is a pure function of
-    the vector union, which folding preserves) but rewritten through
-    ``repartition("cell")`` so the per-cell small files the incremental
-    rewrites accumulate consolidate to ~one file per cell — the same
-    file-consolidation motive as compact_semantic_index. Vectors fold
-    to ``epoch=-1`` (every live read unions epochs, so the fold is
-    invariant — pinned by test), centroids/meta carry over,
-    ``next_epoch`` is PRESERVED (epoch ids never recycle), and the
-    promotion is the staging-before-delete swap + ``.old`` crash
-    recovery shared by every index rewrite here. Single-writer
-    contract: no in-flight absorb."""
-    from open_instrument_spark.operators.graphstore import (
-        _read_graph_meta,
-        _write_graph_meta,
-    )
-
-    recovered = _recover_old(path)
-    n_epochs = len(glob.glob(os.path.join(path, "vectors", "epoch=*")))
-    res = {"epochs_before": n_epochs, "compacted": False,
-           "swapped": False, "recovered": recovered}
-    if n_epochs <= max_epochs:
-        return res
-    dim, n_cells, k, nxt, n_probe = _read_graph_meta(spark, path)
-    sib = path.rstrip("/") + ".compact"
-    shutil.rmtree(sib, ignore_errors=True)
-    spark.read.parquet(f"{path}/vectors").drop("epoch").repartition(
-        "cell").write.partitionBy("cell").mode("overwrite").parquet(
-        f"{sib}/vectors/epoch=-1")
-    edges = spark.read.parquet(f"{path}/edges")
-    epart = "pcell" if "pcell" in edges.columns else "cell"
-    edges.repartition(epart).write.partitionBy(epart).mode(
-        "overwrite").parquet(f"{sib}/edges")
-    spark.read.parquet(f"{path}/centroids").write.mode(
-        "overwrite").parquet(f"{sib}/centroids")
-    _write_graph_meta(spark, sib, dim, n_cells, k, nxt, n_probe)
-    _swap_in(path, sib)
-    res["compacted"] = True
-    res["swapped"] = True
-    return res
+    return _forget_store(spark, path, vec_ids, "vec_id", (),
+                         lambda rm: {"removed": rm}, write,
+                         optional=_SEMANTIC_DATA_DIRS)
 
 
 def forget_from_knn_graph_store(spark, path: str, vec_ids) -> dict:
-    """Deletion propagation for the kNN-graph store (r14): remove every
+    """Deletion propagation for the kNN-graph store: remove every
     vector row belonging to ``vec_ids`` AND recompute the edges of
     every cell that held a forgotten vector from the SURVIVING members.
     Edge-row deletion alone would under-deliver — when a forgotten
@@ -622,12 +514,8 @@ def forget_from_knn_graph_store(spark, path: str, vec_ids) -> dict:
     and edges are strictly in-cell, so forgotten ids can appear only
     in their own cells' partitions: recomputing exactly those cells
     yields a store pytest-pinned EQUAL to a fresh build over the
-    surviving corpus (the judge's done-bar for every forget here).
-
-    Same ``.forget`` staging + ``.old`` crash recovery as the sibling
-    stores; replaying the same forget removes 0 rows and skips the
-    swap; ``next_epoch`` is untouched. Returns
-    {removed, cells_rebuilt, swapped, recovered}."""
+    surviving corpus. ``next_epoch`` is untouched. Returns
+    {removed, cells_rebuilt, swapped, recovered, edge_cells}."""
     from open_instrument_spark.operators.graphstore import (
         _read_graph_meta,
         _write_graph_meta,
@@ -636,58 +524,72 @@ def forget_from_knn_graph_store(spark, path: str, vec_ids) -> dict:
         rebuild_edge_pcells,
     )
 
-    recovered = _recover_old(path)
-    ids = [int(i) for i in vec_ids]
-    res = {"removed": 0, "cells_rebuilt": [], "swapped": False,
-           "recovered": recovered}
-    vec = spark.read.parquet(f"{path}/vectors")
-    if len(ids) <= FORGET_ISIN_MAX:
-        hit = vec.filter(F.col("vec_id").isin(ids))
-    else:
-        gone = F.broadcast(local_df(
-            spark, [(int(i),) for i in ids], "_forget_id long"))
-        hit = vec.join(gone, vec["vec_id"] == gone["_forget_id"],
-                       "left_semi")
-    cells = sorted({int(r["cell"])
-                    for r in hit.select("cell").distinct().collect()})
-    rm, keep = _forget_split(vec, "vec_id", ids)
-    res["removed"] = rm
-    if rm == 0:
-        return res
-    dim, n_cells, k, nxt, n_probe = _read_graph_meta(spark, path)
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
-    keep.write.partitionBy("epoch", "cell").mode("overwrite").parquet(
-        f"{sib}/vectors")
-    # untouched partitions' edges carry over; affected ones recompute
-    # from the sibling's surviving vectors (never the live store's).
-    # Multi-probe: forgotten replicas' cells expand to the affected
-    # PRIMARY cells first (a survivor probing a touched cell may have
-    # ranked a forgotten vector — its whole partition recomputes).
-    if n_probe > 1:
-        pcells = affected_pcells(spark, f"{path}/vectors", cells)
+    def write(sib, keeps, hits):
+        cells = sorted({int(r["cell"]) for r in
+                        hits["vectors"].select("cell").distinct().collect()})
+        meta = _read_graph_meta(spark, path)
+        k, n_probe = meta[2], meta[4]
+        keeps["vectors"].write.partitionBy("epoch", "cell").mode(
+            "overwrite").parquet(f"{sib}/vectors")
+        # untouched partitions' edges carry over; affected ones recompute
+        # from the sibling's surviving vectors (never the live store's).
+        # Multi-probe: forgotten replicas' cells expand to the affected
+        # PRIMARY cells first (a survivor probing a touched cell may have
+        # ranked a forgotten vector — its whole partition recomputes).
+        if n_probe > 1:
+            part, rebuild = "pcell", rebuild_edge_pcells
+            cells = affected_pcells(spark, f"{path}/vectors", cells)
+        else:
+            part, rebuild = "cell", rebuild_edge_cells
         spark.read.parquet(f"{path}/edges").where(
-            ~F.col("pcell").isin(pcells)).write.partitionBy("pcell").mode(
+            ~F.col(part).isin(cells)).write.partitionBy(part).mode(
             "overwrite").parquet(f"{sib}/edges")
-        rebuilt = rebuild_edge_pcells(
-            spark, path, pcells, k,
-            vectors_at=f"{sib}/vectors", edges_at=f"{sib}/edges")
-        res["cells_rebuilt"] = pcells
-    else:
-        spark.read.parquet(f"{path}/edges").where(
-            ~F.col("cell").isin(cells)).write.partitionBy("cell").mode(
-            "overwrite").parquet(f"{sib}/edges")
-        rebuilt = rebuild_edge_cells(
-            spark, path, cells, k,
-            vectors_at=f"{sib}/vectors", edges_at=f"{sib}/edges")
-        res["cells_rebuilt"] = cells
-    spark.read.parquet(f"{path}/centroids").write.mode(
-        "overwrite").parquet(f"{sib}/centroids")
-    _write_graph_meta(spark, sib, dim, n_cells, k, nxt, n_probe)
-    _swap_in(path, sib)
-    res["edge_cells"] = rebuilt
-    res["swapped"] = True
-    return res
+        rebuilt = rebuild(spark, path, cells, k,
+                          vectors_at=f"{sib}/vectors",
+                          edges_at=f"{sib}/edges")
+        _copy_tables(spark, path, sib, ("centroids",))
+        _write_graph_meta(spark, sib, *meta)
+        return {"cells_rebuilt": cells, "edge_cells": rebuilt}
+
+    return _forget_store(
+        spark, path, vec_ids, "vec_id", ("vectors",),
+        lambda rm: {"removed": rm["vectors"], "cells_rebuilt": []}, write)
+
+
+class _IndexKind(NamedTuple):
+    """One row of the tick's index-store table."""
+
+    key: str                # summary key
+    epochs: str | None      # table whose epoch count drives compaction;
+                            # None for the skew-driven ANN rebalance
+    compact: Callable
+    forget: Callable
+    forget_set: str         # "doc" or "vec": which forget ids apply
+
+
+_INDEX_KINDS = (
+    _IndexKind("ann", None, rebalance_ann_index, forget_from_ann_index,
+               "vec"),
+    _IndexKind("minhash", "sigs", compact_minhash_index,
+               forget_from_minhash_index, "doc"),
+    _IndexKind("text_index", "postings", compact_text_index,
+               forget_from_text_index, "doc"),
+    _IndexKind("semantic", "vectors", compact_semantic_index,
+               forget_from_semantic_index, "vec"),
+    _IndexKind("graph", "vectors", compact_knn_graph_store,
+               forget_from_knn_graph_store, "vec"),
+)
+
+
+def _ann_dry_run(spark, path: str) -> dict:
+    from open_instrument_spark.operators.pq import ivfpq_cell_stats
+    from open_instrument_spark.operators.similarity import ivf_cell_stats
+
+    stats_of = (ivfpq_cell_stats if os.path.isdir(os.path.join(path, "codes"))
+                else ivf_cell_stats)
+    skew = stats_of(spark, path)["skew"]
+    return {"skew_before": skew, "rebalanced": False, "skew_after": skew,
+            "swapped": False, "out_path": None}
 
 
 def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
@@ -696,13 +598,10 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
                      ann_indexes: list[str] | None = None,
                      ann_skew_threshold: float = 4.0,
                      minhash_indexes: list[str] | None = None,
-                     minhash_max_epochs: int = 8,
                      text_indexes: list[str] | None = None,
-                     text_max_epochs: int = 8,
                      semantic_indexes: list[str] | None = None,
-                     semantic_max_epochs: int = 8,
                      graph_indexes: list[str] | None = None,
-                     graph_max_epochs: int = 8,
+                     max_epochs: int = 8,
                      forget_doc_ids=None,
                      forget_vec_ids=None,
                      ) -> tuple[DataFrame, dict]:
@@ -711,52 +610,31 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     reference logs what it sees before anything changes), ``summary``
     mirrors the runner's closing LOG(INFO) counters
     (store_file_manager.cc:170-171: variables and values examined)
-    plus what the tick did (``applied``, ``compacted_dates``, and per-
-    index ``ann`` skew/rebalance outcomes).
+    plus what the tick did (``applied``, ``compacted_dates``, one dict
+    per index kind, and ``forget``).
 
-    ``ann_indexes`` (judge r9 "Next round" #6) folds ANN index upkeep
-    into the SAME idempotent cadence that owns retention and
-    compaction, mirroring the reference's single StoreFileManager
-    thread owning all store upkeep: each path gets a skew check every
-    tick; a drifted index is rebuilt and swapped in
-    (:func:`rebalance_ann_index`), a balanced one is a no-op — so the
-    tick stays a fixpoint: a second tick at the same ``now`` finds
-    balanced cells and changes nothing.
+    The index stores join the same cadence, mirroring the reference's
+    single StoreFileManager thread owning all store upkeep:
 
-    ``minhash_indexes`` (r12) likewise folds dedup-at-ingest store
-    upkeep into the tick: each store's epoch count is checked and a
-    store past ``minhash_max_epochs`` is compacted + swapped
-    (:func:`compact_minhash_index`) — also a fixpoint (a compacted
-    store has one epoch and is skipped).
+    - ``ann_indexes`` get a skew check and, when drifted, a rebuild
+      and swap (:func:`rebalance_ann_index`);
+    - ``minhash_indexes``, ``text_indexes``, ``semantic_indexes`` and
+      ``graph_indexes`` (kNN-graph stores) are compacted once they hold
+      more than ``max_epochs`` epochs;
+    - ``forget_doc_ids`` reaches the MinHash and text stores,
+      ``forget_vec_ids`` the ANN, semantic and graph stores. Forgets run
+      BEFORE compaction, so a forget that empties epochs and the
+      compaction that folds them land in one tick.
 
-    ``forget_doc_ids`` / ``forget_vec_ids`` (r12): deletion
-    propagation — the forget set is applied to every listed MinHash /
-    text / ANN index via the ``forget_from_*`` rewrites BEFORE
-    compaction (so a forget that empties epochs and the compaction
-    that folds them land in one tick). Also a fixpoint: replaying the
-    tick with the same forget set removes 0 rows and skips the swaps.
-
-    ``semantic_indexes`` (r13): the semantic dedup-at-ingest stores
-    join the same cadence — ``forget_vec_ids`` reaches them via
-    :func:`forget_from_semantic_index` and epoch growth is folded by
-    :func:`compact_semantic_index`, both fixpoints, closing the
-    lifecycle gap the r12 verdict flagged against the MinHash / BM25 /
-    ANN siblings.
-
-    ``graph_indexes`` (r14): the materialized kNN-graph stores
-    (operators/graphstore.py) — the fifth store kind — join too:
-    ``forget_vec_ids`` reaches them via
-    :func:`forget_from_knn_graph_store` (which also recomputes the
-    affected cells' edges from the survivors) and vector-epoch growth
-    is folded by :func:`compact_knn_graph_store`. Both fixpoints.
+    Every step is a fixpoint: a second tick at the same ``now`` with the
+    same forget sets finds balanced cells, folded epochs and nothing to
+    remove, and changes nothing.
 
     ``dry_run=True`` is the reference-exact log-only pass: no write,
     no delete, store bytes untouched — ANN indexes only get their skew
-    measured and reported, MinHash stores their epoch count; forget
+    measured and reported, the other stores their epoch count; forget
     sets are NOT applied."""
-    pts = spark.read.parquet(store_path).drop(
-        "dt", "bucket", "name_bucket", "epoch"
-    )
+    pts = spark.read.parquet(store_path).drop(*POINTS_PARTITION_COLS)
     report = retention_report(pts, policy, now)
     from open_instrument_spark.model import series_key
 
@@ -769,53 +647,20 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
         "values": counts["values"],
         "applied": not dry_run,
         "compacted_dates": [],
-        "ann": {},
-        "minhash": {},
-        "text_index": {},
-        "semantic": {},
-        "graph": {},
+        **{kind.key: {} for kind in _INDEX_KINDS},
         "forget": {},
     }
+    stores = list(zip(_INDEX_KINDS, (ann_indexes, minhash_indexes,
+                                     text_indexes, semantic_indexes,
+                                     graph_indexes)))
     if dry_run:
-        from open_instrument_spark.operators.pq import ivfpq_cell_stats
-        from open_instrument_spark.operators.similarity import ivf_cell_stats
-
-        for p in ann_indexes or []:
-            stats_of = (
-                ivfpq_cell_stats
-                if os.path.isdir(os.path.join(p, "codes"))
-                else ivf_cell_stats
-            )
-            stats = stats_of(spark, p)
-            summary["ann"][p] = {
-                "skew_before": stats["skew"], "rebalanced": False,
-                "skew_after": stats["skew"], "swapped": False,
-                "out_path": None,
-            }
-        for p in minhash_indexes or []:
-            summary["minhash"][p] = {
-                "epochs_before": len(
-                    glob.glob(os.path.join(p, "sigs", "epoch=*"))),
-                "compacted": False, "swapped": False, "recovered": False,
-            }
-        for p in text_indexes or []:
-            summary["text_index"][p] = {
-                "epochs_before": len(
-                    glob.glob(os.path.join(p, "postings", "epoch=*"))),
-                "compacted": False, "swapped": False, "recovered": False,
-            }
-        for p in semantic_indexes or []:
-            summary["semantic"][p] = {
-                "epochs_before": len(
-                    glob.glob(os.path.join(p, "vectors", "epoch=*"))),
-                "compacted": False, "swapped": False, "recovered": False,
-            }
-        for p in graph_indexes or []:
-            summary["graph"][p] = {
-                "epochs_before": len(
-                    glob.glob(os.path.join(p, "vectors", "epoch=*"))),
-                "compacted": False, "swapped": False, "recovered": False,
-            }
+        for kind, paths in stores:
+            for p in paths or []:
+                summary[kind.key][p] = (
+                    _ann_dry_run(spark, p) if kind.epochs is None else
+                    {"epochs_before": _epoch_count(p, kind.epochs),
+                     "compacted": False, "swapped": False,
+                     "recovered": False})
         return report, summary
     # the caller reads the report AFTER the rewrite — materialize it
     # now so the returned frame reflects tick-START state, not a lazy
@@ -826,48 +671,15 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
         spark, store_path, n_buckets=n_buckets,
         max_files_per_date=max_files_per_date,
     )
-    # deletion propagation runs BEFORE compaction so a forget that
-    # empties epochs and a compaction that folds them land in one tick
-    if forget_doc_ids:
-        for p in minhash_indexes or []:
-            summary["forget"][p] = forget_from_minhash_index(
-                spark, p, forget_doc_ids
-            )
-        for p in text_indexes or []:
-            summary["forget"][p] = forget_from_text_index(
-                spark, p, forget_doc_ids
-            )
-    if forget_vec_ids:
-        for p in ann_indexes or []:
-            summary["forget"][p] = forget_from_ann_index(
-                spark, p, forget_vec_ids
-            )
-        for p in semantic_indexes or []:
-            summary["forget"][p] = forget_from_semantic_index(
-                spark, p, forget_vec_ids
-            )
-        for p in graph_indexes or []:
-            summary["forget"][p] = forget_from_knn_graph_store(
-                spark, p, forget_vec_ids
-            )
-    for p in ann_indexes or []:
-        summary["ann"][p] = rebalance_ann_index(
-            spark, p, skew_threshold=ann_skew_threshold
-        )
-    for p in minhash_indexes or []:
-        summary["minhash"][p] = compact_minhash_index(
-            spark, p, max_epochs=minhash_max_epochs
-        )
-    for p in text_indexes or []:
-        summary["text_index"][p] = compact_text_index(
-            spark, p, max_epochs=text_max_epochs
-        )
-    for p in semantic_indexes or []:
-        summary["semantic"][p] = compact_semantic_index(
-            spark, p, max_epochs=semantic_max_epochs
-        )
-    for p in graph_indexes or []:
-        summary["graph"][p] = compact_knn_graph_store(
-            spark, p, max_epochs=graph_max_epochs
-        )
+    forget_ids = {"doc": forget_doc_ids, "vec": forget_vec_ids}
+    for kind, paths in stores:
+        ids = forget_ids[kind.forget_set]
+        if ids:
+            for p in paths or []:
+                summary["forget"][p] = kind.forget(spark, p, ids)
+    for kind, paths in stores:
+        knob = ({"skew_threshold": ann_skew_threshold} if kind.epochs is None
+                else {"max_epochs": max_epochs})
+        for p in paths or []:
+            summary[kind.key][p] = kind.compact(spark, p, **knob)
     return report, summary

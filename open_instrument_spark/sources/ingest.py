@@ -19,6 +19,10 @@ partitions (datastore.go:731-732 analog) so row-group stats are tight.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,6 +37,11 @@ NAME_RE = r"^/\S+$"  # starts with /, no whitespace, len>=2 (store.cc:414-417)
 #   label values:         any UTF-8 except NUL
 STRICT_NAME_RE = r"^/[A-Za-z0-9._\-/*,]+$"
 STRICT_LABEL_KEY_RE = r"^[A-Za-z0-9._\-/*]+$"
+
+# Every partition column a points store can carry: write_points' dt,
+# name_bucket and bucket, plus the streaming sink's epoch. Dropping them
+# from a store read gives back the points schema.
+POINTS_PARTITION_COLS = ("dt", "bucket", "name_bucket", "epoch")
 
 
 def _key_expr(points: DataFrame):
@@ -271,6 +280,68 @@ def compact(spark, path: str, n_buckets: int = 16) -> None:
     per-epoch partitioning (drop() ignores absent columns)."""
     df = spark.read.parquet(path)
     write_points(
-        df.drop("dt", "bucket", "name_bucket", "epoch"),
+        df.drop(*POINTS_PARTITION_COLS),
         path + "_compacted", n_buckets, mode="overwrite",
     )
+
+
+def _dt_dirs(store_path: str) -> dict[str, list[str]]:
+    """date string → its partition dirs, at either layout depth
+    (store/dt=D and the streaming sink's store/epoch=N/dt=D)."""
+    out: dict[str, list[str]] = {}
+    for pat in ("dt=*", os.path.join("epoch=*", "dt=*")):
+        for d in glob.glob(os.path.join(store_path, pat)):
+            out.setdefault(os.path.basename(d).split("=", 1)[1], []).append(d)
+    return out
+
+
+def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
+                  n_buckets: int = 16) -> None:
+    """Replace everything a write_points store holds for ``dates`` with
+    ``rows`` (points schema) — the one in-place rewrite protocol of the
+    points store, shared by retention and date compaction.
+
+    ``store`` is the caller's ``spark.read.parquet(store_path)`` frame.
+    The rows are staged to disk BEFORE any source partition is deleted
+    (a lazy plan re-reading deleted files, or an evicted cache, would
+    corrupt the rewrite). The dates' directories then go at both layout
+    depths, and the staged rows are appended at the store's own
+    partition depth: an epoch-layout store gets a fresh NEGATIVE epoch
+    below every existing one. The streaming sink's epochs are its
+    checkpointed batch ids (always >= 0), so epoch ids never recycle
+    and a resumed stream can never overwrite a rewrite. Single writer:
+    run from the maintenance loop that owns the store. Local-FS
+    removal; on a cluster the same steps go through the Hadoop
+    FileSystem API.
+
+    A name-bucketed store is rejected before anything is staged: its N
+    is not recoverable from the directory names, and a rewrite without
+    the ``name_bucket`` level would leave partition dirs of two shapes
+    that no read can reconcile."""
+    if "name_bucket" in store.columns:
+        raise ValueError(
+            f"store at {store_path} is name-bucketed; its dates cannot be "
+            "rewritten in place without the writer's name_buckets"
+        )
+    staging = store_path.rstrip("/") + "_replace_staging"
+    rows.write.mode("overwrite").parquet(staging)
+    # whole date dirs go, so buckets the rewrite leaves empty go too
+    dirs = _dt_dirs(store_path)
+    for d in dates:
+        for part in dirs.get(str(d), []):
+            shutil.rmtree(part, ignore_errors=True)
+    # dt=/bucket= appended at the root of an epoch=N store would mix
+    # partition schemas (CONFLICTING_PARTITION_COLUMN_NAMES on every read)
+    epoch_dirs = glob.glob(os.path.join(store_path, "epoch=*"))
+    dest = store_path
+    if epoch_dirs:
+        epochs = []
+        for p in epoch_dirs:
+            try:
+                epochs.append(int(os.path.basename(p).split("=", 1)[1]))
+            except ValueError:
+                pass
+        dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
+    write_points(rows.sparkSession.read.parquet(staging), dest,
+                 n_buckets=n_buckets, mode="append")
+    shutil.rmtree(staging, ignore_errors=True)

@@ -223,7 +223,7 @@ def test_tick_dispatches_graph_store(spark, tmp_path):
             .collect()]
     _, summary = maintenance_tick(
         spark, store, policy, dt.datetime(2024, 6, 1),
-        graph_indexes=[gpath], graph_max_epochs=4, forget_vec_ids=gone)
+        graph_indexes=[gpath], max_epochs=4, forget_vec_ids=gone)
     assert summary["forget"][gpath]["removed"] > 0
     assert summary["graph"][gpath]["compacted"]
     survivors = emb.filter(~F.col("vec_id").isin(gone))
@@ -232,7 +232,7 @@ def test_tick_dispatches_graph_store(spark, tmp_path):
     # replayed tick: nothing to forget, nothing to fold
     _, s2 = maintenance_tick(
         spark, store, policy, dt.datetime(2024, 6, 1),
-        graph_indexes=[gpath], graph_max_epochs=4, forget_vec_ids=gone)
+        graph_indexes=[gpath], max_epochs=4, forget_vec_ids=gone)
     assert s2["forget"][gpath]["removed"] == 0
     assert not s2["graph"][gpath]["compacted"]
     # dry run only reports
@@ -519,7 +519,7 @@ def test_tick_dispatches_multiprobe_graph_store(spark, tmp_path):
             .collect()]
     _, summary = maintenance_tick(
         spark, store, policy, dt.datetime(2024, 6, 1),
-        graph_indexes=[gpath], graph_max_epochs=3, forget_vec_ids=gone)
+        graph_indexes=[gpath], max_epochs=3, forget_vec_ids=gone)
     assert summary["forget"][gpath]["removed"] > 0
     assert summary["graph"][gpath]["compacted"]
     survivors = emb.filter(~F.col("vec_id").isin(gone))
@@ -528,6 +528,6 @@ def test_tick_dispatches_multiprobe_graph_store(spark, tmp_path):
     assert _read_graph_meta(spark, gpath)[4] == P  # n_probe survives
     _, s2 = maintenance_tick(
         spark, store, policy, dt.datetime(2024, 6, 1),
-        graph_indexes=[gpath], graph_max_epochs=3, forget_vec_ids=gone)
+        graph_indexes=[gpath], max_epochs=3, forget_vec_ids=gone)
     assert s2["forget"][gpath]["removed"] == 0
     assert not s2["graph"][gpath]["compacted"]

@@ -512,6 +512,53 @@ def test_retention_job_downsample_band_on_epoch_store(spark, tmp_path):
     assert spark.read.parquet(dest).count() == 2
 
 
+@pytest.mark.parametrize("rewrite", ["compact_dates", "run_retention_job"])
+def test_date_rewrites_reject_name_bucketed_store(spark, tmp_path, rewrite):
+    """A name-bucketed store's N cannot be recovered from its directory
+    names, so a date rewrite would land the date as dt=/bucket= beside
+    dt=/name_bucket=/bucket= dirs, and every later read would fail with
+    CONFLICTING_PARTITION_COLUMN_NAMES. Both callers of the date
+    replacement must refuse such a store before staging, writing or
+    deleting anything."""
+    import datetime as dt
+
+    from open_instrument_spark.plans import maintenance
+
+    store = str(tmp_path / "store")
+    schema = ("name string, labels map<string,string>, ts timestamp, "
+              "dval double, sval string")
+    old = [(n, {"h": h}, dt.datetime(2022, 1, 30, hr), 1.0, None)
+           for n in ("/a", "/b") for h in ("x", "y") for hr in range(2)]
+    recent = [(n, {"h": "x"}, dt.datetime(2024, 1, 30, 1), 2.0, None)
+              for n in ("/a", "/b")]
+    write_points(spark.createDataFrame(old + recent, schema), store,
+                 n_buckets=2, name_buckets=2)
+    # a second append makes the oldest date the one with the most files
+    more = [(n, h, ts.replace(minute=30), v, s) for n, h, ts, v, s in old]
+    write_points(spark.createDataFrame(more, schema), store, n_buckets=2,
+                 name_buckets=2)
+
+    def files():
+        return sorted(glob.glob(str(tmp_path / "**"), recursive=True))
+
+    def rows():
+        return sorted((r["name"], r["ts"], r["dval"], r["name_bucket"])
+                      for r in spark.read.parquet(store).collect())
+
+    files0, rows0 = files(), rows()
+    with pytest.raises(ValueError, match="name-bucketed"):
+        if rewrite == "compact_dates":
+            maintenance.compact_dates(spark, store, n_buckets=2,
+                                      max_files_per_date=3)
+        else:
+            policy = [PolicyItem(("/a",), keep=False, min_age="4w"),
+                      PolicyItem(("*",), keep=True)]
+            maintenance.run_retention_job(spark, store, policy, NOW,
+                                          n_buckets=2)
+    assert files() == files0
+    assert rows() == rows0
+
+
 def test_kernel_retention_preserves_series_identity(spark):
     """Two series differing only in labels, downsampled via a kernel
     band, must come back with their labels (not NULL-merged into one

@@ -856,3 +856,30 @@ def test_absent_over_time_large_grid_drops_broadcast_hint(spark, tables):
     assert "no_broadcast_hash" not in opt_small
     # 250k buckets: no broadcast hint anywhere in the logical plan.
     assert "broadcast" not in opt_large.lower()
+
+
+@pytest.mark.parametrize("name, json_calls, pushed", [
+    ("agg_avg_by_label_user", 0, "PushedFilters: [IsNotNull(user_id)]"),
+    ("agg_sum_by_label_k", 4, None),
+], ids=["user_id", "k"])
+def test_label_aggregations_filter_on_staged_scalars(spark, name,
+                                                     json_calls, pushed):
+    """events_to_points stages the label scalars as projection columns,
+    so the label filter Catalyst pushes below the projection tests those
+    scalars and never rebuilds the label map. user_id is a plain column:
+    its filter carries no JSON extraction and reaches the scan. k derives
+    from the props JSON, so its filter evaluates the staged extraction
+    (twice for not-null, twice for not-empty). Without the staging both
+    filters rebuild the map: 16 get_json_object calls each and nothing
+    pushed to the scan."""
+    from open_instrument_spark import registry
+
+    plan = plan_of(registry.QUERIES[name](spark, SF_SMOKE))
+    lines = plan.splitlines()
+    scan = next(i for i, line in enumerate(lines) if "FileScan" in line)
+    pushed_filter = lines[scan - 1]
+    assert "+- Filter" in pushed_filter
+    assert "map(" not in pushed_filter
+    assert count_in(pushed_filter, "get_json_object") == json_calls
+    if pushed is not None:
+        assert pushed in lines[scan]

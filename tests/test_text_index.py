@@ -340,13 +340,13 @@ def test_maintenance_tick_compacts_text_indexes(spark, docs, tmp_path):
     now = "2024-01-31 00:00:00"
     _, dry = maintenance_tick(spark, store, policy, now, dry_run=True,
                               n_buckets=2, text_indexes=[idx],
-                              text_max_epochs=2)
+                              max_epochs=2)
     assert dry["text_index"][idx] == {
         "epochs_before": 4, "compacted": False, "swapped": False,
         "recovered": False}
     _, s1 = maintenance_tick(spark, store, policy, now, n_buckets=2,
-                             text_indexes=[idx], text_max_epochs=2)
+                             text_indexes=[idx], max_epochs=2)
     assert s1["text_index"][idx]["compacted"]
     _, s2 = maintenance_tick(spark, store, policy, now, n_buckets=2,
-                             text_indexes=[idx], text_max_epochs=2)
+                             text_indexes=[idx], max_epochs=2)
     assert not s2["text_index"][idx]["compacted"]

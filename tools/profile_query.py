@@ -57,27 +57,26 @@ def main() -> None:
             with open(os.path.join(
                     plan_dir, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
-            # FULL-LINEAGE companion dump (judge r14 "Next round" #5):
-            # checkpointed pipelines explain as `Scan ExistingRDD` above
-            # the barrier, hiding the very subtrees the optimization
-            # claims are gone. Rebuild the plan with localCheckpoint
-            # neutered (plan capture only — the timed runs below keep
-            # the real barrier, which is part of the measured query) and
-            # write it alongside as <name>_<suffix>_fullplan.txt when it
-            # differs.
-            from pyspark.sql import DataFrame as _DF
-
-            _real_ckpt = _DF.localCheckpoint
-            try:
-                _DF.localCheckpoint = lambda self, eager=True: self
-                df_full = fn(spark, args.sf)
-                full = df_full._sc._jvm.PythonSQLUtils.explainString(
-                    df_full._jdf.queryExecution(), "formatted")
-            except Exception as e:  # never fail the profile over the dump
-                full = f"(full-lineage dump failed: {type(e).__name__}: {e})"
-            finally:
-                _DF.localCheckpoint = _real_ckpt
+            # Full-lineage companion dump: checkpointed pipelines
+            # explain as `Scan ExistingRDD` above the barrier, hiding the
+            # subtrees an optimization claims are gone. Only for those,
+            # rebuild the query with localCheckpoint neutered (plan
+            # capture only — the timed runs below keep the real barrier,
+            # which is part of the measured query) and write it as
+            # <name>_<suffix>_fullplan.txt.
             if "ExistingRDD" in plan:
+                from pyspark.sql import DataFrame as _DF
+
+                _real_ckpt = _DF.localCheckpoint
+                try:
+                    _DF.localCheckpoint = lambda self, eager=True: self
+                    df_full = fn(spark, args.sf)
+                    full = df_full._sc._jvm.PythonSQLUtils.explainString(
+                        df_full._jdf.queryExecution(), "formatted")
+                except Exception as e:  # never fail the profile over the dump
+                    full = f"(full-lineage dump failed: {type(e).__name__}: {e})"
+                finally:
+                    _DF.localCheckpoint = _real_ckpt
                 with open(os.path.join(
                         plan_dir, f"{name}_{args.suffix}_fullplan.txt"), "w") as f:
                     f.write(full)
