@@ -42,8 +42,8 @@ POINTS_SCHEMA = T.StructType(
     ]
 )
 
-# One shared quote/escape kernel (round-5 unification, VERDICT r3 #1):
-# the grammar lives in canonical.py; these names stay importable here.
+# One shared quote/escape kernel: the grammar lives in canonical.py;
+# these names stay importable here.
 from open_instrument_spark.canonical import (  # noqa: E402
     canonical_variable as _canonical_variable,
     quote_label_value as quoted_label_value,  # noqa: F401 (re-export)
@@ -51,8 +51,8 @@ from open_instrument_spark.canonical import (  # noqa: E402
 
 SERIES_KEY_COL = "series_key"
 
-# Staged per-label scalar columns (r15, guide §1.2/§2.3 "project early"):
-# a source adapter that KNOWS its label shape may attach
+# Staged per-label scalar columns ("project early"): a source adapter
+# that KNOWS its label shape may attach
 # ``_label_<key>`` columns holding exactly ``labels[<key>]`` for each
 # key it ever emits. Operators that read a label value
 # (:func:`label_value`, the matcher) then reference a plain attribute
@@ -92,7 +92,7 @@ def drop_staged_columns(points: DataFrame) -> DataFrame:
     return points.drop(*stale) if stale else points
 
 
-def series_key(name: Column | str = "name", labels: Column | str = "labels") -> Column:
+def series_key(name: str = "name", labels: str = "labels") -> Column:
     """Canonical series string: ``name{k1=v1,k2=v2}`` with keys sorted.
 
     Mirrors ``Variable::ToString()`` (lib/variable.cc:47-69) / Go
@@ -149,7 +149,7 @@ def events_to_points(events: DataFrame) -> DataFrame:
     ``interface=``, config.txt:32-35).
     """
     # Stage the JSON extraction AND the two label scalars as real
-    # projection columns (r15, guide §1.2/§2.3): every downstream
+    # projection columns: every downstream
     # reference — the label map, the canonical key, a label filter — then
     # reads a plain attribute. Staging matters twice over: (a) the value
     # is computed once per row instead of once per referencing
@@ -172,9 +172,8 @@ def events_to_points(events: DataFrame) -> DataFrame:
     k_ok = k_val.isNotNull()
     u_ok = uid.isNotNull()
     # Null labels dropped by BRANCHING between literal maps instead of
-    # a map_filter HOF (r14 optimization, guide §4.1 — HOF lambdas are
-    # interpreted, and this map feeds every tsdb query's series_key
-    # HOFs downstream): measured −0.08..-0.16 s per query at sf0.1 on
+    # a map_filter HOF (HOF lambdas are interpreted, and this map feeds
+    # every tsdb query's series_key HOFs downstream): measured −0.08..-0.16 s per query at sf0.1 on
     # the projection+series_key pass; output maps are entry-for-entry
     # identical for every null pattern (pinned in tests/test_model.py).
     labels = (

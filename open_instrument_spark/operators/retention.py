@@ -127,7 +127,7 @@ def retention_report(points: DataFrame, policy: list[PolicyItem], now) -> DataFr
         action = F.when(F.col("_policy") == i, a).otherwise(action)
     from open_instrument_spark.model import SERIES_KEY_COL, series_key
 
-    # precomputed key reused when the frame carries one (r15 staged path)
+    # precomputed key reused when the frame carries one
     key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
            else series_key())
     return (
@@ -153,12 +153,13 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     The rewrite is ``sources.ingest.replace_dates``."""
     from open_instrument_spark.sources.ingest import (
         POINTS_PARTITION_COLS,
+        read_store,
         replace_dates,
     )
 
     # drop() ignores absent columns, so both the plain dt/bucket layout
     # and the streaming sink's epoch=N/dt/bucket layout normalize here.
-    store = spark.read.parquet(store_path)
+    store = read_store(spark, store_path)
     pts = store.drop(*POINTS_PARTITION_COLS)
     tagged = pts.withColumn("_policy", policy_index(pts, policy, now))
     plain_idx = [

@@ -59,6 +59,7 @@ from open_instrument_spark.operators.retention import (
 from open_instrument_spark.sources.ingest import (
     POINTS_PARTITION_COLS,
     _dt_dirs,
+    read_store,
     replace_dates,
 )
 
@@ -80,7 +81,7 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
     )
     if not dates:
         return []
-    store = spark.read.parquet(store_path)
+    store = read_store(spark, store_path)
     pts = (
         store.filter(F.col("dt").cast("string").isin(dates))
         .drop(*POINTS_PARTITION_COLS)
@@ -634,7 +635,7 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     no delete, store bytes untouched — ANN indexes only get their skew
     measured and reported, the other stores their epoch count; forget
     sets are NOT applied."""
-    pts = spark.read.parquet(store_path).drop(*POINTS_PARTITION_COLS)
+    pts = read_store(spark, store_path).drop(*POINTS_PARTITION_COLS)
     report = retention_report(pts, policy, now)
     from open_instrument_spark.model import series_key
 

@@ -1,6 +1,5 @@
-"""Thin JSON serving endpoint for /get, /list, /add — the one surface
-every reference user touches that had no analog here (judge r11
-what's-missing #1).
+"""Thin JSON serving endpoint for /get, /list, /add — the surface every
+reference user touches.
 
 The reference routes HTTP POST bodies of base64(protobuf) to handlers
 (server/store.cc:72-74 registers /get,/add,/list; Go go/src/store.go:67)
@@ -33,13 +32,11 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, Row
 
+from open_instrument_spark.model import POINTS_SCHEMA
 from open_instrument_spark.plans.api import GetRequest, get as api_get
 from open_instrument_spark.session import local_df
 from open_instrument_spark.operators.select import list_series
 from open_instrument_spark.sources.ingest import ingest_batch
-
-POINTS_SCHEMA = ("name string, labels map<string,string>, ts timestamp, "
-                 "dval double, sval string")
 
 # proto SampleType (lib/openinstrument.proto:24-52) → operator kind.
 # AVERAGE follows the C++ query path (UniformTimeSeries interpolation,
@@ -211,6 +208,10 @@ def points_from_add_json(spark, obj: dict) -> DataFrame:
     for s in obj.get("stream", []):
         var = s["variable"]
         name = var["name"] if isinstance(var, dict) else var
+        if name is None:
+            # a nameless stream never passes validation (S3), and the
+            # points schema's name is non-nullable
+            continue
         labels = (var.get("label") or {}) if isinstance(var, dict) else {}
         for v in s.get("value", []):
             rows.append(Row(
@@ -240,8 +241,7 @@ def add_json(spark, obj: dict, sink, source_host: str | None = None) -> dict:
 # buffer unbounded bytes into the serving process. Overridable per
 # server (serve(max_body_bytes=...)); the reference's own handler reads
 # the whole body too but sits behind a frontend that enforces limits —
-# this boundary makes the dev server safe to expose in tests (r13,
-# judge r12 "Next round" #8).
+# this boundary makes the dev server safe to expose in tests.
 MAX_BODY_BYTES = 8 * 1024 * 1024
 
 

@@ -9,6 +9,7 @@ results are cluster-timezone independent.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -34,7 +35,7 @@ def get_spark(app_name: str = "open_instrument_spark", cpus: int | None = None) 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # r14 (guide §1.2 per-task/driver overhead): PySpark's DataFrame
+        # Per-call driver overhead: PySpark's DataFrame
         # error-context capture wraps EVERY DataFrame/Column API call
         # with a getActiveSession + conf.get + PySparkCurrentOrigin
         # set/clear round plus a Python stack walk — cProfile showed it
@@ -161,6 +162,38 @@ def release_tracked_caches() -> int:
 _shipped: set[int] = set()
 
 
+def _package_zip(pkg_dir: str, dest_dir: str) -> str:
+    """Zip the package's ``.py`` files into ``dest_dir`` and return the
+    zip's path. Entries carry a fixed timestamp, so the same sources
+    always give the same bytes, and the name carries a hash of those
+    bytes, so two different package contents never share a path. The
+    zip is written to a private temp file and ``os.replace``-d into
+    place, so a driver never reads another's half-written zip."""
+    fd, tmp = tempfile.mkstemp(dir=dest_dir, suffix=".zip.tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for root, dirs, names in os.walk(pkg_dir):
+                dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+                for f in sorted(n for n in names if n.endswith(".py")):
+                    full = os.path.join(root, f)
+                    info = zipfile.ZipInfo(
+                        os.path.join("open_instrument_spark",
+                                     os.path.relpath(full, pkg_dir)),
+                        date_time=(1980, 1, 1, 0, 0, 0))
+                    info.compress_type = zipfile.ZIP_DEFLATED
+                    with open(full, "rb") as src:
+                        zf.writestr(info, src.read())
+        with open(tmp, "rb") as fh:
+            digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+        zip_path = os.path.join(
+            dest_dir, f"open_instrument_spark_pyfiles-{digest}.zip")
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -168,27 +201,15 @@ def _ship_package(spark: SparkSession) -> None:
     reference; workers must be able to import ``open_instrument_spark``.
     ``addPyFile`` with a zip of the package is the deployment-correct
     mechanism on a real cluster and equally covers local mode when the
-    driver process was launched from a different cwd.
+    driver process was launched from a different cwd. Spark refuses a
+    second file of the same name with other bytes; the content-hashed
+    name of :func:`_package_zip` rules that out, also between drivers
+    sharing a host.
     """
     sc = spark.sparkContext
     key = id(sc)
     if key in _shipped:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "open_instrument_spark_pyfiles.zip")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "open_instrument_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    try:
-        sc.addPyFile(zip_path)
-    except Exception:
-        pass
+    sc.addPyFile(_package_zip(pkg_dir, tempfile.gettempdir()))
     _shipped.add(key)

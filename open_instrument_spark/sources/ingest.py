@@ -26,7 +26,11 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from open_instrument_spark.model import drop_staged_columns, series_key
+from open_instrument_spark.model import (
+    POINTS_SCHEMA,
+    drop_staged_columns,
+    series_key,
+)
 
 NAME_RE = r"^/\S+$"  # starts with /, no whitespace, len>=2 (store.cc:414-417)
 
@@ -46,7 +50,7 @@ POINTS_PARTITION_COLS = ("dt", "bucket", "name_bucket", "epoch")
 
 def _key_expr(points: DataFrame):
     """Canonical key expression — the frame's precomputed ``series_key``
-    column when it carries one (r15 staged fast path), else the render."""
+    column when it carries one (model.with_series_key), else the render."""
     return (F.col("series_key") if "series_key" in points.columns
             else series_key())
 
@@ -60,7 +64,7 @@ def default_hostname(points: DataFrame, source_host) -> DataFrame:
         F.map_concat(F.coalesce(F.col("labels"), F.create_map()), F.create_map(F.lit("hostname"), host))
     )
     # the labels map changes → any precomputed series_key/_label_* column
-    # would be stale (r15, model.drop_staged_columns)
+    # would be stale (model.drop_staged_columns)
     return drop_staged_columns(points.withColumn("labels", labels))
 
 
@@ -239,20 +243,29 @@ def write_points_bucketed(points: DataFrame, table: str, n_buckets: int = 64,
 
 def read_store(spark, path: str, variable: str | None = None,
                name_buckets: int | None = None) -> DataFrame:
-    """Read a write_points store, pruning partitions from the variable
-    pattern (F1): an exact (non-glob) name on a name-bucketed store
-    folds ``name_bucket = pmod(hash(name), N)`` to a literal partition
-    filter — Spark's FileIndex then skips every other name bucket's
-    files, the analog of the reference skipping unindexed blocks
-    (datastore.go:274-277; bloom variant indexed_store_file.go:110-117).
-    ``name_buckets`` must be the writer's value; it is deliberately NOT
-    inferred from the directory layout (max present bucket + 1 would
-    undercount a store whose names happen to miss a bucket, silently
-    misrouting the filter). Glob names (F2) and label-only patterns
-    can't prune a hash bucket; they fall back to a full predicate scan,
-    still dt-prunable by time filters.
+    """Read a points store written by write_points or the streaming sink.
+
+    The data columns are read with ``model.POINTS_SCHEMA``, so no read
+    launches a Parquet footer-inference job; the partition columns
+    (``dt``, ``bucket``, ``name_bucket``, ``epoch``) are still inferred
+    from the directory names. An existing directory with no files reads
+    as an empty points frame; a missing path raises. Date pruning comes
+    from ``operators.select.time_range``, which bounds ``dt`` with the
+    ts window.
+
+    ``variable`` (F1) prunes further: an exact (non-glob) name on a
+    name-bucketed store folds ``name_bucket = pmod(hash(name), N)`` to a
+    literal partition filter — Spark's FileIndex then skips every other
+    name bucket's files, the analog of the reference skipping unindexed
+    blocks (datastore.go:274-277; bloom variant
+    indexed_store_file.go:110-117). ``name_buckets`` must be the
+    writer's value; it is deliberately NOT inferred from the directory
+    layout (max present bucket + 1 would undercount a store whose names
+    happen to miss a bucket, silently misrouting the filter). Glob names
+    (F2) and label-only patterns can't prune a hash bucket; they fall
+    back to a predicate scan.
     """
-    df = spark.read.parquet(path)
+    df = spark.read.schema(POINTS_SCHEMA).parquet(path)
     if variable is None:
         return df
     from open_instrument_spark.functions.match import VariableMatcher
@@ -278,7 +291,7 @@ def compact(spark, path: str, n_buckets: int = 16) -> None:
     (the reference's block compaction, datastore.go:687-705, reduced to
     a repartition+rewrite). Also folds away the streaming sink's
     per-epoch partitioning (drop() ignores absent columns)."""
-    df = spark.read.parquet(path)
+    df = read_store(spark, path)
     write_points(
         df.drop(*POINTS_PARTITION_COLS),
         path + "_compacted", n_buckets, mode="overwrite",
@@ -301,18 +314,19 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
     ``rows`` (points schema) — the one in-place rewrite protocol of the
     points store, shared by retention and date compaction.
 
-    ``store`` is the caller's ``spark.read.parquet(store_path)`` frame.
-    The rows are staged to disk BEFORE any source partition is deleted
-    (a lazy plan re-reading deleted files, or an evicted cache, would
-    corrupt the rewrite). The dates' directories then go at both layout
-    depths, and the staged rows are appended at the store's own
-    partition depth: an epoch-layout store gets a fresh NEGATIVE epoch
-    below every existing one. The streaming sink's epochs are its
-    checkpointed batch ids (always >= 0), so epoch ids never recycle
-    and a resumed stream can never overwrite a rewrite. Single writer:
-    run from the maintenance loop that owns the store. Local-FS
-    removal; on a cluster the same steps go through the Hadoop
-    FileSystem API.
+    ``store`` is the caller's ``read_store(spark, store_path)`` frame;
+    its columns tell whether the store is name-bucketed. The rows are
+    staged to disk BEFORE any source partition is deleted (a lazy plan
+    re-reading deleted files, or an evicted cache, would corrupt the
+    rewrite) and read back through ``read_store``. The dates'
+    directories then go at both layout depths, and the staged rows are
+    appended at the store's own partition depth: an epoch-layout store
+    gets a fresh NEGATIVE epoch below every existing one. The streaming
+    sink's epochs are its checkpointed batch ids (always >= 0), so
+    epoch ids never recycle and a resumed stream can never overwrite a
+    rewrite. Single writer: run from the maintenance loop that owns the
+    store. Local-FS removal; on a cluster the same steps go through the
+    Hadoop FileSystem API.
 
     A name-bucketed store is rejected before anything is staged: its N
     is not recoverable from the directory names, and a rewrite without
@@ -342,6 +356,6 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
             except ValueError:
                 pass
         dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(rows.sparkSession.read.parquet(staging), dest,
+    write_points(read_store(rows.sparkSession, staging), dest,
                  n_buckets=n_buckets, mode="append")
     shutil.rmtree(staging, ignore_errors=True)

@@ -4,7 +4,8 @@ The reference's storage layer (indexed block files with per-variable
 offset/min-max-ts indexes, server/record_log.cc:187-271) is subsumed by
 Parquet: row-group min/max statistics give the same time-range skipping,
 and the FileIndex gives the same file pruning (SURVEY.md §4). Loading is
-therefore just ``spark.read.parquet`` — Catalyst owns the scan.
+therefore just ``spark.read.parquet`` with the schema taken from the
+file's Arrow footer — Catalyst owns the scan.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from open_instrument_spark.model import events_to_points
 
@@ -35,22 +37,28 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 @lru_cache(maxsize=256)
-def _nano_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as TIMESTAMP(NANOS) in the parquet footer. Spark has
-    no nanos timestamp type; we read them as long (legacy.parquet
-    .nanosAsLong) and convert to µs TimestampType — truncating like
-    DuckDB/Arrow do on ns→µs."""
-    try:
-        import pyarrow.parquet as pq
+def _read_schema(path: str, infer_ntz: bool) -> tuple[T.StructType, tuple[str, ...]]:
+    """(Spark read schema, TIMESTAMP(NANOS) columns) of one parquet
+    file, built from its Arrow schema so loading launches no footer
+    inference job. Types are the ones Spark's inference gives, with
+    ``infer_ntz`` standing for ``spark.sql.parquet.inferTimestampNTZ
+    .enabled`` (tz-naive timestamps), except nanos: Spark has no nanos
+    timestamp type, so those columns read as long
+    (legacy.parquet.nanosAsLong) and ``Tables.table`` converts them to
+    µs TimestampType — truncating like DuckDB/Arrow do on ns→µs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-        schema = pq.read_schema(path)
-        return tuple(
-            f.name
-            for f in schema
-            if str(f.type).startswith("timestamp[ns")
-        )
-    except Exception:
-        return ()
+    fields, nanos = [], []
+    for f in pq.read_schema(path):
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            nanos.append(f.name)
+            dtype = T.LongType()
+        else:
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=infer_ntz)
+        fields.append(T.StructField(f.name, dtype, True))
+    return T.StructType(fields), tuple(nanos)
 
 
 @dataclass
@@ -60,12 +68,14 @@ class Tables:
 
     def table(self, name: str) -> DataFrame:
         path = os.path.join(self.sf_dir, f"{name}.parquet")
-        df = self.spark.read.parquet(path)
-        for c in _nano_ts_columns(path):
-            if c in df.columns:
-                # integer `div` keeps full precision (double division of
-                # epoch-nanos would round the microsecond).
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        infer_ntz = self.spark.conf.get(
+            "spark.sql.parquet.inferTimestampNTZ.enabled").lower() == "true"
+        schema, nanos = _read_schema(path, infer_ntz)
+        df = self.spark.read.schema(schema).parquet(path)
+        for c in nanos:
+            # integer `div` keeps full precision (double division of
+            # epoch-nanos would round the microsecond).
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         return df
 
     def __getattr__(self, name: str) -> DataFrame:

@@ -883,3 +883,64 @@ def test_label_aggregations_filter_on_staged_scalars(spark, name,
     assert count_in(pushed_filter, "get_json_object") == json_calls
     if pushed is not None:
         assert pushed in lines[scan]
+
+
+def _two_day_points(spark):
+    import datetime as dt
+
+    base = dt.datetime(2024, 3, 1)
+    rows = [
+        (f"/cpu/{k}", {"host": h}, base + dt.timedelta(minutes=90 * i),
+         float(i), None)
+        for k in ("user", "sys") for h in ("a", "b") for i in range(32)
+    ]
+    return spark.createDataFrame(
+        rows, "name string, labels map<string,string>, ts timestamp, "
+              "dval double, sval string")
+
+
+@pytest.mark.parametrize("layout", ["write_points", "streaming_epochs"])
+def test_store_get_builds_without_jobs_and_prunes_dates(spark, tmp_path,
+                                                        layout):
+    """A /get on a points store builds without launching a Spark job
+    (read_store knows the schema; no footer inference), and its 12 h
+    window reaches the scan as a ``dt`` partition filter, on both store
+    layouts: write_points' dt=/bucket= and the streaming sink's
+    epoch=N/dt=/bucket=."""
+    import datetime as dt
+
+    from open_instrument_spark.plans.api import GetRequest, get
+    from open_instrument_spark.sources.ingest import read_store, write_points
+
+    pts = _two_day_points(spark)
+    store = str(tmp_path / "store")
+    if layout == "write_points":
+        write_points(pts, store, n_buckets=2)
+    else:  # the sink writes each epoch with write_points under epoch=N
+        half = dt.datetime(2024, 3, 2)
+        write_points(pts.filter(F.col("ts") < half), f"{store}/epoch=0",
+                     n_buckets=2)
+        write_points(pts.filter(F.col("ts") >= half), f"{store}/epoch=1",
+                     n_buckets=2)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    hi = dt.datetime(2024, 3, 2, 23, 0)
+    df = get(read_store(spark, store),
+             GetRequest("/cpu/*", min_timestamp=hi - dt.timedelta(hours=12),
+                        max_timestamp=hi, mutations=[("rate", None)]))
+    assert sched.nextJobId() == before
+    plan = plan_of(df)
+    part = plan[plan.index("PartitionFilters: ["):]
+    part = part[:part.index("]")]
+    assert "dt#" in part and ">=" in part and "<=" in part, part
+
+
+def test_registry_table_loads_without_jobs(spark, tables):
+    """Tables.table passes the schema built from the file's Arrow footer,
+    so loading a registry table launches no Parquet inference job."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    events = tables.table("events")
+    assert sched.nextJobId() == before
+    assert events.schema == spark.read.parquet(
+        f"{SF_SMOKE}/events.parquet").schema

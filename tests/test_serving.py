@@ -187,3 +187,68 @@ def test_serving_request_limits_and_malformed_json(spark, pts):
         assert code == 400 and not got["success"]
     finally:
         srv.shutdown()
+
+
+def test_get_date_bound_is_exact_at_midnight(spark, tmp_path):
+    """The /get time range bounds the store's ``dt`` partition with the
+    dates of its ts bounds; the rows must equal the same request on the
+    frame without ``dt`` for windows that start or end exactly at
+    midnight and windows that span dates."""
+    from open_instrument_spark.plans.api import GetRequest, get
+    from open_instrument_spark.sources.ingest import read_store, write_points
+
+    eps = dt.timedelta(milliseconds=1)
+    d1, d2, d3 = (BASE + dt.timedelta(days=i) for i in range(3))
+    instants = [t + o for t in (d1, d2, d3, d3 + dt.timedelta(days=1))
+                for o in (-eps, dt.timedelta(0), eps)] + [d2 + dt.timedelta(hours=12)]
+    rows = [("/m", {"host": h}, t, float(i), None)
+            for i, t in enumerate(instants) for h in ("a", "b")]
+    store = str(tmp_path / "store")
+    write_points(spark.createDataFrame(rows, serving.POINTS_SCHEMA), store,
+                 n_buckets=2)
+    pts = read_store(spark, store)
+    windows = [
+        (d2, d2 + dt.timedelta(hours=12)),     # starts at midnight
+        (d1 + dt.timedelta(hours=12), d2),     # ends at midnight
+        (d2, d2),                              # one instant, at midnight
+        (d2 - eps, d3 + eps),                  # spans three dates
+        (d1, d3),                              # midnight to midnight
+        ("2024-01-02 00:00:00", "2024-01-03 00:00:00"),  # string bounds
+        (d2 + eps, None), (None, d2 - eps),    # one-sided
+    ]
+    for lo, hi in windows:
+        def rows_of(frame):
+            req = GetRequest("/m", min_timestamp=lo, max_timestamp=hi)
+            return sorted(get(frame, req).select(
+                "name", "ts", "dval", F.col("labels")["host"]).collect())
+        got = rows_of(pts)
+        assert got == rows_of(pts.drop("dt")), (lo, hi)
+        assert got, (lo, hi)
+
+
+def test_read_store_empty_dir_reads_empty_and_missing_raises(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from open_instrument_spark.model import POINTS_SCHEMA
+    from open_instrument_spark.sources.ingest import read_store
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    df = read_store(spark, str(empty))
+    assert df.columns == POINTS_SCHEMA.fieldNames()
+    assert df.count() == 0
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_store(spark, str(tmp_path / "missing"))
+
+
+def test_add_drops_nameless_stream_before_the_frame(spark):
+    """A stream without a variable name can never pass validation; it is
+    dropped while the /add rows are built, because the points schema's
+    name column is non-nullable."""
+    obj = {"stream": [
+        {"variable": None, "value": [{"timestamp": MS, "double_value": 1}]},
+        {"variable": {"name": "/sys/cpu", "label": {"host": "a"}},
+         "value": [{"timestamp": MS, "double_value": 2}]},
+    ]}
+    rows = serving.points_from_add_json(spark, obj).collect()
+    assert [(r["name"], r["dval"]) for r in rows] == [("/sys/cpu", 2.0)]

@@ -37,3 +37,29 @@ def test_debugging_conf_round_trips_and_cache_pinned(spark):
         "the debugging-enablement cache is not pinned False — wrapped "
         "DataFrame API calls are still paying the capture overhead"
     )
+
+
+def test_package_zip_path_is_content_hashed(tmp_path):
+    """Drivers sharing a host ship the package through one temp dir: a
+    zip path names exactly one package content, and the same content
+    always gives the same path and bytes."""
+    from open_instrument_spark.session import _package_zip
+
+    def package(name, body):
+        d = tmp_path / name
+        (d / "sub").mkdir(parents=True)
+        (d / "__init__.py").write_text("")
+        (d / "sub" / "m.py").write_text(body)
+        return str(d)
+
+    out = tmp_path / "out"
+    out.mkdir()
+    a = _package_zip(package("a", "X = 1\n"), str(out))
+    b = _package_zip(package("b", "X = 2\n"), str(out))
+    a2 = _package_zip(package("a2", "X = 1\n"), str(out))
+    assert a != b
+    assert a == a2
+    with open(a, "rb") as fa, open(b, "rb") as fb:
+        assert fa.read() != fb.read()
+    assert sorted(p.name for p in out.iterdir()) == sorted(
+        {a.rsplit("/", 1)[1], b.rsplit("/", 1)[1]})
