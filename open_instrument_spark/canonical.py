@@ -56,17 +56,6 @@ _ESCAPE_REPL = r"\\$1"
 
 
 # ---------------------------------------------------------------- render
-def quote_label_value(v: Column) -> Column:
-    """Quote a label value iff the canonical grammar requires it —
-    JVM-side (regexp + concat, whole-stage codegen)."""
-    quoted = F.concat(
-        F.lit('"'), F.regexp_replace(v, _ESCAPE_RE, _ESCAPE_REPL), F.lit('"')
-    )
-    return F.when(
-        v.rlike(NON_VALUE_CHAR_RE) | (v != F.trim(v)), quoted
-    ).otherwise(v)
-
-
 def _sql_str(s: str) -> str:
     """``s`` as a Spark SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -76,13 +65,22 @@ def _sql_ident(c: str) -> str:
     return "`" + c.replace("`", "``") + "`"
 
 
-# quote_label_value applied to the lambda variable ``e.value``, as SQL.
-_QUOTED_VALUE_SQL = (
-    f"CASE WHEN e.value RLIKE {_sql_str(NON_VALUE_CHAR_RE)} "
-    "OR e.value != trim(e.value) "
-    f"THEN concat('\"', regexp_replace(e.value, {_sql_str(_ESCAPE_RE)}, "
-    f"{_sql_str(_ESCAPE_REPL)}), '\"') ELSE e.value END"
-)
+def _quoted_value_sql(v: str) -> str:
+    """THE quote rule as SQL over the operand ``v``: ``v`` double-quoted,
+    with ``,`` ``"`` ``\\`` escaped, iff it holds a non-value char or is
+    not trim-stable; ``v`` itself otherwise (null stays null)."""
+    return (
+        f"CASE WHEN {v} RLIKE {_sql_str(NON_VALUE_CHAR_RE)} "
+        f"OR {v} != trim({v}) "
+        f"THEN concat('\"', regexp_replace({v}, {_sql_str(_ESCAPE_RE)}, "
+        f"{_sql_str(_ESCAPE_REPL)}), '\"') ELSE {v} END"
+    )
+
+
+def quote_label_value(col: str) -> Column:
+    """The string column ``col`` quoted iff the canonical grammar
+    requires it — JVM-side (regexp + concat, whole-stage codegen)."""
+    return F.expr(_quoted_value_sql(_sql_ident(col)))
 
 
 def canonical_variable(name: str, labels: str) -> Column:
@@ -90,8 +88,8 @@ def canonical_variable(name: str, labels: str) -> Column:
     string.
 
     Pure Catalyst expression (map_entries → array_sort → filter →
-    transform → array_join, values quoted by the rule of
-    :func:`quote_label_value`): stays inside whole-stage codegen, usable
+    transform → array_join, values quoted by
+    :func:`_quoted_value_sql`): stays inside whole-stage codegen, usable
     as a shuffle/groupBy key at 100 TB with no Python involvement. It is
     parsed from one SQL text, so rendering it costs one gateway call
     instead of one per builder call. Null or empty label maps (and maps
@@ -105,7 +103,8 @@ def canonical_variable(name: str, labels: str) -> Column:
     return F.expr(
         f"CASE WHEN size({entries}) > 0 THEN concat({n}, '{{', "
         f"array_join(transform({entries}, "
-        f"e -> concat(e.key, '=', {_QUOTED_VALUE_SQL})), ','), '}}') "
+        f"e -> concat(e.key, '=', {_quoted_value_sql('e.value')})), ','), "
+        "'}') "
         f"ELSE {n} END"
     )
 
@@ -122,7 +121,7 @@ def canonical_variable_py(name: str, labels: dict[str, str] | None) -> str:
         if v is None or v == "":
             continue
         if re.search(NON_VALUE_CHAR_RE, v) or v != v.strip():
-            v = '"' + re.sub(r'([,"\\])', r"\\\1", v) + '"'
+            v = '"' + re.sub(_ESCAPE_RE, r"\\\1", v) + '"'
         parts.append(f"{k}={v}")
     return f"{name}{{{','.join(parts)}}}" if parts else name
 

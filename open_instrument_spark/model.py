@@ -193,8 +193,8 @@ def events_to_points(events: DataFrame) -> DataFrame:
     # here; quoting goes through THE shared quote kernel. Bit-equality
     # with canonical_variable is pinned over adversarial label values in
     # tests/test_model.py and over the full sf0.01/sf0.1 frames.
-    qk = quoted_label_value(k_val)
-    qu = quoted_label_value(uid)
+    qk = quoted_label_value(STAGED_LABEL_PREFIX + "k")
+    qu = quoted_label_value(STAGED_LABEL_PREFIX + "user_id")
     sk = (
         F.when(k_ok & u_ok, F.concat(
             name, F.lit("{k="), qk, F.lit(",user_id="), qu, F.lit("}")))

@@ -1,11 +1,12 @@
-"""Decomposition probe for the two label-grouped aggregations the r14
-verdict marked perf-weak (agg_avg_by_label_user /
-agg_retained_single_labels), plus a prototype A/B of the series_key
-render (HOF canonical vs events-shape literal branch).
+"""Decomposition probe for the two label-grouped aggregations
+(agg_avg_by_label_user / agg_retained_single_labels), plus an A/B of the
+series_key render: the generic HOF ``canonical_variable`` against the
+literal-branch key ``events_to_points`` stages, with a gate that the two
+agree.
 
 Each stage is materialized with the noop sink, min of N, interleaved
-round-robin so host spikes land evenly (the r14 lesson: cross-run
-deltas on sub-3s queries are not evidence).
+round-robin so host spikes land evenly (cross-run deltas on sub-3s
+queries are not evidence).
 
 Usage: python tools/label_agg_probe.py [--sf DIR] [--n N]
 """
@@ -23,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from open_instrument_spark import registry  # noqa: E402
-from open_instrument_spark.canonical import canonical_variable, quote_label_value  # noqa: E402
+from open_instrument_spark.canonical import canonical_variable  # noqa: E402
 from open_instrument_spark.model import events_to_points  # noqa: E402
 from open_instrument_spark.operators.mutate import _bucket_start  # noqa: E402
 from open_instrument_spark.session import get_spark, prepare  # noqa: E402
@@ -32,27 +33,6 @@ from open_instrument_spark.sources.tables import load_tables  # noqa: E402
 
 def noop(df):
     df.write.mode("overwrite").format("noop").save()
-
-
-def fast_events_series_key(events_pts):
-    """Literal-branch render of the canonical key for the events shape:
-    labels are one of 4 literal create_map branches, so the key is a
-    4-way branch of plain concats — no map_entries/sort/filter/transform
-    HOFs. Quoting kept via the shared quote kernel."""
-    # rebuild from the raw events frame columns to mirror events_to_points
-    kv = F.get_json_object("props", "$.k")
-    uid = F.col("user_id").cast("string")
-    k_val = F.when(kv.cast("int") % 3 != 0, kv)
-    k_ok = k_val.isNotNull()
-    u_ok = uid.isNotNull()
-    name = F.concat(F.lit("/events/"), F.col("event_type"))
-    qk, qu = quote_label_value(k_val), quote_label_value(uid)
-    return (
-        F.when(k_ok & u_ok, F.concat(name, F.lit("{k="), qk, F.lit(",user_id="), qu, F.lit("}")))
-        .when(k_ok, F.concat(name, F.lit("{k="), qk, F.lit("}")))
-        .when(u_ok, F.concat(name, F.lit("{user_id="), qu, F.lit("}")))
-        .otherwise(name)
-    )
 
 
 def main() -> None:
@@ -89,22 +69,14 @@ def main() -> None:
         "sk_canonical": lambda: pts.select(
             canonical_variable("name", "labels").alias("series_key"), "ts", "dval"
         ),
-        "sk_fast": lambda: events.select(
-            fast_events_series_key(events).alias("series_key"),
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("value").cast("double").alias("dval"),
-        ),
+        "sk_fast": lambda: pts.select("series_key", "ts", "dval"),
         # a representative window consumer both ways: lag over the key
         "agg_sum_by_name": lambda: q("agg_sum_by_name"),
     }
 
     # equality gate for the fast render: must be zero
-    mism = (
-        pts.select(canonical_variable("name", "labels").alias("a"))
-        .withColumn("_r", F.monotonically_increasing_id())
-    )
     a = pts.select(canonical_variable("name", "labels").alias("a"))
-    b = events.select(fast_events_series_key(events).alias("b"))
+    b = pts.select(F.col("series_key").alias("b"))
     n_diff = (
         a.withColumn("_k", F.lit(1)).groupBy("a").count()
         .join(
