@@ -307,15 +307,14 @@ def value_stream_calculation(streams, interval_us: int, calcfunc):
         would re-anchor; unrealizable for real telemetry timestamps).
     Returns (out_ts, out_vals) python lists.
 
-    This is the VECTORIZED walk (late r8): per while-round the stream
-    scan is numpy mask arithmetic over padded per-stream cursor tables
-    — O(n_streams) C ops per round instead of a Python loop, ~10×
-    faster on metric-fleet group widths. Bucket append order (stream
-    index ascending within each round) and the per-bucket Python float
-    folds are unchanged, so results stay bit-identical to the
-    pure-Python reference walk, which survives as
-    :func:`value_stream_calculation_spec` (randomized-equality-tested
-    against this in test_aggregate_anchored.py)."""
+    This is the VECTORIZED batch walk: per while-round the stream scan
+    is numpy mask arithmetic over padded per-stream cursor tables —
+    O(n_streams) C ops per round instead of a Python loop, ~10× faster
+    on metric-fleet group widths. Bucket append order (stream index
+    ascending within each round) and the per-bucket Python float folds
+    are those of the resumable walk :func:`drift_walk`, so results are
+    bit-identical to :func:`value_stream_calculation_spec`
+    (randomized-equality-tested in test_aggregate_anchored.py)."""
     import numpy as np
 
     n = len(streams)
@@ -366,37 +365,53 @@ def value_stream_calculation(streams, interval_us: int, calcfunc):
     return out_t, out_v
 
 
-def value_stream_calculation_spec(streams, interval_us: int, calcfunc):
-    """The pure-Python reference walk — kept as the executable spec of
-    :func:`value_stream_calculation` (mirrors lib/protobuf.cc:49-85
-    line for line; see that docstring for the semantics)."""
-    its = [0] * len(streams)
+def drift_walk(streams, cursors, anchor, bucket, interval_us, calcfunc,
+               to_completion=True):
+    """The resumable drift-bucket walk (lib/protobuf.cc:49-85, line for
+    line; semantics in :func:`value_stream_calculation`).
+
+    ``streams`` is an ordered list of (ts, vals) sequences; ``cursors``
+    holds each stream's next index and is advanced in place. The walk
+    resumes from an in-flight ``anchor`` (0 = unset) and ``bucket``.
+    With ``to_completion`` it runs to input exhaustion, leaving the
+    final bucket unflushed; without, it stops before any round in which
+    some stream has no point left, because that stream could still
+    produce an earlier-scanned head (the streaming finality boundary).
+    Returns (anchor, bucket, out_ts, out_vals)."""
     out_t: list[int] = []
     out_v: list[float] = []
-    bucket: list[float] = []
-    ts = 0
-    while True:
+    while to_completion or all(
+            k < len(st) for k, (st, _) in zip(cursors, streams)):
         found = False
         found_bracket = False
         for i, (st, sv) in enumerate(streams):
-            k = its[i]
+            k = cursors[i]
             if k >= len(st):
                 continue
             t = int(st[k])
             found = True
-            if not ts:
-                ts = t
-            if ts - interval_us <= t <= ts + interval_us:
+            if not anchor:
+                anchor = t
+            if anchor - interval_us <= t <= anchor + interval_us:
                 found_bracket = True
                 bucket.append(float(sv[k]))
-                its[i] += 1
+                cursors[i] = k + 1
         if not found:
             break
         if not found_bracket and bucket:
-            out_t.append(ts)
+            out_t.append(anchor)
             out_v.append(calcfunc(bucket))
             bucket = []
-            ts = 0
+            anchor = 0
+    return anchor, bucket, out_t, out_v
+
+
+def value_stream_calculation_spec(streams, interval_us: int, calcfunc):
+    """The pure-Python reference walk, kept as the executable spec of
+    :func:`value_stream_calculation`: :func:`drift_walk` run to
+    completion from a fresh state."""
+    _, _, out_t, out_v = drift_walk(
+        streams, [0] * len(streams), 0, [], interval_us, calcfunc)
     return out_t, out_v
 
 

@@ -126,17 +126,8 @@ def _pairwise_chunked(points: DataFrame, out_expr, keep_negative: bool,
     )
 
 
-def rate(points: DataFrame, chunk=None) -> DataFrame:
-    """M1 RATE: (v_i - v_{i-1}) / (t_i - t_{i-1}) per second, negatives
-    dropped (counter-reset suppression, server/store.cc:309).
-
-    ``chunk`` (duration, e.g. "1d"): bound per-task data for arbitrarily
-    long series via the two-phase chunked plan — identical results.
-    """
-    expr = lambda v, pv, t, pt: (v - pv) / (t - pt)  # noqa: E731
-    if chunk is not None:
-        return _pairwise_chunked(points, expr, keep_negative=False, chunk=chunk)
-    return _pairwise(points, expr, keep_negative=False)
+def _per_second(v, pv, t, pt):
+    return (v - pv) / (t - pt)
 
 
 def _dispatch_pairwise(points: DataFrame, expr, keep_negative: bool, chunk) -> DataFrame:
@@ -145,11 +136,19 @@ def _dispatch_pairwise(points: DataFrame, expr, keep_negative: bool, chunk) -> D
     return _pairwise(points, expr, keep_negative)
 
 
+def rate(points: DataFrame, chunk=None) -> DataFrame:
+    """M1 RATE: (v_i - v_{i-1}) / (t_i - t_{i-1}) per second, negatives
+    dropped (counter-reset suppression, server/store.cc:309).
+
+    ``chunk`` (duration, e.g. "1d"): bound per-task data for arbitrarily
+    long series via the two-phase chunked plan — identical results.
+    """
+    return _dispatch_pairwise(points, _per_second, False, chunk)
+
+
 def rate_signed(points: DataFrame, chunk=None) -> DataFrame:
     """M2 RATE_SIGNED: same as RATE, negatives kept (server/store.cc:301-318)."""
-    return _dispatch_pairwise(
-        points, lambda v, pv, t, pt: (v - pv) / (t - pt), True, chunk
-    )
+    return _dispatch_pairwise(points, _per_second, True, chunk)
 
 
 def delta(points: DataFrame, chunk=None) -> DataFrame:

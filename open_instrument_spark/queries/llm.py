@@ -3119,9 +3119,8 @@ def embed_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("embed_knn_graph_store", oracle=_knn_graph_oracle())
 def embed_knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.9 the MATERIALIZED kNN-graph store end-to-end (r14 — judge
-    r13 "What's missing" #1 / "Next round" #3;
-    operators/graphstore.py): build the fifth on-disk store over the
+    """§2.9 the MATERIALIZED kNN-graph store end-to-end
+    (operators/graphstore.py): build the fifth on-disk store over the
     corpus MINUS a deterministic batch, absorb the batch (epoch-pinned,
     per-touched-cell edge rewrite — including the top-k displacement it
     causes for existing members), then READ the stored edges back. The
@@ -3129,11 +3128,11 @@ def embed_knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness, absorb exactness over the union, and the read path, the
     store invariant every graph consumer relies on. The registry's
     first disk-touching gate by design: the store IS the operator.
-    The store lands under the session's temp dir, keyed by the sf tag
-    so driver (sf0.01) / bench (sf0.1) / pytest (sf0.001) runs never
-    collide; every stage writes with OVERWRITE, so reruns are
-    idempotent."""
-    import tempfile
+    The store lands under the SparkContext's own root directory, which
+    Spark deletes on stop, so two Spark applications on one host never
+    share it; inside one context it is keyed by the sf tag, and every
+    stage writes with OVERWRITE, so reruns are idempotent."""
+    from pyspark import SparkFiles
 
     from open_instrument_spark.operators.graphstore import (
         absorb_into_knn_graph_store,
@@ -3148,7 +3147,7 @@ def embed_knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % 7 != 0)
     batch = emb.filter(F.col("vec_id") % 7 == 0)
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = os.path.join(tempfile.gettempdir(), f"oi_graph_store_{tag}")
+    path = os.path.join(SparkFiles.getRootDirectory(), f"oi_graph_store_{tag}")
     build_knn_graph_store(base, path, seeded_centroids(64, 32, 7), k=5)
     absorb_into_knn_graph_store(path, batch, epoch=0)
     return read_knn_graph_edges(spark, path)

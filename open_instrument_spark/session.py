@@ -14,6 +14,7 @@ import os
 import tempfile
 import zipfile
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -92,10 +93,7 @@ def prepare(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # per-call error-context capture off (see get_spark) — plan
     # construction is part of every driver-timed query invocation
     _disable_dataframe_debugging(spark)
@@ -147,14 +145,17 @@ def track_persist(df):
 
 
 def release_tracked_caches() -> int:
-    """Unpersist every engine-tracked intermediate; returns the count."""
+    """Unpersist every engine-tracked intermediate; returns the count.
+    An intermediate whose SparkContext was stopped has nothing left to
+    release: its unpersist raises a ``Py4JJavaError`` (a null
+    block-manager endpoint) and is not counted."""
     n = 0
     while _TRACKED_PERSISTS:
         df = _TRACKED_PERSISTS.pop()
         try:
             df.unpersist()
             n += 1
-        except Exception:
+        except Py4JJavaError:
             pass
     return n
 

@@ -1,18 +1,19 @@
 """Stateful streaming A1 anchored aggregation — the streaming twin of
-``aggregate.aggregate_anchored`` (ninth member of the stateful family),
-covering the last batch-only semantic with a stream operator.
+``aggregate.aggregate_anchored``.
 
 The batch kernel walks a GROUP's merged stream set through the
 reference-exact drift-bucket loop (lib/protobuf.cc:49-85 — see
-``aggregate.value_stream_calculation`` for the reproduced quirks). That
-walk is fundamentally less streamable than the per-series family
-members: the bucket ANCHOR is the current point of the first
-non-exhausted stream in stream-scan order, so whether a round's anchor
-is final depends on whether a scan-earlier stream will ever produce
-another point — knowledge only a closed group has. The reference runs
-this calculation at REQUEST time over a fully-gathered stream set
-(server/store.cc:155-252 materializes the group in RAM before walking);
-the streaming twin therefore models bounded EPOCHS:
+``aggregate.value_stream_calculation`` for the reproduced quirks); this
+module resumes the same walk, ``aggregate.drift_walk``, across
+micro-batches. That walk is fundamentally less streamable than the
+per-key states of ``streaming.recurrence``: the bucket ANCHOR is the
+current point of the first non-exhausted stream in stream-scan order, so
+whether a round's anchor is final depends on whether a scan-earlier
+stream will ever produce another point — knowledge only a closed group
+has. The reference runs this calculation at REQUEST time over a
+fully-gathered stream set (server/store.cc:155-252 materializes the
+group in RAM before walking); the streaming twin therefore models
+bounded EPOCHS:
 
 - State per group = the walk's in-flight (anchor, bucket) plus each
   series' unconsumed point buffer — the same working set the reference
@@ -36,16 +37,20 @@ the streaming twin therefore models bounded EPOCHS:
   (caveat: a pending processing-time timeout keeps an availableNow run
   alive with no-data micro-batches until it fires — don't combine).
 
-Ordering contract (family-wide, plus two group-level clauses): rows
-sorted (ts, dval) within each micro-batch; a sample at or before a
-series' last accepted position is dropped (late data belongs to the
-batch/compaction pass); a series first seen mid-epoch joins the walk
-from its first point forward — if its key sorts before the current
-anchor stream, already-final buckets are not retroactively re-anchored
-(the reference's store-arrival stream order has the same
-indeterminacy; the batch twin pins sorted series_key, D-note).
-Closed-stream output (all series present from the first batch) equals
-the batch operator exactly — asserted by
+The timeout, the close and ``state.remove()`` are why this module keeps
+its own ``applyInPandasWithState`` emitter instead of a step of
+``streaming.recurrence._run``, whose states never time out or close.
+
+Ordering contract (that of ``streaming.recurrence``, plus two
+group-level clauses): rows sorted (ts, dval) within each micro-batch; a
+sample at or before a series' last accepted position is dropped (late
+data belongs to the batch/compaction pass); a series first seen
+mid-epoch joins the walk from its first point forward — if its key sorts
+before the current anchor stream, already-final buckets are not
+retroactively re-anchored (the reference's store-arrival stream order
+has the same indeterminacy; the batch twin pins sorted series_key,
+D-note). Closed-stream output (all series present from the first batch)
+equals the batch operator exactly — asserted by
 ``test_streaming_anchored_matches_batch_across_batches``.
 """
 
@@ -57,6 +62,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from open_instrument_spark.functions.durations import parse_duration_ms
+from open_instrument_spark.operators.aggregate import _drift_calc_fns, drift_walk
+
 OUT_SCHEMA = "name string, ts timestamp, value double"
 STATE_SCHEMA = (
     "anchor long, bucket array<double>, sers array<string>, "
@@ -64,43 +72,6 @@ STATE_SCHEMA = (
     "buf_ts array<array<long>>, buf_v array<array<double>>"
 )
 CLOSE_SENTINEL = "__close__"
-
-
-def _run_rounds(bufs_t, bufs_v, anchor, bucket, interval_us, calc,
-                to_completion):
-    """The drift-bucket round loop (lib/protobuf.cc:49-85), resumable
-    from an in-flight (anchor, bucket) and CONSUMING the aligned
-    per-series buffers in place. With ``to_completion`` False it parks
-    (returns) before any round in which some series' buffer is empty —
-    the finality boundary; with True it runs the batch walk to input
-    exhaustion, leaving the final bucket unflushed (batch parity).
-    Returns (anchor, bucket, out_ts, out_vals)."""
-    n = len(bufs_t)
-    out_t: list[int] = []
-    out_v: list[float] = []
-    while True:
-        if not to_completion and any(len(t) == 0 for t in bufs_t):
-            return anchor, bucket, out_t, out_v
-        found = False
-        contributed = False
-        for i in range(n):
-            if not bufs_t[i]:
-                continue
-            t = bufs_t[i][0]
-            found = True
-            if not anchor:
-                anchor = t
-            if anchor - interval_us <= t <= anchor + interval_us:
-                contributed = True
-                bucket.append(bufs_v[i].pop(0))
-                bufs_t[i].pop(0)
-        if not found:
-            return anchor, bucket, out_t, out_v
-        if not contributed and bucket:
-            out_t.append(anchor)
-            out_v.append(calc(bucket))
-            bucket = []
-            anchor = 0
 
 
 def _make_emitter(interval_us: int, calc, close_after_ms: int | None,
@@ -117,11 +88,9 @@ def _make_emitter(interval_us: int, calc, close_after_ms: int | None,
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             anchor, bucket, _sers, _lt, _lv, bufs_t, bufs_v = state.get
-            bufs_t = [list(b) for b in bufs_t]
-            bufs_v = [list(b) for b in bufs_v]
-            _, _, out_t, out_v = _run_rounds(
-                bufs_t, bufs_v, anchor, list(bucket), interval_us, calc,
-                to_completion=True,
+            _, _, out_t, out_v = drift_walk(
+                list(zip(bufs_t, bufs_v)), [0] * len(bufs_t), anchor,
+                list(bucket), interval_us, calc,
             )
             state.remove()
             if out_t:
@@ -170,9 +139,10 @@ def _make_emitter(interval_us: int, calc, close_after_ms: int | None,
                 bufs_v[i].append(v)
                 lc_t[i], lc_v[i] = t, v
 
-        anchor, bucket, out_t, out_v = _run_rounds(
-            bufs_t, bufs_v, anchor, bucket, interval_us, calc,
-            to_completion=close,
+        cursors = [0] * len(bufs_t)
+        anchor, bucket, out_t, out_v = drift_walk(
+            list(zip(bufs_t, bufs_v)), cursors, anchor, bucket,
+            interval_us, calc, to_completion=close,
         )
         if close:
             state.remove()
@@ -180,8 +150,8 @@ def _make_emitter(interval_us: int, calc, close_after_ms: int | None,
             state.update((
                 int(anchor), [float(x) for x in bucket], sers,
                 [int(x) for x in lc_t], [float(x) for x in lc_v],
-                [[int(x) for x in b] for b in bufs_t],
-                [[float(x) for x in b] for b in bufs_v],
+                [[int(x) for x in b[k:]] for b, k in zip(bufs_t, cursors)],
+                [[float(x) for x in b[k:]] for b, k in zip(bufs_v, cursors)],
             ))
             if close_after_ms is not None:
                 state.setTimeoutDuration(close_after_ms)
@@ -208,9 +178,6 @@ def anchored_stream(points_stream: DataFrame, agg_type: str,
     group silence via ProcessingTimeTimeout — for continuous triggers
     only (see module docstring)."""
     from pyspark.sql import functions as F
-
-    from open_instrument_spark.functions.durations import parse_duration_ms
-    from open_instrument_spark.operators.aggregate import _drift_calc_fns
 
     interval_us = parse_duration_ms(sample_interval) * 1000
     calc = _drift_calc_fns()[agg_type.lower()]

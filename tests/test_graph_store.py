@@ -531,3 +531,19 @@ def test_tick_dispatches_multiprobe_graph_store(spark, tmp_path):
         graph_indexes=[gpath], max_epochs=3, forget_vec_ids=gone)
     assert s2["forget"][gpath]["removed"] == 0
     assert not s2["graph"][gpath]["compacted"]
+
+
+def test_registry_graph_store_lives_under_the_context_root(spark):
+    """The registry's graph-store query builds its store inside the
+    SparkContext's own root directory (deleted on stop), not at a fixed
+    shared temp path two Spark applications on one host would overwrite."""
+    from pyspark import SparkFiles
+
+    from open_instrument_spark.queries.llm import embed_knn_graph_store
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    files = embed_knn_graph_store(spark, SF_SMOKE).inputFiles()
+    assert files
+    for f in files:
+        path = os.path.realpath(f.removeprefix("file:"))
+        assert os.path.commonpath([root, path]) == root, f

@@ -224,7 +224,7 @@ def test_streaming_rle_state_across_batches(spark, tmp_path):
     semantics, openinstrument.go:83-105)."""
     import datetime as dt
 
-    from open_instrument_spark.streaming.rle_state import rle_runs_stream
+    from open_instrument_spark.streaming.recurrence import rle_runs_stream
 
     src = str(tmp_path / "rle_src")
     os.makedirs(src, exist_ok=True)
@@ -2043,7 +2043,7 @@ def test_streaming_alert_states_matches_batch_across_batches(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.plans.alerts import classify_states
-    from open_instrument_spark.streaming.alert_state import alert_stream
+    from open_instrument_spark.streaming.recurrence import alert_stream
 
     schema = "series_key string, ts timestamp, dval double"
     base = dt.datetime(2024, 1, 1)
@@ -2101,7 +2101,7 @@ def test_streaming_counter_stats_matches_batch(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators.trend import counter_stats
-    from open_instrument_spark.streaming.counter_state import counter_stats_stream
+    from open_instrument_spark.streaming.recurrence import counter_stats_stream
 
     schema = "series_key string, ts timestamp, dval double"
 
@@ -2184,7 +2184,7 @@ def test_streaming_increase_matches_batch(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.operators.trend import increase
-    from open_instrument_spark.streaming.increase_state import increase_stream
+    from open_instrument_spark.streaming.recurrence import increase_stream
 
     schema = "series_key string, ts timestamp, dval double"
     IV = 60_000  # 1-minute windows
@@ -2274,7 +2274,7 @@ def test_streaming_slo_burn_matches_batch(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.plans.alerts import slo_burn_rate
-    from open_instrument_spark.streaming.slo_burn_state import slo_burn_stream
+    from open_instrument_spark.streaming.recurrence import slo_burn_stream
 
     BASE = dt.datetime(2024, 1, 1)
     schema = "name string, ts timestamp, dval double"
@@ -2497,7 +2497,7 @@ def test_streaming_slo_burn_zero_traffic_window(spark, tmp_path):
     import datetime as dt
 
     from open_instrument_spark.plans.alerts import slo_burn_rate
-    from open_instrument_spark.streaming.slo_burn_state import slo_burn_stream
+    from open_instrument_spark.streaming.recurrence import slo_burn_stream
 
     BASE = dt.datetime(2024, 1, 1)
     schema = "name string, ts timestamp, dval double"
