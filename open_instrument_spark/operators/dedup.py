@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 
+from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.text import let, words
 from open_instrument_spark.session import local_df, track_persist
 
@@ -505,10 +506,8 @@ def build_minhash_index(docs: DataFrame, path: str, text_col: str = "text",
 
 def _write_minhash_meta(spark, path: str, num_perm: int, bands: int,
                         next_epoch: int) -> None:
-    local_df(
-        spark, [(int(num_perm), int(bands), int(next_epoch))],
-        "num_perm int, bands int, next_epoch long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    indexstore.write_meta(spark, path, indexstore.MINHASH_META,
+                          num_perm, bands, next_epoch)
 
 
 def _read_minhash_meta(spark, path: str) -> tuple[int, int, int]:
@@ -519,8 +518,7 @@ def _read_minhash_meta(spark, path: str) -> tuple[int, int, int]:
     from pyspark.errors import AnalysisException
 
     try:
-        r = spark.read.parquet(f"{path}/meta").first()
-        return int(r["num_perm"]), int(r["bands"]), int(r["next_epoch"])
+        return indexstore.read_meta(spark, path, indexstore.MINHASH_META)
     except AnalysisException:
         num_perm = len(
             spark.read.parquet(f"{path}/sigs").select("sig").first()["sig"])

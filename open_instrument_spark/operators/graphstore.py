@@ -74,15 +74,13 @@ import shutil
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from open_instrument_spark.session import local_df
-
+from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.similarity import (
     _cell_assign,
     _cell_assign_multi,
     _knn_edges,
     _knn_edges_multi,
     _resolve_assign,
-    _store_centroids,
 )
 
 EDGE_COLS = ["src", "dst", "cell", "rank", "cos"]
@@ -106,19 +104,14 @@ def _landed_cells(epoch_dir: str) -> list[int]:
 
 def _write_graph_meta(spark, path: str, dim: int, n_cells: int, k: int,
                       next_epoch: int, n_probe: int = 1) -> None:
-    local_df(
-        spark, [(int(dim), int(n_cells), int(k), int(next_epoch), int(n_probe))],
-        "dim int, n_cells int, k int, next_epoch long, n_probe int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    indexstore.write_meta(spark, path, indexstore.GRAPH_META,
+                          dim, n_cells, k, next_epoch, n_probe)
 
 
 def _read_graph_meta(spark, path: str) -> tuple[int, int, int, int, int]:
-    r = spark.read.parquet(f"{path}/meta").first()
-    # n_probe landed with the multi-probe layout (r14); stores written
-    # before it are single-probe by construction.
-    n_probe = int(r["n_probe"]) if "n_probe" in r.__fields__ else 1
-    return (int(r["dim"]), int(r["n_cells"]), int(r["k"]),
-            int(r["next_epoch"]), n_probe)
+    dim, n_cells, k, nxt, n_probe = indexstore.read_meta(
+        spark, path, indexstore.GRAPH_META)
+    return dim, n_cells, k, nxt, n_probe or 1
 
 
 def rebuild_edge_cells(spark, path: str, cells: list[int], k: int,
@@ -266,10 +259,7 @@ def build_knn_graph_store(embeddings: DataFrame, path: str,
         asg = _cell_assign(embeddings, centroids, id_col, vec_col, assign)
         asg.select("vec_id", "v", "cell").write.partitionBy("cell").mode(
             "overwrite").parquet(f"{path}/vectors/epoch=-1")
-    local_df(
-        spark, [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, c array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    indexstore.write_centroids(spark, path, centroids)
     landed = spark.read.parquet(f"{path}/vectors")
     if n_probe > 1:
         _knn_edges_multi(
@@ -304,7 +294,7 @@ def absorb_into_knn_graph_store(path: str, new_vectors: DataFrame,
     Returns {epoch, cells (touched), edge_cells (still carrying
     edges)}."""
     spark = new_vectors.sparkSession
-    C = _store_centroids(spark, path)
+    C = indexstore.read_centroids(spark, path)
     assign = _resolve_assign("auto", len(C))
     dim, n_cells, k, nxt, n_probe = _read_graph_meta(spark, path)
     if epoch is None:

@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark.operators import indexstore
+from open_instrument_spark.operators.indexstore import ivf_cell_stats
 from open_instrument_spark.operators.similarity import as_double
 from open_instrument_spark.session import local_df
 
@@ -532,15 +534,8 @@ def build_ivfpq_index(embeddings: DataFrame, path: str,
         assigned.select("n_id", "v", "cell").write.partitionBy(
             "cell"
         ).mode("overwrite").parquet(f"{path}/vectors")
-    local_df(
-        spark, [(int(i), [float(x) for x in c]) for i, c in enumerate(C)],
-        "cell int, c array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    local_df(
-        spark, [(j, cc, [float(x) for x in B[j, cc]])
-                for j in range(B.shape[0]) for cc in range(B.shape[1])],
-        "j int, cc int, cv array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    indexstore.write_centroids(spark, path, C)
+    indexstore.write_codebooks(spark, path, B)
     return C, B
 
 
@@ -654,43 +649,8 @@ def search_ivfpq_coarse_rerank(spark, path: str, queries: dict[int, list],
 def _load_index_sides(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     """The two small side tables of an on-disk IVFPQ index as numpy
     (centroids C, codebooks B) — bounded driver artifacts."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVFPQ index at {path} has an empty centroids table")
-    dim = len(crows[0]["c"])
-    C = np.zeros((max(r["cell"] for r in crows) + 1, dim))
-    for r in crows:
-        C[r["cell"]] = r["c"]
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    if not brows:
-        raise ValueError(f"IVFPQ index at {path} has an empty codebooks table")
-    m = max(r["j"] for r in brows) + 1
-    ksub = max(r["cc"] for r in brows) + 1
-    dsub = len(brows[0]["cv"])
-    B = np.zeros((m, ksub, dsub))
-    for r in brows:
-        B[r["j"], r["cc"]] = r["cv"]
-    return C, B
-
-
-def ivfpq_cell_stats(spark, path: str) -> dict:
-    """Occupancy health of an on-disk IVFPQ index — the
-    ``similarity.ivf_cell_stats`` twin reading the CODES table (cell is
-    its partition column, so the scan reads no code bytes). Returns
-    {"counts": {cell: n}, "skew": float, "n_cells": int}."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVFPQ index at {path} has an empty centroids table")
-    n_cells = max(r["cell"] for r in crows) + 1
-    counts = {
-        r["cell"]: r["n"]
-        for r in spark.read.parquet(f"{path}/codes")
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    mean = total / n_cells if n_cells else 0.0
-    skew = (max(counts.values()) / mean) if (counts and mean > 0) else 0.0
-    return {"counts": counts, "skew": round(skew, 3), "n_cells": n_cells}
+    return (indexstore.read_centroids(spark, path),
+            indexstore.read_codebooks(spark, path))
 
 
 def rebalance_ivfpq_index(spark, path: str, out_path: str | None = None,
@@ -713,14 +673,12 @@ def rebalance_ivfpq_index(spark, path: str, out_path: str | None = None,
     readers-never-mid-rewrite discipline as the IVF rebalance; the
     maintenance tick owns the swap. Returns {"rebalanced",
     "skew_before", "skew_after", "out_path"}."""
-    import os
-
-    stats = ivfpq_cell_stats(spark, path)
+    stats = ivf_cell_stats(spark, path)
     out_path = out_path or f"{path}.rebalanced"
     if stats["skew"] < skew_threshold and not force:
         return {"rebalanced": False, "skew_before": stats["skew"],
                 "skew_after": stats["skew"], "out_path": None}
-    if not os.path.isdir(f"{path}/vectors"):
+    if not indexstore.present(path, "vectors"):
         raise ValueError(
             f"rebalance of {path} needs the raw-vector sidecar "
             "(build_ivfpq_index(include_vectors=True)) — codes cannot "
@@ -733,10 +691,10 @@ def rebalance_ivfpq_index(spark, path: str, out_path: str | None = None,
     )
     k = n_cells or stats["n_cells"]
     C2 = _kmeans(train, min(k, len(train)), seed=seed)
-    _, B = _load_index_sides(spark, path)
+    B = indexstore.read_codebooks(spark, path)
     build_ivfpq_index(vecs, out_path, centroids=C2, books=B,
                       include_vectors=True, id_col="n_id", vec_col="v")
-    after = ivfpq_cell_stats(spark, out_path)
+    after = ivf_cell_stats(spark, out_path)
     return {"rebalanced": True, "skew_before": stats["skew"],
             "skew_after": after["skew"], "out_path": out_path}
 
@@ -755,26 +713,9 @@ def append_to_ivfpq_index(new_vectors: DataFrame, path: str,
     (``similarity.append_to_ivf_index``'s centroid-immutability
     reasoning applies verbatim; codebook drift is likewise a re-train
     decision, not an append concern)."""
-    import os
-
     from open_instrument_spark.operators.similarity import ivf_assign
 
-    spark = new_vectors.sparkSession
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVFPQ index at {path} has an empty centroids table")
-    dim = len(crows[0]["c"])
-    C = np.zeros((max(r["cell"] for r in crows) + 1, dim))
-    for r in crows:
-        C[r["cell"]] = r["c"]
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    if not brows:
-        raise ValueError(f"IVFPQ index at {path} has an empty codebooks table")
-    m = max(r["j"] for r in brows) + 1
-    ksub = max(r["cc"] for r in brows) + 1
-    B = np.zeros((m, ksub, len(brows[0]["cv"])))
-    for r in brows:
-        B[r["j"], r["cc"]] = r["cv"]
+    C, B = _load_index_sides(new_vectors.sparkSession, path)
     base = new_vectors.select(
         F.col(id_col).alias("n_id"), as_double(F.col(vec_col)).alias("v")
     )
@@ -785,7 +726,7 @@ def append_to_ivfpq_index(new_vectors: DataFrame, path: str,
     assigned.select("n_id", "code", "cell").write.partitionBy(
         "cell"
     ).mode("append").parquet(f"{path}/codes")
-    if os.path.exists(f"{path}/vectors"):
+    if indexstore.present(path, "vectors"):
         assigned.select("n_id", "v", "cell").write.partitionBy(
             "cell"
         ).mode("append").parquet(f"{path}/vectors")

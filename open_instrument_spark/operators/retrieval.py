@@ -40,6 +40,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.text import words
 from open_instrument_spark.session import local_df
 
@@ -441,41 +442,34 @@ def build_text_index(docs: DataFrame, path: str, n_buckets: int = 8,
     post = _postings(docs, text_col, id_col).withColumn(
         "bucket", _term_bucket(F.col("term"), n_buckets)
     )
-    post.write.partitionBy("bucket").mode("overwrite").parquet(
-        f"{path}/postings/epoch=-1"
+    _write_epoch(post, path, -1, n_buckets)
+
+
+def _write_epoch(post: DataFrame, path: str, epoch: int,
+                 n_buckets: int) -> None:
+    """Land one postings epoch and its meta row. (n_docs, Σdl) are read
+    back from the files just written (the absorb-verification idiom),
+    with the postings' own schema, so an EMPTY epoch (cold-start index,
+    empty micro-batch) reads as no rows and counts as (0, 0)."""
+    epoch_dir = f"{path}/postings/epoch={int(epoch)}"
+    post.write.partitionBy("bucket").mode("overwrite").parquet(epoch_dir)
+    spark = post.sparkSession
+    r = (
+        spark.read.schema(post.drop("bucket").schema).parquet(epoch_dir)
+        .groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+        .first()
     )
-    spark = docs.sparkSession
-    n, s = _epoch_stats(spark, f"{path}/postings/epoch=-1")
-    _write_text_meta(spark, path, n, s, n_buckets, epoch=-1)
-
-
-def _epoch_stats(spark, epoch_dir: str) -> tuple[int, int]:
-    """(n_docs, Σdl) of one landed postings epoch — read back from the
-    files just written (the absorb-verification idiom); an EMPTY epoch
-    (cold-start index, empty micro-batch) has no parquet files to infer
-    a schema from and counts as (0, 0)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        r = (
-            spark.read.parquet(epoch_dir)
-            .groupBy("doc_id").agg(F.first("dl").alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-            .first()
-        )
-        return int(r["n"]), int(r["s"] or 0)
-    except AnalysisException:
-        return 0, 0
+    _write_text_meta(spark, path, r["n"], r["s"] or 0, n_buckets, epoch)
 
 
 def _write_text_meta(spark, path: str, n_docs: int, sum_dl: int,
                      n_buckets: int, epoch: int) -> None:
     """One meta row for ONE epoch's contribution, landed in its own
     ``epoch=E`` partition (overwrite → replay-idempotent)."""
-    local_df(
-        spark, [(int(n_docs), int(sum_dl), int(n_buckets))],
-        "n_docs long, sum_dl long, n_buckets int",
-    ).write.mode("overwrite").parquet(f"{path}/meta/epoch={int(epoch)}")
+    indexstore.write_meta(spark, path, indexstore.TEXT_META,
+                          n_docs, sum_dl, n_buckets,
+                          table=f"meta/epoch={int(epoch)}")
 
 
 def _read_text_meta(spark, path: str) -> tuple[int, int, int, int]:
@@ -483,7 +477,7 @@ def _read_text_meta(spark, path: str) -> tuple[int, int, int, int]:
     are SUMS over the per-epoch meta rows (one row per epoch: the scan
     is epoch-count-sized, never index-sized; compaction folds it)."""
     r = (
-        spark.read.parquet(f"{path}/meta")
+        indexstore.read(spark, path, "meta", indexstore.TEXT_META)
         .agg(F.sum("n_docs"), F.sum("sum_dl"), F.first("n_buckets"),
              F.max("epoch"))
         .first()
@@ -521,11 +515,7 @@ def append_to_text_index(new_docs: DataFrame, path: str,
     post = _postings(new_docs, text_col, id_col).withColumn(
         "bucket", _term_bucket(F.col("term"), n_buckets)
     )
-    post.write.partitionBy("bucket").mode("overwrite").parquet(
-        f"{path}/postings/epoch={int(epoch)}"
-    )
-    n, s = _epoch_stats(spark, f"{path}/postings/epoch={int(epoch)}")
-    _write_text_meta(spark, path, n, s, n_buckets, epoch=int(epoch))
+    _write_epoch(post, path, epoch, n_buckets)
 
 
 def search_text_index(spark, path: str, queries: dict[int, list[str]],

@@ -16,13 +16,14 @@ planes.
 
 from __future__ import annotations
 
-import os
 import warnings
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark.operators import indexstore
+from open_instrument_spark.operators.indexstore import ivf_cell_stats
 from open_instrument_spark.session import local_df
 
 
@@ -679,12 +680,7 @@ def build_ivf_index(embeddings: DataFrame, path: str, n_cells: int = 32,
         centroids = _kmeans(train, min(n_cells, len(train)), seed=seed)
     assigned = base.withColumn("cell", ivf_assign("v", centroids))
     assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/vectors")
-    cdf = local_df(
-        base.sparkSession,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, c array<double>",
-    )
-    cdf.write.mode("overwrite").parquet(f"{path}/centroids")
+    indexstore.write_centroids(base.sparkSession, path, centroids)
     return centroids
 
 
@@ -703,14 +699,7 @@ def append_to_ivf_index(new_vectors: DataFrame, path: str,
     quality degrades only if the data distribution drifts, which is a
     re-train decision, not an append concern. Raises ValueError on an
     index with no centroids (nothing to assign against)."""
-    spark = new_vectors.sparkSession
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVF index at {path} has an empty centroids table")
-    dim = len(crows[0]["c"])
-    centroids = np.zeros((max(r["cell"] for r in crows) + 1, dim))
-    for r in crows:
-        centroids[r["cell"]] = r["c"]
+    centroids = indexstore.read_centroids(new_vectors.sparkSession, path)
     base = new_vectors.select(
         F.col(id_col).alias("n_id"), as_double(F.col(vec_col)).alias("v")
     )
@@ -733,13 +722,7 @@ def search_ivf_index(spark, path: str, queries: dict[int, list],
     vectors read carries ``cell IN (probed)`` so parquet partition
     pruning skips every unprobed cell's files — verifiable in the
     plan's PartitionFilters. Output: (q_id, n_id, rank, cos)."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVF index at {path} has an empty centroids table")
-    dim = len(crows[0]["c"])
-    C = np.zeros((max(r["cell"] for r in crows) + 1, dim))
-    for r in crows:
-        C[r["cell"]] = r["c"]
+    C = indexstore.read_centroids(spark, path)
     probe_rows = []
     for qid, qv in queries.items():
         qv = np.asarray(qv, dtype=np.float64)
@@ -763,27 +746,6 @@ def search_ivf_index(spark, path: str, queries: dict[int, list],
         .filter(F.col("rank") <= k)
         .select("q_id", "n_id", "rank", F.round("cos", 6).alias("cos"))
     )
-
-
-def ivf_cell_stats(spark, path: str) -> dict:
-    """Occupancy health of an on-disk IVF index: per-cell vector counts
-    plus the skew ratio max/mean (mean over ALL centroid cells, so
-    emptied cells count against balance). One cell-column aggregation —
-    the cell is a partition column, so the scan reads no vector data.
-    Returns {"counts": {cell: n}, "skew": float, "n_cells": int}."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"IVF index at {path} has an empty centroids table")
-    n_cells = max(r["cell"] for r in crows) + 1
-    counts = {
-        r["cell"]: r["n"]
-        for r in spark.read.parquet(f"{path}/vectors")
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    mean = total / n_cells if n_cells else 0.0
-    skew = (max(counts.values()) / mean) if (counts and mean > 0) else 0.0
-    return {"counts": counts, "skew": round(skew, 3), "n_cells": n_cells}
 
 
 def rebalance_ivf_index(spark, path: str, out_path: str | None = None,
@@ -1736,26 +1698,12 @@ def semantic_probe_pairs(corpus: DataFrame, new: DataFrame,
 
 def _write_semantic_meta(spark, path: str, dim: int, n_cells: int,
                          next_epoch: int) -> None:
-    local_df(
-        spark, [(int(dim), int(n_cells), int(next_epoch))],
-        "dim int, n_cells int, next_epoch long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    indexstore.write_meta(spark, path, indexstore.SEMANTIC_META,
+                          dim, n_cells, next_epoch)
 
 
 def _read_semantic_meta(spark, path: str) -> tuple[int, int, int]:
-    r = spark.read.parquet(f"{path}/meta").first()
-    return int(r["dim"]), int(r["n_cells"]), int(r["next_epoch"])
-
-
-def _store_centroids(spark, path: str) -> np.ndarray:
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    if not crows:
-        raise ValueError(f"semantic index at {path} has no centroids")
-    dim = len(crows[0]["c"])
-    C = np.zeros((max(r["cell"] for r in crows) + 1, dim))
-    for r in crows:
-        C[r["cell"]] = r["c"]
-    return C
+    return indexstore.read_meta(spark, path, indexstore.SEMANTIC_META)
 
 
 def _write_semantic_codes(assigned: DataFrame, path: str,
@@ -1770,9 +1718,9 @@ def _write_semantic_codes(assigned: DataFrame, path: str,
     included, since it is measured, not grid-derived — and min_norm =
     the smallest ‖v‖) is folded monotonically on every write; it is
     what lets the probe derive a SOUND candidate margin instead of
-    trusting a fixed constant (r14, advisor r13)."""
+    trusting a fixed constant."""
     spark = assigned.sparkSession
-    sq = spark.read.parquet(f"{path}/sq")
+    sq = indexstore.read(spark, path, "sq")
     assigned.crossJoin(F.broadcast(sq)).select(
         "vec_id", _sq_encode(F.col("v")).alias("codes"), "cell"
     ).write.partitionBy("cell").mode("overwrite").parquet(
@@ -1785,14 +1733,11 @@ def _write_semantic_codes(assigned: DataFrame, path: str,
         F.min(norm(F.col("v"))).alias("min_norm"),
     ).first()
     max_err, min_norm = float(row["max_err"]), float(row["min_norm"])
-    bp = os.path.join(path, "sq_bounds")
-    if os.path.isdir(bp):
-        old = spark.read.parquet(bp).first()
+    if indexstore.present(path, "sq_bounds"):
+        old = indexstore.read(spark, path, "sq_bounds").first()
         max_err = max(max_err, float(old["max_err"]))
         min_norm = min(min_norm, float(old["min_norm"]))
-    local_df(
-        spark, [(max_err, min_norm)], "max_err double, min_norm double"
-    ).write.mode("overwrite").parquet(bp)
+    indexstore.write(spark, path, "sq_bounds", [(max_err, min_norm)])
 
 
 def derived_sq_margin(spark, path: str) -> float:
@@ -1801,14 +1746,13 @@ def derived_sq_margin(spark, path: str) -> float:
     |cos(a,v') − cos(a,v)| ≤ ‖v'/‖v'‖ − v/‖v‖‖ ≤ 2‖e‖/‖v‖ ≤
     2·max_err/min_norm. A funnel cutting candidates at
     approx_cos > threshold − this margin provably drops no true match
-    (r14, advisor r13 — the fixed 0.05 default was only pinned on the
-    gate corpus; small-norm or wide-range embeddings exceed it)."""
-    bp = os.path.join(path, "sq_bounds")
-    if not os.path.isdir(bp):
+    (a fixed margin holds only on the corpus it was tuned on;
+    small-norm or wide-range embeddings exceed it)."""
+    if not indexstore.present(path, "sq_bounds"):
         raise ValueError(
-            f"semantic store at {path} has no sq_bounds table (built "
-            "before r14) — pass margin= explicitly or rebuild the store")
-    r = spark.read.parquet(bp).first()
+            f"semantic store at {path} has no sq_bounds table — pass "
+            "margin= explicitly or rebuild the store")
+    r = indexstore.read(spark, path, "sq_bounds").first()
     if not r["min_norm"] or float(r["min_norm"]) <= 0.0:
         raise ValueError(
             "store contains a zero-norm vector: cosine (and any margin "
@@ -1846,13 +1790,10 @@ def build_semantic_index(embeddings: DataFrame, path: str,
     asg = _cell_assign(embeddings, centroids, id_col, vec_col, assign)
     asg.select("vec_id", "v", "cell").write.partitionBy("cell").mode(
         "overwrite").parquet(f"{path}/vectors/epoch=-1")
-    local_df(
-        spark, [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, c array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    indexstore.write_centroids(spark, path, centroids)
     if layout == "sq8":
-        sq_train_stats(embeddings, vec_col=vec_col).coalesce(1).write.mode(
-            "overwrite").parquet(f"{path}/sq")
+        indexstore.write(spark, path, "sq", [
+            tuple(sq_train_stats(embeddings, vec_col=vec_col).first())])
         _write_semantic_codes(
             spark.read.parquet(f"{path}/vectors/epoch=-1"), path, -1)
     _write_semantic_meta(spark, path, centroids.shape[1],
@@ -1869,7 +1810,7 @@ def absorb_into_semantic_index(path: str, assigned_new: DataFrame,
     spark = assigned_new.sparkSession
     assigned_new.select("vec_id", "v", "cell").write.partitionBy(
         "cell").mode("overwrite").parquet(f"{path}/vectors/epoch={int(epoch)}")
-    if os.path.isdir(os.path.join(path, "sq")):
+    if indexstore.present(path, "sq"):
         _write_semantic_codes(
             assigned_new.select("vec_id", "v", "cell"), path, epoch)
     dim, n_cells, nxt = _read_semantic_meta(spark, path)
@@ -1914,7 +1855,7 @@ def probe_semantic_index(spark, path: str, new_vectors: DataFrame,
     sound bound (it may silently drop true matches).
 
     Output: (new_id, old_id, cell, cos rounded 6dp)."""
-    C = _store_centroids(spark, path)
+    C = indexstore.read_centroids(spark, path)
     assign = "fold" if len(C) <= SEMDEDUP_FOLD_MAX_K else "arrow"
     new_asg = _cell_assign(new_vectors, C, id_col, vec_col, assign)
     new_asg = new_asg.localCheckpoint(eager=False)
@@ -1941,7 +1882,7 @@ def probe_semantic_index(spark, path: str, new_vectors: DataFrame,
                     f"store's sound bound {bound:.6g} — the funnel may "
                     "silently drop true matches; pass margin=None to "
                     "derive the sound bound", stacklevel=2)
-        sq = spark.read.parquet(f"{path}/sq")
+        sq = indexstore.read(spark, path, "sq")
         c = pruned("codes").alias("c")
         cand = (
             a.join(c, on=[F.col("a.cell") == F.col("c.cell")])

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from open_instrument_spark.session import local_df
 
+from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.retention import (
     PolicyItem,
     retention_report,
@@ -115,16 +116,11 @@ def _swap_in(path: str, sib: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _present(path: str, tables) -> list[str]:
-    """The subset of ``tables`` the store at ``path`` has."""
-    return [t for t in tables if os.path.isdir(os.path.join(path, t))]
-
-
 def _copy_tables(spark, path: str, sib: str, tables) -> None:
-    """Carry the store's ``tables`` that exist over to the sibling
+    """Carry the store's side ``tables`` that exist over to the sibling
     unchanged."""
-    for t in _present(path, tables):
-        spark.read.parquet(f"{path}/{t}").write.mode(
+    for t in indexstore.present(path, *tables):
+        indexstore.read(spark, path, t).write.mode(
             "overwrite").parquet(f"{sib}/{t}")
 
 
@@ -180,7 +176,7 @@ def rebalance_ann_index(spark, path: str, skew_threshold: float = 4.0,
     from open_instrument_spark.operators.similarity import rebalance_ivf_index
 
     recovered = _recover_old(path)
-    if os.path.isdir(os.path.join(path, "codes")):
+    if indexstore.present(path, "codes"):
         from open_instrument_spark.operators.pq import rebalance_ivfpq_index
 
         res = rebalance_ivfpq_index(spark, path,
@@ -289,7 +285,7 @@ def compact_semantic_index(spark, path: str, max_epochs: int = 8) -> dict:
 
     def write(sib: str) -> None:
         dim, n_cells, nxt = _read_semantic_meta(spark, path)
-        for t in _present(path, _SEMANTIC_DATA_DIRS):
+        for t in indexstore.present(path, *_SEMANTIC_DATA_DIRS):
             _fold_to_base(spark, path, sib, t)
         _copy_tables(spark, path, sib, _SEMANTIC_AUX_DIRS)
         _write_semantic_meta(spark, sib, dim, n_cells, nxt)
@@ -366,7 +362,7 @@ def _forget_store(spark, path: str, ids, col: str, tables,
     fields."""
     recovered = _recover_old(path)
     ids = [int(i) for i in ids]
-    tables = [*tables, *_present(path, optional)]
+    tables = [*tables, *indexstore.present(path, *optional)]
     hits, keeps = {}, {}
     for t in tables:
         hits[t], keeps[t] = _forget_split(
@@ -583,12 +579,7 @@ _INDEX_KINDS = (
 
 
 def _ann_dry_run(spark, path: str) -> dict:
-    from open_instrument_spark.operators.pq import ivfpq_cell_stats
-    from open_instrument_spark.operators.similarity import ivf_cell_stats
-
-    stats_of = (ivfpq_cell_stats if os.path.isdir(os.path.join(path, "codes"))
-                else ivf_cell_stats)
-    skew = stats_of(spark, path)["skew"]
+    skew = indexstore.ivf_cell_stats(spark, path)["skew"]
     return {"skew_before": skew, "rebalanced": False, "skew_after": skew,
             "swapped": False, "out_path": None}
 

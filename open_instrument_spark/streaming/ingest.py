@@ -47,7 +47,9 @@ def start_ingest(points_stream: DataFrame, dest_path: str, checkpoint: str,
     files instead of double-appending (the WAL-replay hazard the
     reference has, disk_datastore.cc:112-128). A bare append sink would
     only be at-least-once. Readers see ``epoch`` as one more partition
-    column; compaction (sources.ingest.compact) folds epochs away.
+    column. The maintenance tick compacts the store in place
+    (``plans.maintenance.compact_dates``), which keeps the epoch layout:
+    each rewritten date lands at a fresh negative epoch.
 
     ``on_batch_complete(epoch)`` runs after the epoch's files are on
     disk but BEFORE Spark commits the epoch offset — an exception here

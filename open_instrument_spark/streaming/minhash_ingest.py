@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from open_instrument_spark.operators.dedup import probe_minhash_index
+from open_instrument_spark.streaming.dedup_stream import (
+    best_match,
+    deduped_view,
+)
 
 
 def start_near_dup_ingest(doc_stream: DataFrame, dest_path: str,
@@ -63,16 +67,7 @@ def start_near_dup_ingest(doc_stream: DataFrame, dest_path: str,
             spark, index_path, batch.select("doc_id", "text"),
             threshold=threshold, append=False, before_epoch=epoch,
         )
-        # best match per new doc: map-side MIN over (-est, old_id)
-        # structs (the argmin-without-rank idiom)
-        best = (
-            matches.groupBy("new_id")
-            .agg(F.min(F.struct((-F.col("est_jaccard")).alias("neg"),
-                                F.col("old_id").alias("old_id"))).alias("m"))
-            .select(F.col("new_id").alias("doc_id"),
-                    F.col("m.old_id").alias("near_dup_of"),
-                    F.round(-F.col("m.neg"), 6).alias("est_jaccard"))
-        )
+        best = best_match(matches, "doc_id", "est_jaccard")
         flagged = batch.join(best, "doc_id", "left")
         flagged.write.mode("overwrite").parquet(f"{dest_path}/epoch={epoch}")
         # absorb AFTER landing: a crash between the two writes replays
@@ -112,11 +107,7 @@ def start_near_dup_ingest(doc_stream: DataFrame, dest_path: str,
 def read_deduped(spark, dest_path: str) -> DataFrame:
     """The deduped view of a landed near-dup ingest store (epoch
     partition column folded away)."""
-    return (
-        spark.read.parquet(dest_path)
-        .where(F.col("near_dup_of").isNull())
-        .drop("near_dup_of", "est_jaccard", "epoch")
-    )
+    return deduped_view(spark, dest_path, "est_jaccard")
 
 
 __all__ = ["start_near_dup_ingest", "read_deduped"]

@@ -20,10 +20,13 @@ checkpoint commit.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from open_instrument_spark.operators.similarity import probe_semantic_index
+from open_instrument_spark.streaming.dedup_stream import (
+    best_match,
+    deduped_view,
+)
 
 
 def start_semantic_ingest(vec_stream: DataFrame, dest_path: str,
@@ -54,14 +57,7 @@ def start_semantic_ingest(vec_stream: DataFrame, dest_path: str,
             threshold=threshold, append=True, epoch=epoch,
             before_epoch=epoch,
         )
-        best = (
-            matches.groupBy("new_id")
-            .agg(F.min(F.struct((-F.col("cos")).alias("neg"),
-                                F.col("old_id").alias("old_id"))).alias("m"))
-            .select(F.col("new_id").alias("vec_id"),
-                    F.col("m.old_id").alias("near_dup_of"),
-                    F.round(-F.col("m.neg"), 6).alias("cos"))
-        )
+        best = best_match(matches, "vec_id", "cos")
         flagged = batch.join(best, "vec_id", "left")
         flagged.write.mode("overwrite").parquet(f"{dest_path}/epoch={epoch}")
         if on_batch_complete is not None:
@@ -81,11 +77,7 @@ def start_semantic_ingest(vec_stream: DataFrame, dest_path: str,
 
 def read_deduped_vectors(spark, dest_path: str) -> DataFrame:
     """The deduped view of a landed semantic ingest store."""
-    return (
-        spark.read.parquet(dest_path)
-        .where(F.col("near_dup_of").isNull())
-        .drop("near_dup_of", "cos", "epoch")
-    )
+    return deduped_view(spark, dest_path, "cos")
 
 
 __all__ = ["start_semantic_ingest", "read_deduped_vectors"]

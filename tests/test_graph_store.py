@@ -106,6 +106,25 @@ def test_absorb_equals_fresh_build_over_union(spark, tmp_path):
     assert gotc == wantc
 
 
+def test_meta_without_n_probe_reads_single_probe_and_absorbs(spark,
+                                                            tmp_path):
+    """A store whose meta was written before the n_probe column existed
+    reads n_probe as null, which means single-probe, and still absorbs
+    to a graph equal to a fresh build over base and batch."""
+    path = str(tmp_path / "gstore")
+    emb = _emb(spark)
+    base = emb.filter(F.col("vec_id") % 7 != 0)
+    batch = emb.filter(F.col("vec_id") % 7 == 0)
+    build_knn_graph_store(base, path, C, k=K)
+    spark.createDataFrame(
+        [(64, 32, K, 0)], "dim int, n_cells int, k int, next_epoch long"
+    ).write.mode("overwrite").parquet(f"{path}/meta")
+    assert _read_graph_meta(spark, path)[4] == 1
+    absorb_into_knn_graph_store(path, batch, epoch=0)
+    assert _edge_rows(read_knn_graph_edges(spark, path)) == _fresh_edges(emb)
+    assert _read_graph_meta(spark, path) == (64, 32, K, 1, 1)
+
+
 def test_forget_matches_fresh_build_over_survivors(spark, tmp_path):
     path = str(tmp_path / "gstore")
     emb = _emb(spark)

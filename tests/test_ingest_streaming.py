@@ -1388,6 +1388,7 @@ def test_streaming_windowed_agg_retained_labels_matches_batch(spark, points, tmp
     window's rows (retention scope is per window — the streaming analog
     of the reference's per-request range). Also pins the drop-missing
     empty-string parity with batch."""
+    from open_instrument_spark.model import POINTS_SCHEMA
     from open_instrument_spark.operators import aggregate as agg_ops
     from open_instrument_spark.streaming.ingest import windowed_agg
 
@@ -1413,10 +1414,14 @@ def test_streaming_windowed_agg_retained_labels_matches_batch(spark, points, tmp
             (round(r["value"], 9), tuple(sorted((r["retained_labels"] or {}).items())))
         for r in rows
     }
-    # batch twin per emitted window: restrict input to the window's rows
+    # batch twin per emitted window over the rows the stream read from
+    # src, materialized once (one partition: 2000 rows): restrict input
+    # to the window's rows
+    src_pts = spark.read.schema(POINTS_SCHEMA).parquet(src).coalesce(
+        1).localCheckpoint()
     for win_ts in {k[0] for k in got}:
         lo = win_ts
-        win_pts = pts.filter(
+        win_pts = src_pts.filter(
             (F.col("ts") >= F.lit(lo))
             & (F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR"))
         )

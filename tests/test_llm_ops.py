@@ -1576,6 +1576,30 @@ def test_redact_duplicated_spans_hand_traced(spark):
     assert got[4]["clean_text"] == "tiny" and got[4]["n_tokens"] == 1
 
 
+def test_minhash_meta_missing_falls_back_to_the_index(spark, tmp_path):
+    """A MinHash store without its meta table still yields (num_perm,
+    bands, next_epoch): the meta read raises PATH_NOT_FOUND and the
+    values are recovered from the sigs and bands tables."""
+    import shutil
+
+    from open_instrument_spark.operators.dedup import (
+        _read_minhash_meta,
+        build_minhash_index,
+        probe_minhash_index,
+    )
+
+    docs = load_tables(spark, SF_SMOKE).table("documents").select(
+        "doc_id", "text").filter(F.col("doc_id") < 80)
+    path = str(tmp_path / "mh")
+    build_minhash_index(docs.filter(F.col("doc_id") < 60), path,
+                        num_perm=32, bands=8)
+    probe_minhash_index(spark, path, docs.filter(F.col("doc_id") >= 60),
+                        append=True, epoch=2)
+    assert _read_minhash_meta(spark, path) == (32, 8, 3)
+    shutil.rmtree(f"{path}/meta")
+    assert _read_minhash_meta(spark, path) == (32, 8, 3)
+
+
 def test_minhash_index_meta_no_full_scan(spark, tmp_path, monkeypatch):
     """The store meta table (r12): build persists (num_perm, bands,
     next_epoch) as a one-row parquet; a probe's only driver action is

@@ -944,3 +944,93 @@ def test_registry_table_loads_without_jobs(spark, tables):
     assert sched.nextJobId() == before
     assert events.schema == spark.read.parquet(
         f"{SF_SMOKE}/events.parquet").schema
+
+
+@pytest.fixture(scope="module")
+def index_stores(spark, tables, tmp_path_factory):
+    """One store of each index kind over the smoke corpus, keyed by
+    kind."""
+    from open_instrument_spark.operators import (
+        dedup,
+        graphstore,
+        pq,
+        retrieval,
+        similarity,
+    )
+
+    root = tmp_path_factory.mktemp("index_stores")
+    emb = tables.table("embeddings").select("vec_id", "embedding")
+    docs = tables.table("documents").select("doc_id", "text")
+    C = similarity.seeded_centroids(64, 32, 7)
+    similarity.build_ivf_index(emb, f"{root}/ivf", centroids=C)
+    pq.build_ivfpq_index(emb, f"{root}/ivfpq")
+    dedup.build_minhash_index(docs, f"{root}/minhash")
+    retrieval.build_text_index(docs, f"{root}/text", n_buckets=4)
+    similarity.build_semantic_index(emb, f"{root}/semantic", C,
+                                    layout="sq8")
+    graphstore.build_knn_graph_store(emb, f"{root}/graph", C, k=5)
+    return {kind: f"{root}/{kind}" for kind in (
+        "ivf", "ivfpq", "minhash", "text", "semantic", "graph")}
+
+
+@pytest.mark.parametrize("kind, table, schema", [
+    ("ivf", "centroids", "CENTROIDS"),
+    ("ivfpq", "centroids", "CENTROIDS"),
+    ("ivfpq", "codebooks", "CODEBOOKS"),
+    ("minhash", "meta", "MINHASH_META"),
+    ("text", "meta", "TEXT_META"),
+    ("semantic", "meta", "SEMANTIC_META"),
+    ("semantic", "centroids", "CENTROIDS"),
+    ("semantic", "sq", "SQ"),
+    ("semantic", "sq_bounds", "SQ_BOUNDS"),
+    ("graph", "meta", "GRAPH_META"),
+    ("graph", "centroids", "CENTROIDS"),
+])
+def test_index_side_table_reads_without_jobs(spark, index_stores, kind,
+                                             table, schema):
+    """Every index store's side tables are read with the schema
+    ``operators.indexstore`` states once, so building the read launches
+    no Parquet inference job, and that schema is what the store wrote
+    (the text meta's ``epoch`` is a partition column)."""
+    from open_instrument_spark.operators import indexstore
+
+    ddl = getattr(indexstore, schema)
+    path = index_stores[kind]
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    indexstore.read(spark, path, table, ddl)
+    assert sched.nextJobId() == before
+    on_disk = spark.read.parquet(f"{path}/{table}").drop("epoch")
+    assert on_disk.schema.simpleString() == \
+        spark.createDataFrame([], ddl).schema.simpleString()
+
+
+def test_index_store_readers_launch_only_their_action(spark, index_stores):
+    """The store modules' side-table readers cost the jobs of their own
+    action (``first``, ``collect``, the text meta's sum) and no
+    inference job on top."""
+    from open_instrument_spark.operators import (
+        dedup,
+        graphstore,
+        pq,
+        retrieval,
+        similarity,
+    )
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn, kind):
+        before = sched.nextJobId()
+        fn(spark, index_stores[kind])
+        return sched.nextJobId() - before
+
+    got = {
+        "minhash": jobs(dedup._read_minhash_meta, "minhash"),
+        "semantic": jobs(similarity._read_semantic_meta, "semantic"),
+        "graph": jobs(graphstore._read_graph_meta, "graph"),
+        "text": jobs(retrieval._read_text_meta, "text"),
+        "ivfpq_sides": jobs(pq._load_index_sides, "ivfpq"),
+    }
+    # the text meta's sum is an aggregate: a shuffle stage and a result
+    assert got == {"minhash": 1, "semantic": 1, "graph": 1, "text": 2,
+                   "ivfpq_sides": 2}

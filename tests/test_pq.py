@@ -534,7 +534,7 @@ def test_maintenance_rebalances_ivfpq_layout(spark, emb, tmp_path):
         )
     )
     pq.append_to_ivfpq_index(drift, path)
-    skew0 = pq.ivfpq_cell_stats(spark, path)["skew"]
+    skew0 = pq.ivf_cell_stats(spark, path)["skew"]
     assert skew0 > 4.0
 
     before = {(r["n_id"], tuple(r["code"])) for r in

@@ -116,6 +116,21 @@ def test_append_retry_is_idempotent(spark, docs, tmp_path):
     assert meta_first[3] == 1  # next_epoch bumped exactly once
 
 
+def test_empty_append_records_zero_epoch(spark, docs, tmp_path):
+    """An empty batch lands an epoch with no postings files; its meta
+    row reads back as (0, 0) (the epoch is read with the postings'
+    schema, so there is nothing to infer) and search is unchanged."""
+    path = str(tmp_path / "empty_append")
+    rt.build_text_index(docs, path, n_buckets=8)
+    before = rows_of(rt.search_text_index(spark, path, QUERIES, k=10))
+    meta_before = rt._read_text_meta(spark, path)
+    rt.append_to_text_index(docs.limit(0), path)
+    epoch0 = spark.read.parquet(f"{path}/meta").where("epoch = 0")
+    assert [(r["n_docs"], r["sum_dl"]) for r in epoch0.collect()] == [(0, 0)]
+    assert rt._read_text_meta(spark, path) == (*meta_before[:3], 1)
+    assert rows_of(rt.search_text_index(spark, path, QUERIES, k=10)) == before
+
+
 def test_zero_word_docs_count_toward_stats(spark):
     """Documents that tokenize to nothing still count toward N and
     avgdl (the bm25_scores LEFT-JOIN contract) — via the NULL-term
