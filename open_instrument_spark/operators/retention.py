@@ -109,37 +109,83 @@ def apply_retention(points: DataFrame, policy: list[PolicyItem], now) -> DataFra
     return result
 
 
+# retention_report's columns, and the schema of the report
+# maintenance_tick returns
+REPORT_SCHEMA = ("policy_idx int not null, action string not null, "
+                 "n_samples bigint not null, n_series bigint not null")
+
+
+def _report_input(points: DataFrame, policy: list[PolicyItem], now) -> DataFrame:
+    """(policy_idx, _sk): the first-match policy index and the series
+    key, reusing the frame's precomputed key when it carries one."""
+    from open_instrument_spark.model import SERIES_KEY_COL, series_key
+
+    key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
+           else series_key())
+    return points.select(
+        policy_index(points, policy, now).alias("policy_idx"),
+        key.alias("_sk"),
+    )
+
+
+def _action(policy: list[PolicyItem]) -> Column:
+    """What happens to a policy_idx's rows: keep, downsample, drop or
+    default_drop (-1, no item matched)."""
+    action = F.lit("default_drop")
+    for i in range(len(policy) - 1, -1, -1):
+        item = policy[i]
+        a = ("downsample" if item.keep and item.mutations
+             else "keep" if item.keep else "drop")
+        action = F.when(F.col("policy_idx") == i, a).otherwise(action)
+    return action.alias("action")
+
+
+def _report_aggs() -> list[Column]:
+    return [F.count(F.lit(1)).alias("n_samples"),
+            F.countDistinct("_sk").alias("n_series")]
+
+
 def retention_report(points: DataFrame, policy: list[PolicyItem], now) -> DataFrame:
     """DRY-RUN audit of a policy — what an operator checks BEFORE
     letting the job rewrite 100 TB of store: per first-match policy
     item (plus the -1 default-DROP band), how many samples and distinct
     series it touches and what happens to them. One scan + one
     aggregation; the same ``policy_index`` expression the live job
-    uses, so the report can never disagree with the rewrite. Output:
-    (policy_idx, action ∈ keep|downsample|drop|default_drop, n_samples,
-    n_series), ordered by policy_idx."""
-    tagged = points.withColumn("_policy", policy_index(points, policy, now))
-    action = F.lit("default_drop")
-    for i in range(len(policy) - 1, -1, -1):
-        item = policy[i]
-        a = ("downsample" if item.keep and item.mutations
-             else "keep" if item.keep else "drop")
-        action = F.when(F.col("_policy") == i, a).otherwise(action)
-    from open_instrument_spark.model import SERIES_KEY_COL, series_key
-
-    # precomputed key reused when the frame carries one
-    key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
-           else series_key())
+    uses, so the report can never disagree with the rewrite. Output
+    (``REPORT_SCHEMA``): (policy_idx, action ∈
+    keep|downsample|drop|default_drop, n_samples, n_series), ordered by
+    policy_idx."""
     return (
-        tagged.withColumn("_action", action)
-        .withColumn("_sk", key)
-        .groupBy(F.col("_policy").alias("policy_idx"), F.col("_action").alias("action"))
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            F.countDistinct("_sk").alias("n_series"),
-        )
+        _report_input(points, policy, now)
+        .groupBy("policy_idx")
+        .agg(*_report_aggs())
+        .select("policy_idx", _action(policy), "n_samples", "n_series")
         .orderBy("policy_idx")
     )
+
+
+def retention_census(points: DataFrame, policy: list[PolicyItem],
+                     now) -> tuple[list, int, int]:
+    """``(report rows, variables, values)`` from ONE aggregation of
+    ``points``: the rows ``retention_report(...).collect()`` returns,
+    plus the distinct series and the samples of the whole frame (the
+    reference runner's closing counters, store_file_manager.cc:170-171).
+    A rollup over policy_idx adds the grand total as one more grouping
+    set, so the frame is scanned and its series keys rendered once."""
+    rows = (
+        _report_input(points, policy, now)
+        .rollup("policy_idx")
+        .agg(*_report_aggs(), F.grouping("policy_idx").alias("_total"))
+        .select("policy_idx", _action(policy), "n_samples", "n_series",
+                "_total")
+        .collect()
+    )
+    report = sorted((tuple(r[:4]) for r in rows if not r["_total"]),
+                    key=lambda r: r[0])
+    total = [r for r in rows if r["_total"]]
+    if not total:  # an empty frame has no grouping sets at all
+        return report, 0, 0
+    return report, total[0]["n_series"], total[0]["n_samples"]
 
 
 def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
@@ -147,10 +193,16 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     """W1 as the background maintenance job (the reference ticks every
     ``interval`` seconds, default 600 — lib/openinstrument.proto:211,
     runner server/store_file_manager.cc:87-191): read the partitioned
-    store, apply the policy, rewrite ONLY the date partitions whose
-    contents changed (untouched recent partitions are never rewritten,
-    so the job's write cost tracks the aged data, not the store size).
-    The rewrite is ``sources.ingest.replace_dates``."""
+    store, apply the policy, and rewrite the date partitions that hold
+    a row outside the plain-keep bands: a dropped, default-dropped or
+    downsample-band row. Dates holding only plain-keep rows are never
+    rewritten. A downsample band's rows stay in their band once
+    downsampled, so every date holding downsampled history is rewritten
+    on every run, its already-downsampled rows included (a fixpoint:
+    the rows come back unchanged). Write cost therefore tracks the aged
+    data plus all downsampled history, not only newly aged rows. The
+    replacement reads only the rewritten dates (a ``dt`` partition
+    filter) and lands through ``sources.ingest.replace_dates``."""
     from open_instrument_spark.sources.ingest import (
         POINTS_PARTITION_COLS,
         read_store,
@@ -204,19 +256,19 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
         return
 
     # Replacement rows: plain-keep rows that share a touched partition,
-    # plus the full downsampled output of every mutated KEEP band (its
-    # source rows are non-plain, hence inside touched partitions; its
-    # output may also anchor into other dates — appended there, which is
-    # additive and safe).
+    # plus the full downsampled output of every mutated KEEP band. Band
+    # rows are non-plain, hence all inside the touched dates, so the
+    # replacement reads only those dates' partitions. A band's output
+    # may anchor into other dates: replace_dates adds it there.
+    cur = store.filter(F.col("dt").isin(del_dates)).drop(*POINTS_PARTITION_COLS)
+    cur = cur.withColumn("_policy", policy_index(cur, policy, now))
     cols = pts.columns
     outs = []
     if plain_idx:
-        outs.append(
-            tagged.filter(is_plain & F.to_date("ts").isin(del_dates)).select(*cols)
-        )
+        outs.append(cur.filter(is_plain).select(*cols))
     for i, item in nonplain:
         if item.keep and item.mutations:
-            band = tagged.filter(F.col("_policy") == i).drop("_policy")
+            band = cur.filter(F.col("_policy") == i).drop("_policy")
             outs.append(_mutate.pipeline(band, list(item.mutations)).select(*cols))
     replacement = outs[0] if outs else pts.limit(0)
     for o in outs[1:]:

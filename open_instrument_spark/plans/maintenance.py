@@ -11,17 +11,20 @@ horizon) and logs a summary, but never rewrites a file
 (store_file_manager.cc:87-177). ``maintenance_tick(dry_run=True)`` is
 that pass: it returns the report rows and leaves the store untouched.
 ``dry_run=False`` is the pass the log-only runner stops short of:
-apply the policy in place (``retention.run_retention_job`` — write
-cost tracks aged data, not store size), then compact any date
-partition that has accumulated more parquet files than its bucket
-count (appends leave >1 file per bucket; the canonical compacted state
-is one).
+apply the policy in place (``retention.run_retention_job`` rewrites
+the dates holding dropped or downsample-band rows), then compact any
+date partition that has accumulated more parquet files than its
+bucket count (appends leave >1 file per bucket; the canonical
+compacted state is one). The report and the runner's counters come
+from one store scan (``retention.retention_census``), in the dry run
+and the applied tick alike.
 
 Every rewrite goes through one of two crash-safe protocols:
 
 - the points store's **date replacement**
-  (``sources.ingest.replace_dates``): stage the new rows, delete the
-  dates' directories, append at a fresh negative epoch;
+  (``sources.ingest.replace_dates``): stage the new rows in the store's
+  layout, delete the dates' directories, rename the staged dates into
+  a fresh negative epoch (or the root of a plain store);
 - the index stores' **sibling swap**: :func:`_recover_old` promotes a
   ``.old`` left by a crash, the new store is written to a fresh
   sibling, and :func:`_swap_in` promotes it. :func:`_compact_store`
@@ -53,8 +56,9 @@ from open_instrument_spark.session import local_df
 
 from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.retention import (
+    REPORT_SCHEMA,
     PolicyItem,
-    retention_report,
+    retention_census,
     run_retention_job,
 )
 from open_instrument_spark.sources.ingest import (
@@ -599,7 +603,8 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
                      ) -> tuple[DataFrame, dict]:
     """One StoreFileManager tick. Returns ``(report, summary)``:
     ``report`` is the retention_report rows AS OF tick start (the
-    reference logs what it sees before anything changes), ``summary``
+    reference logs what it sees before anything changes), a
+    driver-local frame; ``summary``
     mirrors the runner's closing LOG(INFO) counters
     (store_file_manager.cc:170-171: variables and values examined)
     plus what the tick did (``applied``, ``compacted_dates``, one dict
@@ -627,16 +632,13 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     measured and reported, the other stores their epoch count; forget
     sets are NOT applied."""
     pts = read_store(spark, store_path).drop(*POINTS_PARTITION_COLS)
-    report = retention_report(pts, policy, now)
-    from open_instrument_spark.model import series_key
-
-    counts = pts.select(
-        F.countDistinct(series_key()).alias("variables"),
-        F.count(F.lit(1)).alias("values"),
-    ).first()
+    # one aggregation of the store; materialized, so the report stays
+    # the tick-START state after the rewrite below
+    rows, variables, values = retention_census(pts, policy, now)
+    report = local_df(spark, rows, REPORT_SCHEMA)
     summary = {
-        "variables": counts["variables"],
-        "values": counts["values"],
+        "variables": variables,
+        "values": values,
         "applied": not dry_run,
         "compacted_dates": [],
         **{kind.key: {} for kind in _INDEX_KINDS},
@@ -654,10 +656,6 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
                      "compacted": False, "swapped": False,
                      "recovered": False})
         return report, summary
-    # the caller reads the report AFTER the rewrite — materialize it
-    # now so the returned frame reflects tick-START state, not a lazy
-    # re-scan of rewritten (or deleted) files
-    report = local_df(spark, report.collect(), report.schema)
     run_retention_job(spark, store_path, policy, now, n_buckets=n_buckets)
     summary["compacted_dates"] = compact_dates(
         spark, store_path, n_buckets=n_buckets,

@@ -126,25 +126,29 @@ def rejected(
     return points.filter(~_valid_predicate(now, max_future_s, strict))
 
 
-def dedup(points: DataFrame) -> DataFrame:
-    """Exactly-once upgrade (SURVEY.md §2.8): drop duplicate
-    (series_key, ts) samples — the reference's WAL replay can
-    double-append (disk_datastore.cc:112-128 has no dedup); we fix that.
-
-    Conflicting samples (same key+ts, different payload) resolve
-    DETERMINISTICALLY to the greatest (dval, sval) — dropDuplicates
-    would keep an arbitrary row, which both varies run-to-run and can
-    disagree with a SQL oracle.
-    """
-    pts = points.withColumn("_sk", _key_expr(points))
-    w = Window.partitionBy("_sk", "ts").orderBy(
+def _keep_greatest(points: DataFrame, *keys) -> DataFrame:
+    """One row per ``keys`` group: the one with the greatest (dval,
+    sval), nulls last. This is the dedup tie-break; ``dropDuplicates``
+    would keep an arbitrary row, which varies run to run and can
+    disagree with a SQL oracle."""
+    w = Window.partitionBy(*keys).orderBy(
         F.col("dval").desc_nulls_last(), F.col("sval").desc_nulls_last()
     )
     return (
-        pts.withColumn("_rn", F.row_number().over(w))
+        points.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_sk", "_rn")
+        .drop("_rn")
     )
+
+
+def dedup(points: DataFrame) -> DataFrame:
+    """Exactly-once upgrade (SURVEY.md §2.8): drop duplicate
+    (series_key, ts) samples. The reference's WAL replay can
+    double-append (disk_datastore.cc:112-128 has no dedup). Conflicting
+    samples (same key and ts, different payload) resolve to the
+    greatest (dval, sval) (:func:`_keep_greatest`)."""
+    pts = points.withColumn("_sk", _key_expr(points))
+    return _keep_greatest(pts, "_sk", "ts").drop("_sk")
 
 
 def ingest_batch(points: DataFrame, source_host: str | None = None, now=None) -> DataFrame:
@@ -156,13 +160,66 @@ def ingest_batch(points: DataFrame, source_host: str | None = None, now=None) ->
     return dedup(validate(out, now=now))
 
 
+def _store_layout(points: DataFrame, n_buckets: int,
+                  name_buckets: int | None = None):
+    """The store's partition columns over ONE exchange.
+
+    Returns ``(frame, partition columns)``. The frame carries the
+    rendered series key ``_sk``, ``dt``, ``bucket = pmod(hash(_sk), N)``
+    and, with ``name_buckets``, ``name_bucket``; it is hash partitioned
+    by ``repartition(n_buckets, "_sk")``. Spark places a row in
+    partition ``pmod(murmur3(_sk), n_buckets)``, which is its ``bucket``
+    value, so each task holds exactly one bucket and writes one file per
+    date (and name bucket). The trade: a write runs ``n_buckets`` tasks,
+    however many dates it spans.
+    """
+    pts = (
+        points.withColumn("_sk", _key_expr(points))
+        .withColumn("dt", F.to_date("ts"))
+        .withColumn("bucket", F.pmod(F.hash("_sk"), F.lit(n_buckets)))
+    )
+    part_cols = ["dt", "bucket"]
+    if name_buckets is not None:
+        pts = pts.withColumn(
+            "name_bucket", F.pmod(F.hash("name"), F.lit(name_buckets))
+        )
+        part_cols = ["dt", "name_bucket", "bucket"]
+    return pts.repartition(n_buckets, "_sk"), part_cols
+
+
+def _write_layout(pts: DataFrame, part_cols: list[str], path: str,
+                  mode: str) -> None:
+    """Write a :func:`_store_layout` frame: rows sorted by (series key,
+    ts) inside each partition directory. Leading the sort with the
+    partition columns is what the partitioned writer needs, so this is
+    the only sort (a sort without them is replaced by the writer's own).
+
+    The staged ``series_key``/``_label_*`` columns are an in-session
+    fast path (model.STAGED_LABEL_PREFIX): they are derivable, so
+    persisting them would bloat every store file and change the on-disk
+    points schema the readers contract on."""
+    from open_instrument_spark.model import STAGED_LABEL_PREFIX
+
+    stale = ["_sk", "series_key"] + [
+        c for c in pts.columns if c.startswith(STAGED_LABEL_PREFIX)
+    ]
+    (
+        pts.sortWithinPartitions(*part_cols, "_sk", "ts")
+        .drop(*stale)
+        .write.mode(mode)
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
+
+
 def write_points(points: DataFrame, path: str, n_buckets: int = 16,
                  mode: str = "append", name_buckets: int | None = None) -> None:
     """S8 reindex analog: partitioned, sorted Parquet write.
 
     dt partition = time pruning; bucket partition = series co-location;
     within-file sort by (series_key, ts) = tight row-group stats + cheap
-    downstream per-series windows.
+    downstream per-series windows. One exchange, one sort
+    (:func:`_store_layout`, :func:`_write_layout`).
 
     ``name_buckets`` adds a ``name_bucket = pmod(hash(name), N)``
     partition level between dt and bucket — the Spark analog of the
@@ -174,33 +231,21 @@ def write_points(points: DataFrame, path: str, n_buckets: int = 16,
     dates x name_buckets x n_buckets — when enabling name_buckets, size
     n_buckets down so the product stays at the intended file count.
     """
-    pts = points.withColumn("_sk", _key_expr(points)).withColumn(
-        "dt", F.to_date("ts")
-    ).withColumn("bucket", F.pmod(F.hash("_sk"), F.lit(n_buckets)))
-    part_cols = ["dt", "bucket"]
-    if name_buckets is not None:
-        pts = pts.withColumn(
-            "name_bucket", F.pmod(F.hash("name"), F.lit(name_buckets))
-        )
-        part_cols = ["dt", "name_bucket", "bucket"]
-    # The staged series_key/_label_* columns are an IN-SESSION fast path
-    # (model.STAGED_LABEL_PREFIX) — they are derivable, so persisting
-    # them would bloat every store file and change the on-disk points
-    # schema the readers contract on. _key_expr above still reuses the
-    # staged key for bucketing/sorting before the drop.
-    from open_instrument_spark.model import STAGED_LABEL_PREFIX
+    pts, part_cols = _store_layout(points, n_buckets, name_buckets)
+    _write_layout(pts, part_cols, path, mode)
 
-    stale = ["_sk", "series_key"] + [
-        c for c in points.columns if c.startswith(STAGED_LABEL_PREFIX)
-    ]
-    (
-        pts.repartition(*part_cols)
-        .sortWithinPartitions("_sk", "ts")
-        .drop(*stale)
-        .write.mode(mode)
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
+
+def write_deduped(points: DataFrame, path: str, n_buckets: int = 16,
+                  mode: str = "append") -> None:
+    """``write_points(dedup(points), ...)`` over write_points' one
+    exchange. The dedup window's (series key, ts) grouping is satisfied
+    by the hash partitioning on the series key, and its partition spec
+    leads with the store's partition columns (functions of the key and
+    ts, so the groups are the same), so the window's sort is also the
+    writer's. The streaming sink's write."""
+    pts, part_cols = _store_layout(points, n_buckets)
+    _write_layout(_keep_greatest(pts, *part_cols, "_sk", "ts"), part_cols,
+                  path, mode)
 
 
 def write_points_bucketed(points: DataFrame, table: str, n_buckets: int = 64,
@@ -308,6 +353,19 @@ def _dt_dirs(store_path: str) -> dict[str, list[str]]:
     return out
 
 
+def _publish(src: str, dst: str) -> None:
+    """Move ``src`` to ``dst`` by rename. Where ``dst`` is an existing
+    directory, ``src``'s entries move into it one by one, so what it
+    already holds stays (Spark's part-file names carry a per-write id
+    and never collide)."""
+    if os.path.isdir(dst):
+        for name in os.listdir(src):
+            _publish(os.path.join(src, name), os.path.join(dst, name))
+    else:
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+
+
 def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
                   n_buckets: int = 16) -> None:
     """Replace everything a write_points store holds for ``dates`` with
@@ -316,17 +374,20 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
 
     ``store`` is the caller's ``read_store(spark, store_path)`` frame;
     its columns tell whether the store is name-bucketed. The rows are
-    staged to disk BEFORE any source partition is deleted (a lazy plan
-    re-reading deleted files, or an evicted cache, would corrupt the
-    rewrite) and read back through ``read_store``. The dates'
-    directories then go at both layout depths, and the staged rows are
-    appended at the store's own partition depth: an epoch-layout store
-    gets a fresh NEGATIVE epoch below every existing one. The streaming
-    sink's epochs are its checkpointed batch ids (always >= 0), so
-    epoch ids never recycle and a resumed stream can never overwrite a
-    rewrite. Single writer: run from the maintenance loop that owns the
-    store. Local-FS removal; on a cluster the same steps go through the
-    Hadoop FileSystem API.
+    written once, by ``write_points``, to a staging directory in the
+    store's final layout, BEFORE any source partition is deleted (a
+    lazy plan re-reading deleted files, or an evicted cache, would
+    corrupt the rewrite). The dates' directories then go at both layout
+    depths, and each staged ``dt=`` directory is renamed into the
+    store's own partition depth: an epoch-layout store gets a fresh
+    NEGATIVE epoch below every existing one, a plain store takes them
+    at its root. A ``dt=`` directory that is still there (rows that
+    anchor into a date outside ``dates``) takes the staged files one by
+    one. The streaming sink's epochs are its checkpointed batch ids
+    (always >= 0), so epoch ids never recycle and a resumed stream can
+    never overwrite a rewrite. Single writer: run from the maintenance
+    loop that owns the store. Local-FS renames; on a cluster the same
+    steps go through the Hadoop FileSystem API.
 
     A name-bucketed store is rejected before anything is staged: its N
     is not recoverable from the directory names, and a rewrite without
@@ -338,14 +399,14 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
             "rewritten in place without the writer's name_buckets"
         )
     staging = store_path.rstrip("/") + "_replace_staging"
-    rows.write.mode("overwrite").parquet(staging)
+    write_points(rows, staging, n_buckets=n_buckets, mode="overwrite")
     # whole date dirs go, so buckets the rewrite leaves empty go too
     dirs = _dt_dirs(store_path)
     for d in dates:
         for part in dirs.get(str(d), []):
             shutil.rmtree(part, ignore_errors=True)
-    # dt=/bucket= appended at the root of an epoch=N store would mix
-    # partition schemas (CONFLICTING_PARTITION_COLUMN_NAMES on every read)
+    # dt=/bucket= at the root of an epoch=N store would mix partition
+    # schemas (CONFLICTING_PARTITION_COLUMN_NAMES on every read)
     epoch_dirs = glob.glob(os.path.join(store_path, "epoch=*"))
     dest = store_path
     if epoch_dirs:
@@ -356,6 +417,6 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
             except ValueError:
                 pass
         dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(read_store(rows.sparkSession, staging), dest,
-                 n_buckets=n_buckets, mode="append")
+    for part in glob.glob(os.path.join(staging, "dt=*")):
+        _publish(part, os.path.join(dest, os.path.basename(part)))
     shutil.rmtree(staging, ignore_errors=True)

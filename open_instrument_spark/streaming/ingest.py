@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from open_instrument_spark.model import POINTS_SCHEMA, series_key
+from open_instrument_spark.model import POINTS_SCHEMA
 from open_instrument_spark.sources import ingest as batch_ingest
 
 
@@ -41,7 +41,8 @@ def start_ingest(points_stream: DataFrame, dest_path: str, checkpoint: str,
                  n_buckets: int = 16, now=None,
                  on_batch_complete=None) -> StreamingQuery:
     """S1 streaming Add: validate → dedup-within-batch → partitioned
-    write, exactly-once via checkpointed foreachBatch + an IDEMPOTENT
+    write (``sources.ingest.write_deduped``: one exchange, one sort per
+    micro-batch), exactly-once via checkpointed foreachBatch + an IDEMPOTENT
     sink: each epoch overwrites its own ``epoch=N`` subdirectory, so a
     replay after a crash-between-write-and-checkpoint rewrites the same
     files instead of double-appending (the WAL-replay hazard the
@@ -59,9 +60,9 @@ def start_ingest(points_stream: DataFrame, dest_path: str, checkpoint: str,
     """
 
     def sink(batch: DataFrame, epoch: int) -> None:
-        cleaned = batch_ingest.ingest_batch(batch, now=now)
-        batch_ingest.write_points(
-            cleaned, f"{dest_path}/epoch={epoch}", n_buckets=n_buckets,
+        batch_ingest.write_deduped(
+            batch_ingest.validate(batch, now=now),
+            f"{dest_path}/epoch={epoch}", n_buckets=n_buckets,
             mode="overwrite",
         )
         if on_batch_complete is not None:

@@ -1034,3 +1034,60 @@ def test_index_store_readers_launch_only_their_action(spark, index_stores):
     # the text meta's sum is an aggregate: a shuffle stage and a result
     assert got == {"minhash": 1, "semantic": 1, "graph": 1, "text": 2,
                    "ivfpq_sides": 2}
+
+
+def test_retention_rewrite_reads_only_touched_dates(spark, tmp_path,
+                                                    monkeypatch):
+    """The retention rewrite's replacement prunes on ``dt``: every scan
+    in its plan lists ``dt`` under PartitionFilters, and an untouched
+    date's files are never opened (they are moved away while the
+    replacement is written, which fails a scan that still lists them)."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from open_instrument_spark.operators.retention import (
+        PolicyItem,
+        run_retention_job,
+    )
+    from open_instrument_spark.sources import ingest
+
+    store = str(tmp_path / "store")
+    rows = [("/m", {"h": "a"}, dt.datetime(2024, 1, 30, h), 1.0, None)
+            for h in range(3)]                      # recent: untouched
+    rows += [("/m", {"h": "a"}, dt.datetime(2022, 1, 30, h), 2.0 + h, None)
+             for h in range(3)]                     # aged: daily mean
+    rows += [("/m", {"h": "a"}, dt.datetime(1924, 1, 30), 5.0, None)]
+    ingest.write_points(spark.createDataFrame(
+        rows, "name string, labels map<string,string>, ts timestamp, "
+              "dval double, sval string"), store, n_buckets=2)
+    untouched = os.path.join(store, "dt=2024-01-30")
+    aside = str(tmp_path / "aside")
+    plans = []
+    real = ingest.replace_dates
+
+    def replace(store_df, path, dates, new_rows, n_buckets=16):
+        plans.append(plan_of(new_rows))
+        shutil.move(untouched, aside)
+        try:
+            real(store_df, path, dates, new_rows, n_buckets=n_buckets)
+        finally:
+            shutil.move(aside, untouched)
+
+    monkeypatch.setattr(ingest, "replace_dates", replace)
+    policy = [
+        PolicyItem(("*",), keep=True, max_age="4w"),
+        PolicyItem(("*",), keep=True, min_age="4w", max_age="5y",
+                   mutations=(("mean", "1d"),)),
+    ]
+    run_retention_job(spark, store, policy, "2024-01-31 00:00:00",
+                      n_buckets=2)
+    scans = [ln for ln in plans[0].splitlines() if "FileScan" in ln]
+    assert len(scans) == 2, plans[0]   # the plain band and the mean band
+    for scan in scans:
+        part = scan[scan.index("PartitionFilters: ["):]
+        assert "dt#" in part[:part.index("]")], scan
+    got = sorted((r["ts"], r["dval"])
+                 for r in spark.read.parquet(store).collect())
+    assert got == [(dt.datetime(2022, 1, 30), 3.0)] + [
+        (dt.datetime(2024, 1, 30, h), 1.0) for h in range(3)]
