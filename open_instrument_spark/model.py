@@ -111,16 +111,13 @@ def series_key(name: str = "name", labels: str = "labels") -> Column:
     return _canonical_variable(name, labels)
 
 
-def with_series_key(points: DataFrame, col_name: str = "series_key") -> DataFrame:
-    """Attach the canonical key — reusing a precomputed ``series_key``
-    column (the events adapter ships one rendered from staged scalars;
-    bit-equality with the HOF render is pytest-pinned) instead of paying
-    the per-row map_entries/sort/filter/transform render again."""
-    if col_name in points.columns:
+def with_series_key(points: DataFrame) -> DataFrame:
+    """Attach the canonical key as ``series_key``, reusing one the frame
+    already carries (the events adapter ships one rendered from staged
+    scalars; bit-equality with the render is pytest-pinned)."""
+    if SERIES_KEY_COL in points.columns:
         return points
-    if col_name != SERIES_KEY_COL and SERIES_KEY_COL in points.columns:
-        return points.withColumn(col_name, F.col(SERIES_KEY_COL))
-    return points.withColumn(col_name, series_key())
+    return points.withColumn(SERIES_KEY_COL, series_key())
 
 
 def epoch_seconds(ts: Column | str = "ts") -> Column:
@@ -204,7 +201,7 @@ def events_to_points(events: DataFrame) -> DataFrame:
     )
     # The three appended columns (series_key + the staged label scalars)
     # are an internal fast path: Catalyst prunes them wherever unused,
-    # operators reuse them via mutate._with_key / model.label_value, and
+    # operators reuse them via with_series_key / label_value, and
     # every label-REWRITING operator drops them (drop_staged_columns).
     return staged.select(
         name.alias("name"),

@@ -68,12 +68,10 @@ dispatched from ``maintenance_tick``.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.similarity import (
     _cell_assign,
@@ -84,22 +82,6 @@ from open_instrument_spark.operators.similarity import (
 )
 
 EDGE_COLS = ["src", "dst", "cell", "rank", "cos"]
-
-
-def _landed_cells(epoch_dir: str) -> list[int]:
-    """Touched cells of a just-landed epoch, read from its ``cell=C``
-    partition DIRECTORY names — no Spark job (r15, judge r14 "Next
-    round" #6: absorb previously ran a whole distinct+collect job, plus
-    the checkpoint materialization it forced, to learn exactly what the
-    partitioned write is about to encode in directory names; the write
-    itself is now the assignment's only consumer). Local-fs listing is
-    the store module's standing convention (the stale-partition removal
-    below already uses shutil/os paths)."""
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(epoch_dir)
-        if d.startswith("cell=")
-    )
 
 
 def _write_graph_meta(spark, path: str, dim: int, n_cells: int, k: int,
@@ -148,8 +130,7 @@ def rebuild_edge_cells(spark, path: str, cells: list[int], k: int,
     }
     for c in cells:
         if c not in with_members:
-            shutil.rmtree(os.path.join(eroot, f"cell={c}"),
-                          ignore_errors=True)
+            storefs.remove(storefs.partition_dir(eroot, "cell", c))
     return sorted(with_members)
 
 
@@ -221,8 +202,7 @@ def rebuild_edge_pcells(spark, path: str, pcells: list[int], k: int,
     }
     for c in pcells:
         if c not in with_edges:
-            shutil.rmtree(os.path.join(eroot, f"pcell={c}"),
-                          ignore_errors=True)
+            storefs.remove(storefs.partition_dir(eroot, "pcell", c))
     return sorted(with_edges)
 
 
@@ -307,12 +287,12 @@ def absorb_into_knn_graph_store(path: str, new_vectors: DataFrame,
     else:
         asg = _cell_assign(new_vectors, C, id_col, vec_col, assign
                            ).select("vec_id", "v", "cell")
-    # static overwrite replaces the whole epoch dir, so _landed_cells
-    # lists exactly this batch's cells even on a replay (a dynamic one
-    # would keep the cell dirs of an earlier attempt)
+    # the touched cells are the landed epoch's cell= directories, listed
+    # without a Spark job: static overwrite replaces the whole epoch dir,
+    # so a replay lists only its own cells (a dynamic one would not)
     asg.write.option("partitionOverwriteMode", "static").partitionBy(
         "cell").mode("overwrite").parquet(epoch_dir)
-    cells = _landed_cells(epoch_dir)
+    cells = storefs.int_partitions(epoch_dir, "cell")
     if n_probe > 1:
         pcells = affected_pcells(spark, f"{path}/vectors", cells)
         edge_cells = rebuild_edge_pcells(spark, path, pcells, k)

@@ -22,11 +22,10 @@ missing table raises ``AnalysisException`` [PATH_NOT_FOUND].
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.session import local_df
 
 CENTROIDS = "cell int, c array<double>"
@@ -43,13 +42,6 @@ TEXT_META = "n_docs long, sum_dl long, n_buckets int"
 # the side tables whose schema does not depend on the store kind
 SCHEMAS = {"centroids": CENTROIDS, "codebooks": CODEBOOKS, "sq": SQ,
            "sq_bounds": SQ_BOUNDS}
-
-
-def present(path: str, *tables: str) -> list[str]:
-    """The subset of ``tables`` the store at ``path`` has: the one
-    presence check on store tables (local filesystem; a Hadoop
-    FileSystem seam would go here)."""
-    return [t for t in tables if os.path.isdir(os.path.join(path, t))]
 
 
 def read(spark, path: str, table: str, schema: str | None = None) -> DataFrame:
@@ -119,7 +111,7 @@ def ivf_cell_stats(spark, path: str) -> dict:
     is a partition column, so the scan reads no vector or code bytes.
     Returns {"counts": {cell: n}, "skew": float, "n_cells": int}."""
     n_cells = len(read_centroids(spark, path))
-    table = (present(path, "codes") or ["vectors"])[0]
+    table = (storefs.present(path, "codes") or ["vectors"])[0]
     counts = {
         r["cell"]: r["n"]
         for r in spark.read.parquet(f"{path}/{table}")

@@ -27,15 +27,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from open_instrument_spark.functions.durations import parse_duration_ms
-from open_instrument_spark.model import epoch_seconds, series_key
-
-SERIES_KEY_COL = "series_key"
-
-
-def _with_key(points: DataFrame) -> DataFrame:
-    if SERIES_KEY_COL in points.columns:
-        return points
-    return points.withColumn(SERIES_KEY_COL, series_key())
+from open_instrument_spark.model import (
+    SERIES_KEY_COL,
+    epoch_seconds,
+    with_series_key as _with_key,
+)
 
 
 def _series_window() -> Window:

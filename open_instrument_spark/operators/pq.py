@@ -37,6 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.indexstore import ivf_cell_stats
 from open_instrument_spark.operators.similarity import as_double
@@ -678,7 +679,7 @@ def rebalance_ivfpq_index(spark, path: str, out_path: str | None = None,
     if stats["skew"] < skew_threshold and not force:
         return {"rebalanced": False, "skew_before": stats["skew"],
                 "skew_after": stats["skew"], "out_path": None}
-    if not indexstore.present(path, "vectors"):
+    if not storefs.present(path, "vectors"):
         raise ValueError(
             f"rebalance of {path} needs the raw-vector sidecar "
             "(build_ivfpq_index(include_vectors=True)) — codes cannot "
@@ -726,7 +727,7 @@ def append_to_ivfpq_index(new_vectors: DataFrame, path: str,
     assigned.select("n_id", "code", "cell").write.partitionBy(
         "cell"
     ).mode("append").parquet(f"{path}/codes")
-    if indexstore.present(path, "vectors"):
+    if storefs.present(path, "vectors"):
         assigned.select("n_id", "v", "cell").write.partitionBy(
             "cell"
         ).mode("append").parquet(f"{path}/vectors")

@@ -118,13 +118,11 @@ REPORT_SCHEMA = ("policy_idx int not null, action string not null, "
 def _report_input(points: DataFrame, policy: list[PolicyItem], now) -> DataFrame:
     """(policy_idx, _sk): the first-match policy index and the series
     key, reusing the frame's precomputed key when it carries one."""
-    from open_instrument_spark.model import SERIES_KEY_COL, series_key
+    from open_instrument_spark.model import SERIES_KEY_COL, with_series_key
 
-    key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
-           else series_key())
-    return points.select(
+    return with_series_key(points).select(
         policy_index(points, policy, now).alias("policy_idx"),
-        key.alias("_sk"),
+        F.col(SERIES_KEY_COL).alias("_sk"),
     )
 
 
@@ -193,50 +191,43 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     """W1 as the background maintenance job (the reference ticks every
     ``interval`` seconds, default 600 — lib/openinstrument.proto:211,
     runner server/store_file_manager.cc:87-191): read the partitioned
-    store, apply the policy, and rewrite the date partitions that hold
-    a row outside the plain-keep bands: a dropped, default-dropped or
-    downsample-band row. Dates holding only plain-keep rows are never
-    rewritten. A downsample band's rows stay in their band once
-    downsampled, so every date holding downsampled history is rewritten
-    on every run, its already-downsampled rows included (a fixpoint:
-    the rows come back unchanged). Write cost therefore tracks the aged
-    data plus all downsampled history, not only newly aged rows. The
-    replacement reads only the rewritten dates (a ``dt`` partition
-    filter) and lands through ``sources.ingest.replace_dates``."""
+    store and replace each date holding a dropped, default-dropped or
+    downsample-band row with ``apply_retention`` over that date's rows,
+    through ``sources.ingest.replace_dates``. Downsampled rows stay in
+    their band, so every date holding downsampled history is rewritten
+    on every run (a fixpoint: the rows come back unchanged); write cost
+    tracks all downsampled history, not only newly aged rows."""
+    from open_instrument_spark import storefs
     from open_instrument_spark.sources.ingest import (
         POINTS_PARTITION_COLS,
         read_store,
         replace_dates,
     )
 
+    storefs.recover_replacement(store_path)
     # drop() ignores absent columns, so both the plain dt/bucket layout
     # and the streaming sink's epoch=N/dt/bucket layout normalize here.
     store = read_store(spark, store_path)
     pts = store.drop(*POINTS_PARTITION_COLS)
-    tagged = pts.withColumn("_policy", policy_index(pts, policy, now))
     plain_idx = [
         i for i, item in enumerate(policy) if item.keep and not item.mutations
-    ]
-    nonplain = [
-        (i, item) for i, item in enumerate(policy)
-        if not (item.keep and not item.mutations)
     ]
 
     # A partition needs rewriting iff it contains any row NOT in a
     # plain-keep band (dropped, default-dropped, or downsampled). This is
     # policy-driven — no row-count proxy, so e.g. a band downsampled
     # 1-row→1-row is still detected.
-    is_plain = (
-        F.col("_policy").isin(plain_idx) if plain_idx else F.lit(False)
-    )
-    touched = tagged.filter(~is_plain)
+    touched = pts
+    if plain_idx:
+        touched = pts.filter(~policy_index(pts, policy, now).isin(plain_idx))
     # Scan prune: rows younger than the youngest EXPLICIT non-plain
     # band's min_age can't match one of those bands — but they can still
     # be policy_index = -1 (default DROP) if nothing matches them at all.
     # The prune is therefore only sound when some universal plain item
     # ('*', no labels, min_age unset, max_age covering the cutoff)
     # guarantees young rows always match; otherwise scan everything.
-    min_ages = [item.min_age_ms or 0 for _, item in nonplain]
+    min_ages = [item.min_age_ms or 0 for i, item in enumerate(policy)
+                if i not in plain_idx]
     cutoff_ms = min(min_ages) if min_ages else 0
     young_covered = any(
         item.keep
@@ -255,22 +246,9 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     if not del_dates:
         return
 
-    # Replacement rows: plain-keep rows that share a touched partition,
-    # plus the full downsampled output of every mutated KEEP band. Band
-    # rows are non-plain, hence all inside the touched dates, so the
-    # replacement reads only those dates' partitions. A band's output
-    # may anchor into other dates: replace_dates adds it there.
+    # The replacement is the policy applied to the touched dates: band
+    # rows are non-plain, hence all inside them. A band's output may
+    # anchor into other dates: replace_dates adds it there.
     cur = store.filter(F.col("dt").isin(del_dates)).drop(*POINTS_PARTITION_COLS)
-    cur = cur.withColumn("_policy", policy_index(cur, policy, now))
-    cols = pts.columns
-    outs = []
-    if plain_idx:
-        outs.append(cur.filter(is_plain).select(*cols))
-    for i, item in nonplain:
-        if item.keep and item.mutations:
-            band = cur.filter(F.col("_policy") == i).drop("_policy")
-            outs.append(_mutate.pipeline(band, list(item.mutations)).select(*cols))
-    replacement = outs[0] if outs else pts.limit(0)
-    for o in outs[1:]:
-        replacement = replacement.unionByName(o)
-    replace_dates(store, store_path, del_dates, replacement, n_buckets=n_buckets)
+    replace_dates(store, store_path, del_dates,
+                  apply_retention(cur, policy, now), n_buckets=n_buckets)

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.operators import indexstore
 from open_instrument_spark.operators.indexstore import ivf_cell_stats
 from open_instrument_spark.session import local_df
@@ -1733,7 +1734,7 @@ def _write_semantic_codes(assigned: DataFrame, path: str,
         F.min(norm(F.col("v"))).alias("min_norm"),
     ).first()
     max_err, min_norm = float(row["max_err"]), float(row["min_norm"])
-    if indexstore.present(path, "sq_bounds"):
+    if storefs.present(path, "sq_bounds"):
         old = indexstore.read(spark, path, "sq_bounds").first()
         max_err = max(max_err, float(old["max_err"]))
         min_norm = min(min_norm, float(old["min_norm"]))
@@ -1748,7 +1749,7 @@ def derived_sq_margin(spark, path: str) -> float:
     approx_cos > threshold − this margin provably drops no true match
     (a fixed margin holds only on the corpus it was tuned on;
     small-norm or wide-range embeddings exceed it)."""
-    if not indexstore.present(path, "sq_bounds"):
+    if not storefs.present(path, "sq_bounds"):
         raise ValueError(
             f"semantic store at {path} has no sq_bounds table — pass "
             "margin= explicitly or rebuild the store")
@@ -1810,7 +1811,7 @@ def absorb_into_semantic_index(path: str, assigned_new: DataFrame,
     spark = assigned_new.sparkSession
     assigned_new.select("vec_id", "v", "cell").write.partitionBy(
         "cell").mode("overwrite").parquet(f"{path}/vectors/epoch={int(epoch)}")
-    if indexstore.present(path, "sq"):
+    if storefs.present(path, "sq"):
         _write_semantic_codes(
             assigned_new.select("vec_id", "v", "cell"), path, epoch)
     dim, n_cells, nxt = _read_semantic_meta(spark, path)

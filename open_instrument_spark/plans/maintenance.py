@@ -19,15 +19,15 @@ compacted state is one). The report and the runner's counters come
 from one store scan (``retention.retention_census``), in the dry run
 and the applied tick alike.
 
-Every rewrite goes through one of two crash-safe protocols:
+Every rewrite goes through one of two crash-safe protocols (their
+directory steps are in ``storefs``):
 
 - the points store's **date replacement**
   (``sources.ingest.replace_dates``): stage the new rows in the store's
   layout, delete the dates' directories, rename the staged dates into
   a fresh negative epoch (or the root of a plain store);
-- the index stores' **sibling swap**: :func:`_recover_old` promotes a
-  ``.old`` left by a crash, the new store is written to a fresh
-  sibling, and :func:`_swap_in` promotes it. :func:`_compact_store`
+- the index stores' **sibling swap**: the new store is written to a
+  fresh sibling and swapped in through ``.old``. :func:`_compact_store`
   and :func:`_forget_store` are the two skeletons every index
   compaction and forget runs through.
 
@@ -45,13 +45,11 @@ config agrees (config.txt:59-81 uses AVERAGE only).
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.session import local_df
 
 from open_instrument_spark.operators import indexstore
@@ -63,10 +61,11 @@ from open_instrument_spark.operators.retention import (
 )
 from open_instrument_spark.sources.ingest import (
     POINTS_PARTITION_COLS,
-    _dt_dirs,
     read_store,
     replace_dates,
 )
+
+_dt_dirs = storefs.date_dirs  # the name perfbench/ingest.py reads
 
 
 def compact_dates(spark, store_path: str, n_buckets: int = 16,
@@ -76,14 +75,10 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
     i.e. some bucket holds more than one file) back to one sorted file
     per bucket, through ``sources.ingest.replace_dates``. Returns the
     compacted dates."""
+    storefs.recover_replacement(store_path)
     limit = n_buckets if max_files_per_date is None else max_files_per_date
-    dates = sorted(
-        date for date, dirs in _dt_dirs(store_path).items()
-        if sum(
-            len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-            for d in dirs
-        ) > limit
-    )
+    dates = sorted(date for date, dirs in _dt_dirs(store_path).items()
+                   if storefs.parquet_files(dirs) > limit)
     if not dates:
         return []
     store = read_store(spark, store_path)
@@ -95,41 +90,12 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
     return dates
 
 
-def _recover_old(path: str) -> bool:
-    """Crash recovery of the sibling swap: a crash between
-    :func:`_swap_in`'s two moves leaves the complete pre-swap store at
-    ``.old`` and nothing at the live path — promote it back. Returns
-    whether it did."""
-    old = path.rstrip("/") + ".old"
-    if not os.path.exists(path) and os.path.exists(old):
-        shutil.move(old, path)
-        return True
-    return False
-
-
-def _swap_in(path: str, sib: str) -> None:
-    """Promote a fully written sibling store: the live store moves to
-    ``.old`` first, the sibling moves in, THEN the old bytes go. A crash
-    at any point leaves a complete store at the live or the ``.old``
-    path, which :func:`_recover_old` repairs on the next tick. Local-FS
-    moves; on a cluster the same steps are object-store renames."""
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(path, old)
-    shutil.move(sib, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _copy_tables(spark, path: str, sib: str, tables) -> None:
     """Carry the store's side ``tables`` that exist over to the sibling
     unchanged."""
-    for t in indexstore.present(path, *tables):
+    for t in storefs.present(path, *tables):
         indexstore.read(spark, path, t).write.mode(
             "overwrite").parquet(f"{sib}/{t}")
-
-
-def _epoch_count(path: str, table: str) -> int:
-    return len(glob.glob(os.path.join(path, table, "epoch=*")))
 
 
 def _compact_store(path: str, table: str, max_epochs: int,
@@ -137,18 +103,17 @@ def _compact_store(path: str, table: str, max_epochs: int,
     """The compaction skeleton of every epoch-layout index store: when
     ``table`` holds more than ``max_epochs`` epoch partitions,
     ``write(sib)`` fills a fresh ``.compact`` sibling with the folded
-    store and :func:`_swap_in` promotes it. Returns
+    store and ``storefs.swap_in`` promotes it. Returns
     {epochs_before, compacted, swapped, recovered}."""
-    recovered = _recover_old(path)
-    n_epochs = _epoch_count(path, table)
+    recovered = storefs.recover_swap(path)
+    n_epochs = len(storefs.int_partitions(f"{path}/{table}", "epoch"))
     res = {"epochs_before": n_epochs, "compacted": False,
            "swapped": False, "recovered": recovered}
     if n_epochs <= max_epochs:
         return res
-    sib = path.rstrip("/") + ".compact"
-    shutil.rmtree(sib, ignore_errors=True)
+    sib = storefs.fresh_sibling(path, "compact")
     write(sib)
-    _swap_in(path, sib)
+    storefs.swap_in(path, sib)
     res["compacted"] = True
     res["swapped"] = True
     return res
@@ -179,8 +144,8 @@ def rebalance_ann_index(spark, path: str, skew_threshold: float = 4.0,
     plus ``swapped`` and ``recovered``."""
     from open_instrument_spark.operators.similarity import rebalance_ivf_index
 
-    recovered = _recover_old(path)
-    if indexstore.present(path, "codes"):
+    recovered = storefs.recover_swap(path)
+    if storefs.present(path, "codes"):
         from open_instrument_spark.operators.pq import rebalance_ivfpq_index
 
         res = rebalance_ivfpq_index(spark, path,
@@ -192,7 +157,7 @@ def rebalance_ann_index(spark, path: str, skew_threshold: float = 4.0,
     res["recovered"] = recovered
     res["swapped"] = False
     if res["rebalanced"]:
-        _swap_in(path, res["out_path"])
+        storefs.swap_in(path, res["out_path"])
         res["out_path"] = path
         res["swapped"] = True
     return res
@@ -289,7 +254,7 @@ def compact_semantic_index(spark, path: str, max_epochs: int = 8) -> dict:
 
     def write(sib: str) -> None:
         dim, n_cells, nxt = _read_semantic_meta(spark, path)
-        for t in indexstore.present(path, *_SEMANTIC_DATA_DIRS):
+        for t in storefs.present(path, *_SEMANTIC_DATA_DIRS):
             _fold_to_base(spark, path, sib, t)
         _copy_tables(spark, path, sib, _SEMANTIC_AUX_DIRS)
         _write_semantic_meta(spark, sib, dim, n_cells, nxt)
@@ -359,14 +324,14 @@ def _forget_store(spark, path: str, ids, col: str, tables,
     ``tables`` (plus those of ``optional`` the store has) on ``col``,
     and unless nothing matched (a replayed forget is a no-op) let
     ``write(sib, keeps, hits)`` fill a fresh ``.forget`` sibling and
-    promote it with :func:`_swap_in`. Two scans of each INDEX-sized
+    promote it with ``storefs.swap_in``. Two scans of each INDEX-sized
     table (count + staged rewrite — the price of reporting what a
     forget did). ``report`` shapes the per-table removed counts into
     the store's result dict; ``write`` may return extra result
     fields."""
-    recovered = _recover_old(path)
+    recovered = storefs.recover_swap(path)
     ids = [int(i) for i in ids]
-    tables = [*tables, *indexstore.present(path, *optional)]
+    tables = [*tables, *storefs.present(path, *optional)]
     hits, keeps = {}, {}
     for t in tables:
         hits[t], keeps[t] = _forget_split(
@@ -375,10 +340,9 @@ def _forget_store(spark, path: str, ids, col: str, tables,
     res = {**report(removed), "swapped": False, "recovered": recovered}
     if not any(removed.values()):
         return res
-    sib = path.rstrip("/") + ".forget"
-    shutil.rmtree(sib, ignore_errors=True)
+    sib = storefs.fresh_sibling(path, "forget")
     res.update(write(sib, keeps, hits) or {})
-    _swap_in(path, sib)
+    storefs.swap_in(path, sib)
     res["swapped"] = True
     return res
 
@@ -441,8 +405,7 @@ def forget_from_text_index(spark, path: str, doc_ids) -> dict:
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
             .collect()
         }
-        for d in glob.glob(os.path.join(path, "meta", "epoch=*")):
-            e = int(os.path.basename(d).split("=", 1)[1])
+        for e in storefs.int_partitions(f"{path}/meta", "epoch"):
             n, s = stats.get(e, (0, 0))
             _write_text_meta(spark, sib, n, s, n_buckets, epoch=e)
 
@@ -631,6 +594,8 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     no delete, store bytes untouched — ANN indexes only get their skew
     measured and reported, the other stores their epoch count; forget
     sets are NOT applied."""
+    if not dry_run:
+        storefs.recover_replacement(store_path)
     pts = read_store(spark, store_path).drop(*POINTS_PARTITION_COLS)
     # one aggregation of the store; materialized, so the report stays
     # the tick-START state after the rewrite below
@@ -652,7 +617,8 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
             for p in paths or []:
                 summary[kind.key][p] = (
                     _ann_dry_run(spark, p) if kind.epochs is None else
-                    {"epochs_before": _epoch_count(p, kind.epochs),
+                    {"epochs_before": len(storefs.int_partitions(
+                        f"{p}/{kind.epochs}", "epoch")),
                      "compacted": False, "swapped": False,
                      "recovered": False})
         return report, summary

@@ -19,17 +19,15 @@ partitions (datastore.go:731-732 analog) so row-group stats are tight.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.model import (
     POINTS_SCHEMA,
+    SERIES_KEY_COL,
     drop_staged_columns,
-    series_key,
+    with_series_key,
 )
 
 NAME_RE = r"^/\S+$"  # starts with /, no whitespace, len>=2 (store.cc:414-417)
@@ -46,13 +44,6 @@ STRICT_LABEL_KEY_RE = r"^[A-Za-z0-9._\-/*]+$"
 # name_bucket and bucket, plus the streaming sink's epoch. Dropping them
 # from a store read gives back the points schema.
 POINTS_PARTITION_COLS = ("dt", "bucket", "name_bucket", "epoch")
-
-
-def _key_expr(points: DataFrame):
-    """Canonical key expression — the frame's precomputed ``series_key``
-    column when it carries one (model.with_series_key), else the render."""
-    return (F.col("series_key") if "series_key" in points.columns
-            else series_key())
 
 
 def default_hostname(points: DataFrame, source_host) -> DataFrame:
@@ -147,8 +138,8 @@ def dedup(points: DataFrame) -> DataFrame:
     double-append (disk_datastore.cc:112-128 has no dedup). Conflicting
     samples (same key and ts, different payload) resolve to the
     greatest (dval, sval) (:func:`_keep_greatest`)."""
-    pts = points.withColumn("_sk", _key_expr(points))
-    return _keep_greatest(pts, "_sk", "ts").drop("_sk")
+    return _keep_greatest(with_series_key(points), SERIES_KEY_COL,
+                          "ts").select(*points.columns)
 
 
 def ingest_batch(points: DataFrame, source_host: str | None = None, now=None) -> DataFrame:
@@ -165,18 +156,20 @@ def _store_layout(points: DataFrame, n_buckets: int,
     """The store's partition columns over ONE exchange.
 
     Returns ``(frame, partition columns)``. The frame carries the
-    rendered series key ``_sk``, ``dt``, ``bucket = pmod(hash(_sk), N)``
-    and, with ``name_buckets``, ``name_bucket``; it is hash partitioned
-    by ``repartition(n_buckets, "_sk")``. Spark places a row in
-    partition ``pmod(murmur3(_sk), n_buckets)``, which is its ``bucket``
-    value, so each task holds exactly one bucket and writes one file per
-    date (and name bucket). The trade: a write runs ``n_buckets`` tasks,
-    however many dates it spans.
+    series key (``model.with_series_key``), ``dt``,
+    ``bucket = pmod(hash(series_key), N)`` and, with ``name_buckets``,
+    ``name_bucket``; it is hash partitioned by
+    ``repartition(n_buckets, series_key)``. Spark places a row in
+    partition ``pmod(murmur3(series_key), n_buckets)``, which is its
+    ``bucket`` value, so each task holds exactly one bucket and writes
+    one file per date (and name bucket). The trade: a write runs
+    ``n_buckets`` tasks, however many dates it spans.
     """
     pts = (
-        points.withColumn("_sk", _key_expr(points))
+        with_series_key(points)
         .withColumn("dt", F.to_date("ts"))
-        .withColumn("bucket", F.pmod(F.hash("_sk"), F.lit(n_buckets)))
+        .withColumn("bucket",
+                    F.pmod(F.hash(SERIES_KEY_COL), F.lit(n_buckets)))
     )
     part_cols = ["dt", "bucket"]
     if name_buckets is not None:
@@ -184,7 +177,7 @@ def _store_layout(points: DataFrame, n_buckets: int,
             "name_bucket", F.pmod(F.hash("name"), F.lit(name_buckets))
         )
         part_cols = ["dt", "name_bucket", "bucket"]
-    return pts.repartition(n_buckets, "_sk"), part_cols
+    return pts.repartition(n_buckets, SERIES_KEY_COL), part_cols
 
 
 def _write_layout(pts: DataFrame, part_cols: list[str], path: str,
@@ -198,18 +191,9 @@ def _write_layout(pts: DataFrame, part_cols: list[str], path: str,
     fast path (model.STAGED_LABEL_PREFIX): they are derivable, so
     persisting them would bloat every store file and change the on-disk
     points schema the readers contract on."""
-    from open_instrument_spark.model import STAGED_LABEL_PREFIX
-
-    stale = ["_sk", "series_key"] + [
-        c for c in pts.columns if c.startswith(STAGED_LABEL_PREFIX)
-    ]
-    (
-        pts.sortWithinPartitions(*part_cols, "_sk", "ts")
-        .drop(*stale)
-        .write.mode(mode)
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
+    drop_staged_columns(
+        pts.sortWithinPartitions(*part_cols, SERIES_KEY_COL, "ts")
+    ).write.mode(mode).partitionBy(*part_cols).parquet(path)
 
 
 def write_points(points: DataFrame, path: str, n_buckets: int = 16,
@@ -244,8 +228,8 @@ def write_deduped(points: DataFrame, path: str, n_buckets: int = 16,
     ts, so the groups are the same), so the window's sort is also the
     writer's. The streaming sink's write."""
     pts, part_cols = _store_layout(points, n_buckets)
-    _write_layout(_keep_greatest(pts, *part_cols, "_sk", "ts"), part_cols,
-                  path, mode)
+    _write_layout(_keep_greatest(pts, *part_cols, SERIES_KEY_COL, "ts"),
+                  part_cols, path, mode)
 
 
 def write_points_bucketed(points: DataFrame, table: str, n_buckets: int = 64,
@@ -273,10 +257,7 @@ def write_points_bucketed(points: DataFrame, table: str, n_buckets: int = 64,
     warehouse dir. The catalog entry is what carries the bucketing spec;
     reading the bare parquet files would lose it.
     """
-    pts = points
-    if "series_key" not in pts.columns:
-        pts = pts.withColumn("series_key", series_key())
-    w = pts.write.mode(mode).format("parquet")
+    w = with_series_key(points).write.mode(mode).format("parquet")
     if path is not None:
         w = w.option("path", path)
     (
@@ -331,41 +312,6 @@ def read_store(spark, path: str, variable: str | None = None,
     return df.filter(m.predicate())
 
 
-def compact(spark, path: str, n_buckets: int = 16) -> None:
-    """W2 analog: rewrite small files into the canonical layout
-    (the reference's block compaction, datastore.go:687-705, reduced to
-    a repartition+rewrite). Also folds away the streaming sink's
-    per-epoch partitioning (drop() ignores absent columns)."""
-    df = read_store(spark, path)
-    write_points(
-        df.drop(*POINTS_PARTITION_COLS),
-        path + "_compacted", n_buckets, mode="overwrite",
-    )
-
-
-def _dt_dirs(store_path: str) -> dict[str, list[str]]:
-    """date string → its partition dirs, at either layout depth
-    (store/dt=D and the streaming sink's store/epoch=N/dt=D)."""
-    out: dict[str, list[str]] = {}
-    for pat in ("dt=*", os.path.join("epoch=*", "dt=*")):
-        for d in glob.glob(os.path.join(store_path, pat)):
-            out.setdefault(os.path.basename(d).split("=", 1)[1], []).append(d)
-    return out
-
-
-def _publish(src: str, dst: str) -> None:
-    """Move ``src`` to ``dst`` by rename. Where ``dst`` is an existing
-    directory, ``src``'s entries move into it one by one, so what it
-    already holds stays (Spark's part-file names carry a per-write id
-    and never collide)."""
-    if os.path.isdir(dst):
-        for name in os.listdir(src):
-            _publish(os.path.join(src, name), os.path.join(dst, name))
-    else:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-
-
 def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
                   n_buckets: int = 16) -> None:
     """Replace everything a write_points store holds for ``dates`` with
@@ -377,17 +323,11 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
     written once, by ``write_points``, to a staging directory in the
     store's final layout, BEFORE any source partition is deleted (a
     lazy plan re-reading deleted files, or an evicted cache, would
-    corrupt the rewrite). The dates' directories then go at both layout
-    depths, and each staged ``dt=`` directory is renamed into the
-    store's own partition depth: an epoch-layout store gets a fresh
-    NEGATIVE epoch below every existing one, a plain store takes them
-    at its root. A ``dt=`` directory that is still there (rows that
-    anchor into a date outside ``dates``) takes the staged files one by
-    one. The streaming sink's epochs are its checkpointed batch ids
-    (always >= 0), so epoch ids never recycle and a resumed stream can
-    never overwrite a rewrite. Single writer: run from the maintenance
-    loop that owns the store. Local-FS renames; on a cluster the same
-    steps go through the Hadoop FileSystem API.
+    corrupt the rewrite); ``storefs.commit_replacement`` swaps them in
+    (a fresh negative epoch never collides with the sink's batch ids).
+    ``run_retention_job`` and ``compact_dates`` finish a crashed one
+    (``storefs.recover_replacement``) before they read the store.
+    Single writer: run from the maintenance loop that owns the store.
 
     A name-bucketed store is rejected before anything is staged: its N
     is not recoverable from the directory names, and a rewrite without
@@ -398,25 +338,6 @@ def replace_dates(store: DataFrame, store_path: str, dates, rows: DataFrame,
             f"store at {store_path} is name-bucketed; its dates cannot be "
             "rewritten in place without the writer's name_buckets"
         )
-    staging = store_path.rstrip("/") + "_replace_staging"
-    write_points(rows, staging, n_buckets=n_buckets, mode="overwrite")
-    # whole date dirs go, so buckets the rewrite leaves empty go too
-    dirs = _dt_dirs(store_path)
-    for d in dates:
-        for part in dirs.get(str(d), []):
-            shutil.rmtree(part, ignore_errors=True)
-    # dt=/bucket= at the root of an epoch=N store would mix partition
-    # schemas (CONFLICTING_PARTITION_COLUMN_NAMES on every read)
-    epoch_dirs = glob.glob(os.path.join(store_path, "epoch=*"))
-    dest = store_path
-    if epoch_dirs:
-        epochs = []
-        for p in epoch_dirs:
-            try:
-                epochs.append(int(os.path.basename(p).split("=", 1)[1]))
-            except ValueError:
-                pass
-        dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    for part in glob.glob(os.path.join(staging, "dt=*")):
-        _publish(part, os.path.join(dest, os.path.basename(part)))
-    shutil.rmtree(staging, ignore_errors=True)
+    write_points(rows, storefs.replace_staging(store_path),
+                 n_buckets=n_buckets, mode="overwrite")
+    storefs.commit_replacement(store_path, dates)

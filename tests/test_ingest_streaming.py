@@ -807,36 +807,6 @@ def test_retention_job_equals_declarative_apply(spark, points, tmp_path):
     assert got == want and want
 
 
-def test_compact_folds_epochs_into_canonical_layout(spark, points, tmp_path):
-    """W2: compaction must rewrite a fragmented epoch=N streaming store
-    into the canonical dt/bucket layout with identical contents and the
-    epoch column folded away."""
-    from open_instrument_spark.sources.ingest import compact
-
-    store = str(tmp_path / "c_store")
-    pts = points.limit(400)
-    # fragment: two streaming-style epoch commits
-    half1 = pts.filter(F.col("ts") < "2024-01-15")
-    half2 = pts.filter(F.col("ts") >= "2024-01-15")
-    write_points(half1, f"{store}/epoch=0", n_buckets=2)
-    write_points(half2, f"{store}/epoch=1", n_buckets=2)
-
-    compact(spark, store, n_buckets=2)
-    out = store + "_compacted"
-    assert glob.glob(os.path.join(out, "dt=*", "bucket=*"))
-    assert not glob.glob(os.path.join(out, "epoch=*"))
-    back = spark.read.parquet(out)
-    assert "epoch" not in back.columns
-    src_rows = {
-        (r["name"], str(r["labels"]), r["ts"], r["dval"]) for r in pts.collect()
-    }
-    got_rows = {
-        (r["name"], str(r["labels"]), r["ts"], r["dval"])
-        for r in back.drop("dt", "bucket").collect()
-    }
-    assert got_rows == src_rows
-
-
 def test_streaming_scrape_ingest_agg_composition(spark, tmp_path):
     """End-to-end streaming composition (r3 verdict #7): /export text
     scrape stream → checkpointed exactly-once ingest (S1) → watermarked

@@ -1,9 +1,12 @@
 """The points store's write paths: write_points' one-exchange layout,
 the streaming sink's fused dedup + write, replace_dates' publish by
-rename, and the maintenance tick's one-scan report."""
+rename and its crash recovery, the maintenance tick's one-scan report,
+and the storage seam (``storefs``) that holds every directory listing,
+removal and rename of a store."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import glob
 import os
@@ -12,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from open_instrument_spark import storefs
 from open_instrument_spark.model import series_key
 from open_instrument_spark.operators.retention import (
     PolicyItem,
@@ -264,3 +268,153 @@ def test_tick_report_equals_its_definition(spark, tmp_path, dry_run):
     assert (summary["variables"], summary["values"]) == (2, 11) == tuple(totals)
     assert want_rows == [(-1, "default_drop", 1, 1), (0, "keep", 4, 2),
                          (1, "downsample", 6, 2)]
+
+
+def _one_aged_date(spark, store, days=(30,)):
+    """Four aged rows on each of ``days`` of 2022-01 plus one recent
+    row: under POLICY each aged date folds to one daily mean."""
+    rows = [("/m", {"h": "a"}, dt.datetime(2022, 1, d, h), 10.0 + h, None)
+            for d in days for h in range(4)]
+    rows += [("/m", {"h": "a"}, dt.datetime(2024, 1, 30, 1), 1.0, None)]
+    ingest.write_points(_pts(spark, rows), store, n_buckets=2)
+
+
+def _dirs(root):
+    return sorted(os.path.relpath(d, root) for d in _leaves(root))
+
+
+@pytest.mark.parametrize("step,call,days", [
+    ("remove", 1, (30,)),    # before any delete: record, nothing deleted
+    ("publish", 1, (30,)),   # deletes done, nothing published
+    ("publish", 2, (29, 30)),  # one date published, one still staged
+])
+def test_interrupted_replacement_finishes_on_next_run(
+        spark, tmp_path, monkeypatch, step, call, days):
+    """A crash anywhere after the staging write is finished by the next
+    run: the store ends equal to an uninterrupted run's."""
+    want, store = str(tmp_path / "want"), str(tmp_path / "store")
+    _one_aged_date(spark, want, days)
+    _one_aged_date(spark, store, days)
+    run_retention_job(spark, want, POLICY, NOW, n_buckets=2)
+    real = getattr(storefs, step)
+    calls = []
+
+    def crash(*args):
+        calls.append(args)
+        if len(calls) == call:
+            raise OSError("crash")
+        real(*args)
+
+    monkeypatch.setattr(storefs, step, crash)
+    with pytest.raises(OSError, match="crash"):
+        run_retention_job(spark, store, POLICY, NOW, n_buckets=2)
+    monkeypatch.setattr(storefs, step, real)
+    staging = storefs.replace_staging(store)
+    assert glob.glob(os.path.join(staging, "dt=*"))
+    if step == "publish" and call == 1:
+        # the FOUND state: only the recent row is left in the store
+        assert _rows(spark, store) == [
+            ("/m{h=a}", dt.datetime(2024, 1, 30, 1), 1.0, None)]
+    # the dry run stays read-only
+    maintenance_tick(spark, store, POLICY, NOW, dry_run=True, n_buckets=2)
+    assert glob.glob(os.path.join(staging, "dt=*"))
+    run_retention_job(spark, store, POLICY, NOW, n_buckets=2)
+    assert not os.path.exists(staging)
+    assert _rows(spark, store) == _rows(spark, want)
+    assert _dirs(store) == _dirs(want)
+
+
+def test_failed_staging_write_is_discarded_by_next_run(spark, tmp_path,
+                                                       monkeypatch):
+    """Staged rows without a record were never swapped in: recovery
+    removes them and leaves the store as it was."""
+    store = str(tmp_path / "store")
+    _aged_store(spark, store)
+    files0 = _files(store)
+    real = ingest.write_points
+
+    def failing(points, path, *args, **kwargs):
+        real(points, path, *args, **kwargs)
+        raise RuntimeError("staging write failed")
+
+    monkeypatch.setattr(ingest, "write_points", failing)
+    with pytest.raises(RuntimeError, match="staging write failed"):
+        run_retention_job(spark, store, POLICY, NOW, n_buckets=2)
+    monkeypatch.setattr(ingest, "write_points", real)
+    staging = storefs.replace_staging(store)
+    assert glob.glob(os.path.join(staging, "dt=*"))
+    assert storefs.recover_replacement(store)
+    assert not os.path.exists(staging)
+    assert _files(store) == files0
+    assert not storefs.recover_replacement(store)
+
+
+def test_partition_listing_skips_files_and_other_entries(tmp_path):
+    root = tmp_path / "store"
+    for d in ("dt=2024-01-01/bucket=0", "dt=2024-01-02", "_temporary/0",
+              "bucket=1", "epoch=0/dt=2024-01-02/bucket=1", "epoch=-1",
+              "epoch=x/dt=2024-01-03", "epoch=12"):
+        (root / d).mkdir(parents=True)
+    for f in ("_SUCCESS", "._SUCCESS.crc", "dt=2024-01-05", "epoch=3",
+              "dt=2024-01-01/bucket=0/part-0.parquet",
+              "dt=2024-01-01/bucket=0/.part-0.parquet.crc",
+              "epoch=0/dt=2024-01-02/bucket=1/part-1.parquet"):
+        (root / f).touch()
+    root = str(root)
+    assert storefs.partitions(root, "dt") == {
+        "2024-01-01": os.path.join(root, "dt=2024-01-01"),
+        "2024-01-02": os.path.join(root, "dt=2024-01-02")}
+    assert storefs.partitions(os.path.join(root, "missing"), "dt") == {}
+    assert storefs.int_partitions(root, "epoch") == [-1, 0, 12]
+    dates = storefs.date_dirs(root)
+    assert {d: sorted(os.path.relpath(p, root) for p in ps)
+            for d, ps in dates.items()} == {
+        "2024-01-01": ["dt=2024-01-01"],
+        "2024-01-02": ["dt=2024-01-02", "epoch=0/dt=2024-01-02"],
+        "2024-01-03": ["epoch=x/dt=2024-01-03"]}
+    assert storefs.parquet_files(dates["2024-01-01"]) == 1
+    assert storefs.parquet_files(dates["2024-01-02"]) == 1
+    assert storefs.present(root, "bucket=1", "_SUCCESS", "nope") == [
+        "bucket=1"]
+
+
+# the modules that hold store rewrites; their directory work goes
+# through storefs
+_STORE_MODULES = ("sources/ingest.py", "plans/maintenance.py",
+                  "operators/graphstore.py", "operators/indexstore.py")
+_FS_CALLS = {"listdir", "scandir", "walk", "rename", "replace", "remove",
+             "rmdir", "makedirs", "mkdir", "path.isdir", "path.isfile",
+             "path.exists"}
+
+
+def _dotted(node):
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if isinstance(node, ast.Name):
+        parts.append(node.id)
+    return ".".join(reversed(parts))
+
+
+@pytest.mark.parametrize("module", _STORE_MODULES)
+def test_store_directory_work_goes_through_storefs(module):
+    """No store module lists, checks, removes or renames a directory
+    itself, or parses a ``<col>=<value>`` name."""
+    import open_instrument_spark
+
+    path = os.path.join(os.path.dirname(open_instrument_spark.__file__),
+                        module)
+    tree = ast.parse(open(path).read())
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            mods = ([a.name for a in node.names]
+                    if isinstance(node, ast.Import) else [node.module])
+            assert not {"glob", "shutil"} & set(mods), (module, node.lineno)
+        if isinstance(node, ast.Call):
+            name = _dotted(node.func)
+            assert not (name.startswith("os.")
+                        and name[3:] in _FS_CALLS), (module, name)
+            assert not (name.endswith(".split") and node.args
+                        and isinstance(node.args[0], ast.Constant)
+                        and node.args[0].value == "="), (module, node.lineno)
