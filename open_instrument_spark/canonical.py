@@ -126,6 +126,25 @@ def canonical_variable_py(name: str, labels: dict[str, str] | None) -> str:
     return f"{name}{{{','.join(parts)}}}" if parts else name
 
 
+def variable_pattern(name: str, labels: dict[str, str] | None) -> str:
+    """A name plus a ``{label: value}`` dict → the pattern string
+    ``functions/match.VariableMatcher`` parses. Values render through
+    :func:`canonical_variable_py`, so grammar characters (comma, quote,
+    backslash, edge whitespace) come out quoted and match exactly. The
+    matcher's value syntax keeps its meaning: bare ``*`` (presence) and
+    ``/re/`` are read from the parsed value, quoted or not, and empty
+    or null values (absence), which the renderer drops, are spliced back
+    as ``k=``."""
+    labels = labels or {}
+    pat = canonical_variable_py(
+        name, {k: v for k, v in labels.items() if v not in ("", None)}
+    )
+    absent = ",".join(f"{k}=" for k in sorted(labels) if k and labels[k] in ("", None))
+    if not absent:
+        return pat
+    return pat[:-1] + "," + absent + "}" if pat.endswith("}") else f"{pat}{{{absent}}}"
+
+
 # ----------------------------------------------------------------- parse
 def parse_label_body(body: str) -> dict[str, str]:
     """The label-block scanner (text between ``{`` and ``}``) →

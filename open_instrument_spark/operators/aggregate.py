@@ -449,8 +449,8 @@ def aggregate_anchored(points: DataFrame, agg_type: str,
     # unix_micros, not epoch_seconds*1e6: double seconds lose exact µs
     # above 2^22 s and the truncating cast can land 1 µs low — the
     # recursive-CTE oracle computes epoch_us exactly, so we must too.
-    # Key + label come through the staged fast paths when available
-    # (r15): the precomputed series_key column and model.label_value.
+    # Key + label come through the staged fast paths when available:
+    # the precomputed series_key column and model.label_value.
     pts = _with_key(points).select(
         "name",
         *([label_value(points, by_label).alias("label_value")]
@@ -516,31 +516,18 @@ def aggregate(points: DataFrame, agg_type: str, by_labels: list[str] | None = No
     reference-exact drift-bucket kernel (:func:`aggregate_anchored`)
     instead of the declared tumbling semantics.
     """
-    if anchored:
-        if not by_labels:
-            return aggregate_anchored(points, agg_type, sample_interval)
-        outs = [
-            aggregate_anchored(points, agg_type, sample_interval,
-                               by_label=lb,
-                               drop_missing=kw.get("drop_missing", True))
-            .withColumn("label", F.lit(lb))
-            for lb in by_labels
-        ]
-        result = outs[0]
-        for o in outs[1:]:
-            result = result.unionByName(o, allowMissingColumns=True)
-        return result
     if not by_labels:
+        if anchored:
+            return aggregate_anchored(points, agg_type, sample_interval)
         return aggregate_by_name(points, agg_type, sample_interval)
-    outs = [
-        aggregate_by_label(points, agg_type, lb, sample_interval, **kw)
-        .withColumn("label", F.lit(lb))
-        for lb in by_labels
-    ]
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o, allowMissingColumns=True)
-    return result
+
+    def by_label(lb: str) -> DataFrame:
+        if anchored:
+            return aggregate_anchored(points, agg_type, sample_interval, by_label=lb,
+                                      drop_missing=kw.get("drop_missing", True))
+        return aggregate_by_label(points, agg_type, lb, sample_interval, **kw)
+
+    return merge_streams(*(by_label(lb).withColumn("label", F.lit(lb)) for lb in by_labels))
 
 
 def merge_streams(*streams: DataFrame) -> DataFrame:

@@ -55,7 +55,7 @@ def label_replace(points: DataFrame, dst: str, replacement: str,
     anchored = f"^(?:{regex})$"
     # read through the staged scalar when present (bit-identical), and
     # DROP the staged key/label columns afterwards: they were rendered
-    # from the pre-rewrite labels (r15, model.drop_staged_columns).
+    # from the pre-rewrite labels (model.drop_staged_columns).
     src_val = F.coalesce(label_value(points, src), F.lit(""))
     matches = src_val.rlike(anchored)
     new_val = F.regexp_replace(src_val, anchored, replacement)

@@ -34,102 +34,84 @@ from open_instrument_spark.model import (
 )
 
 
-def _series_window() -> Window:
-    return Window.partitionBy(SERIES_KEY_COL).orderBy("ts")
+def _series_window(order: str) -> Window:
+    return Window.partitionBy(SERIES_KEY_COL).orderBy(order)
+
+
+def _with_predecessor(df: DataFrame, order: str, carry: dict[str, str], chunk=None,
+                      series_min: dict[str, str] | None = None) -> DataFrame:
+    """Add each row's series predecessor: ``carry`` maps an output name
+    to the column whose previous-row value (in ``order`` within the
+    series) it takes, null on the series' first row; ``series_min``
+    maps an output name to a column whose series minimum it takes.
+
+    ``chunk=None`` lags plain attributes over one series window (one
+    ``Window`` node). That window puts a whole series in one task, so a
+    ``chunk`` duration (e.g. "1d") bounds task size by points-per-chunk
+    instead: the lag runs within (series, time chunk of ``ts``), a row
+    without an in-chunk predecessor takes the previous non-empty
+    chunk's tail row, and the minima come from the chunk-cardinality
+    tail table. The previous row is carried as one struct, which is
+    null only when there is no in-chunk predecessor, so a carried null
+    value never triggers the handoff. ``order`` must be ``ts`` or
+    monotone in it; chunk boundaries cannot change the result.
+    """
+    series_min = series_min or {}
+    if chunk is None:
+        w = _series_window(order)
+        for name, col in carry.items():
+            df = df.withColumn(name, F.lag(col).over(w))
+        for name, col in series_min.items():
+            df = df.withColumn(name, F.min(col).over(Window.partitionBy(SERIES_KEY_COL)))
+        return df
+    chunk_ms = parse_duration_ms(chunk)
+    df = df.withColumn("_c", F.floor(epoch_seconds("ts") * 1000 / F.lit(chunk_ms)))
+    row = F.struct(*(F.col(col).alias(name) for name, col in carry.items()))
+    tails = df.groupBy(SERIES_KEY_COL, "_c").agg(
+        F.max_by(row, order).alias("_tail"),
+        *(F.min(col).alias(name) for name, col in series_min.items()),
+    )
+    state = tails.select(
+        SERIES_KEY_COL, "_c",
+        F.lag("_tail").over(Window.partitionBy(SERIES_KEY_COL).orderBy("_c")).alias("_ptail"),
+        *(F.min(name).over(Window.partitionBy(SERIES_KEY_COL)).alias(name)
+          for name in series_min),
+    )
+    prev = (
+        df.withColumn("_p", F.lag(row).over(Window.partitionBy(SERIES_KEY_COL, "_c").orderBy(order)))
+        .join(state, [SERIES_KEY_COL, "_c"], "left")
+        .withColumn("_p", F.coalesce("_p", "_ptail"))
+    )
+    return prev.withColumns({name: F.col("_p")[name] for name in carry}).drop(
+        "_c", "_p", "_ptail"
+    )
 
 
 def _pairwise(points: DataFrame, out_expr: Callable[[Column, Column, Column, Column], Column],
-              keep_negative: bool = True) -> DataFrame:
+              keep_negative: bool, chunk) -> DataFrame:
     """Shared (v_i, v_{i-1}, t_i, t_{i-1}) → value skeleton for RATE/DELTA.
 
     Mirrors the loop shape of server/store.cc:301-333: emit at ts_i from
     the second point on; zero/negative time steps produce no output (the
     reference's division would be undefined; Go skips dupes implicitly).
     """
-    pts = _with_key(points)
-    w = _series_window()
     # Materialize the epoch column BEFORE the window: lagging a derived
     # expression would split the plan into two Window nodes (two passes
     # over the sorted partition); lagging plain attributes keeps one.
-    pts = pts.withColumn("_t", epoch_seconds("ts"))
-    t = F.col("_t")
+    pts = _with_key(points).withColumn("_t", epoch_seconds("ts"))
+    t, pt = F.col("_t"), F.col("_prev_t")
     out = (
-        pts.withColumn("_prev_v", F.lag("dval").over(w))
-        .withColumn("_prev_t", F.lag("_t").over(w))
-        .withColumn("_out", out_expr(F.col("dval"), F.col("_prev_v"), t, F.col("_prev_t")))
-        .filter(F.col("_prev_t").isNotNull() & (t > F.col("_prev_t")))
+        _with_predecessor(pts, "ts", {"_prev_v": "dval", "_prev_t": "_t"}, chunk)
+        .withColumn("_out", out_expr(F.col("dval"), F.col("_prev_v"), t, pt))
+        .filter(pt.isNotNull() & (t > pt))
     )
     if not keep_negative:
         out = out.filter(F.col("_out") >= 0)
     return out.withColumn("dval", F.col("_out")).drop("_t", "_prev_v", "_prev_t", "_out")
 
 
-def _pairwise_chunked(points: DataFrame, out_expr, keep_negative: bool,
-                      chunk) -> DataFrame:
-    """Pairwise mutation with BOUNDED task size for pathological series.
-
-    ``Window.partitionBy(series_key)`` places a whole series in one task —
-    fine for metric fleets (~10³-10⁶ points/series) but a straggler/OOM
-    for a series with 10⁹ points. Two-phase equivalent with identical
-    output:
-
-      1. lag within (series, time-chunk) — parallel across chunks, task
-         size bounded by points-per-chunk;
-      2. each chunk's first row takes its predecessor from the previous
-         non-empty chunk's tail row (a lag over the per-chunk tail table,
-         which is chunk-cardinality — tiny).
-
-    Cost: one extra small shuffle + a co-keyed join vs the single-window
-    plan; use when series can be arbitrarily long.
-    """
-    chunk_ms = parse_duration_ms(chunk)
-    pts = _with_key(points).withColumn("_t", epoch_seconds("ts"))
-    pts = pts.withColumn(
-        "_c", F.floor((F.col("_t") * 1000).cast("long") / F.lit(chunk_ms))
-    )
-    wc = Window.partitionBy(SERIES_KEY_COL, "_c").orderBy("ts")
-    df = (
-        pts.withColumn("_pv", F.lag("dval").over(wc))
-        .withColumn("_pt", F.lag("_t").over(wc))
-    )
-    # Per-chunk tail row, then the previous EXISTING chunk's tail via a
-    # lag over chunk-cardinality rows (empty chunks skipped naturally).
-    tails = pts.groupBy(SERIES_KEY_COL, "_c").agg(
-        F.max_by(
-            F.struct(F.col("dval").alias("v"), F.col("_t").alias("t")), "ts"
-        ).alias("_tail")
-    )
-    wprev = Window.partitionBy(SERIES_KEY_COL).orderBy("_c")
-    prev_tails = tails.withColumn("_ptail", F.lag("_tail").over(wprev)).select(
-        SERIES_KEY_COL, "_c", "_ptail"
-    )
-    df = df.join(prev_tails, [SERIES_KEY_COL, "_c"], "left")
-    # "First row of its chunk" is detected via _pt (lag of the never-null
-    # _t), NOT via coalesce on the value: an in-chunk predecessor with a
-    # NULL dval must stay paired with its own timestamp, exactly as in
-    # the single-window plan.
-    use_tail = F.col("_pt").isNull()
-    pv = F.when(use_tail, F.col("_ptail.v")).otherwise(F.col("_pv"))
-    pt = F.when(use_tail, F.col("_ptail.t")).otherwise(F.col("_pt"))
-    t = F.col("_t")
-    out = df.withColumn("_out", out_expr(F.col("dval"), pv, t, pt)).filter(
-        pt.isNotNull() & (t > pt)
-    )
-    if not keep_negative:
-        out = out.filter(F.col("_out") >= 0)
-    return out.withColumn("dval", F.col("_out")).drop(
-        "_t", "_c", "_pv", "_pt", "_ptail", "_out"
-    )
-
-
 def _per_second(v, pv, t, pt):
     return (v - pv) / (t - pt)
-
-
-def _dispatch_pairwise(points: DataFrame, expr, keep_negative: bool, chunk) -> DataFrame:
-    if chunk is not None:
-        return _pairwise_chunked(points, expr, keep_negative, chunk)
-    return _pairwise(points, expr, keep_negative)
 
 
 def rate(points: DataFrame, chunk=None) -> DataFrame:
@@ -137,25 +119,25 @@ def rate(points: DataFrame, chunk=None) -> DataFrame:
     dropped (counter-reset suppression, server/store.cc:309).
 
     ``chunk`` (duration, e.g. "1d"): bound per-task data for arbitrarily
-    long series via the two-phase chunked plan — identical results.
+    long series (see :func:`_with_predecessor`) — identical results.
     """
-    return _dispatch_pairwise(points, _per_second, False, chunk)
+    return _pairwise(points, _per_second, False, chunk)
 
 
 def rate_signed(points: DataFrame, chunk=None) -> DataFrame:
     """M2 RATE_SIGNED: same as RATE, negatives kept (server/store.cc:301-318)."""
-    return _dispatch_pairwise(points, _per_second, True, chunk)
+    return _pairwise(points, _per_second, True, chunk)
 
 
 def delta(points: DataFrame, chunk=None) -> DataFrame:
     """M3 DELTA: v_i - v_{i-1} emitted at ts_i; C++ keeps only deltas >= 0
     (server/store.cc:319-333)."""
-    return _dispatch_pairwise(points, lambda v, pv, t, pt: v - pv, False, chunk)
+    return _pairwise(points, lambda v, pv, t, pt: v - pv, False, chunk)
 
 
 def delta_signed(points: DataFrame, chunk=None) -> DataFrame:
     """M3 variant without the >=0 filter (for pipeline composition)."""
-    return _dispatch_pairwise(points, lambda v, pv, t, pt: v - pv, True, chunk)
+    return _pairwise(points, lambda v, pv, t, pt: v - pv, True, chunk)
 
 
 # ---- bucketed resamples (tumbling epoch-aligned windows) -------------------
@@ -280,40 +262,31 @@ def apply_mutation(points: DataFrame, kind: str, interval=None,
     from open_instrument_spark.operators import resample as _resample
 
     kind = kind.lower()
-    if kind in MUTATIONS:
-        if max_gap_interpolate is not None:
-            raise ValueError(
-                f"max_gap_interpolate applies to grid interpolators, not {kind!r}"
-            )
-        return MUTATIONS[kind](points)
-    interval_resamples = dict(
-        RESAMPLES,
+    grid = {
         # C++ AVERAGE + sample_frequency = UniformTimeSeries interpolation
         # (server/store.cc:292-300); Go AVERAGE = bucketed mean — both kept.
-        average=_resample.uniform_average,
-        uniform=_resample.uniform_average,
-        interpolate=_resample.interpolate,
-        none_interpolate=_resample.interpolate,  # NONE + sample_frequency, Go
-        mean_anchored=_resample.mean_anchored,
-    )
-    if kind in interval_resamples:
-        if interval is None:
-            raise ValueError(f"mutation {kind!r} requires a sample interval")
-        fn = interval_resamples[kind]
-        if max_gap_interpolate is not None:
-            if fn not in (_resample.uniform_average, _resample.interpolate):
-                raise ValueError(
-                    f"max_gap_interpolate applies to grid interpolators, not {kind!r}"
-                )
-            return fn(points, interval, max_gap_interpolate=max_gap_interpolate)
-        return fn(points, interval)
-    if kind in ("none", "identity"):
-        if max_gap_interpolate is not None:
-            raise ValueError(
-                f"max_gap_interpolate applies to grid interpolators, not {kind!r}"
-            )
+        "average": _resample.uniform_average,
+        "uniform": _resample.uniform_average,
+        "interpolate": _resample.interpolate,
+        "none_interpolate": _resample.interpolate,  # NONE + sample_frequency, Go
+    }
+    interval_resamples = {**RESAMPLES, **grid, "mean_anchored": _resample.mean_anchored}
+    identity = kind in ("none", "identity")
+    if kind not in MUTATIONS and kind not in interval_resamples and not identity:
+        raise ValueError(f"unknown mutation {kind!r}")
+    if max_gap_interpolate is not None and kind not in grid:
+        raise ValueError(
+            f"max_gap_interpolate applies to grid interpolators, not {kind!r}"
+        )
+    if kind in MUTATIONS:
+        return MUTATIONS[kind](points)
+    if identity:
         return points
-    raise ValueError(f"unknown mutation {kind!r}")
+    if interval is None:
+        raise ValueError(f"mutation {kind!r} requires a sample interval")
+    if max_gap_interpolate is not None:
+        return grid[kind](points, interval, max_gap_interpolate=max_gap_interpolate)
+    return interval_resamples[kind](points, interval)
 
 
 def pipeline(points: DataFrame, specs: Sequence[tuple]) -> DataFrame:

@@ -66,53 +66,13 @@ from pyspark.sql import functions as F
 
 from open_instrument_spark.functions.durations import parse_duration_ms
 from open_instrument_spark.model import epoch_seconds
-from open_instrument_spark.operators.mutate import SERIES_KEY_COL, _with_key
+from open_instrument_spark.operators.mutate import (
+    SERIES_KEY_COL,
+    _with_key,
+    _with_predecessor,
+)
 
 _US = 1_000  # ms → µs
-
-
-def _chunked_lag_state(pts: DataFrame, chunk) -> DataFrame:
-    """Bounded-task (lag, series-min) state for grid resampling — the
-    resample twin of ``mutate._pairwise_chunked``.
-
-    Adds ``_pt``/``_pv`` (previous sample's epoch-µs/value) and ``_ts0``
-    (series' first epoch-µs, the grid anchor) WITHOUT any whole-series
-    window: the lag runs within (series, time-chunk); each chunk's first
-    row takes its predecessor from the previous non-empty chunk's tail,
-    and ``_ts0`` is a min over the chunk-cardinality tail table. Task
-    size is bounded by points-per-chunk at any series length. Requires a
-    ``_t`` epoch-µs column."""
-    chunk_us = parse_duration_ms(chunk) * _US
-    pts = pts.withColumn("_c", F.floor(F.col("_t") / F.lit(chunk_us)))
-    wc = Window.partitionBy(SERIES_KEY_COL, "_c").orderBy("_t")
-    df = (
-        pts.withColumn("_pt0", F.lag("_t").over(wc))
-        .withColumn("_pv0", F.lag("dval").over(wc))
-    )
-    tails = pts.groupBy(SERIES_KEY_COL, "_c").agg(
-        F.max_by(
-            F.struct(F.col("dval").alias("v"), F.col("_t").alias("t")), "_t"
-        ).alias("_tail"),
-        F.min("_t").alias("_cmin"),
-    )
-    wprev = Window.partitionBy(SERIES_KEY_COL).orderBy("_c")
-    state = tails.select(
-        SERIES_KEY_COL,
-        "_c",
-        F.lag("_tail").over(wprev).alias("_ptail"),
-        F.min("_cmin").over(Window.partitionBy(SERIES_KEY_COL)).alias("_ts0"),
-    )
-    df = df.join(state, [SERIES_KEY_COL, "_c"], "left")
-    use_tail = F.col("_pt0").isNull()
-    return (
-        df.withColumn(
-            "_pt", F.when(use_tail, F.col("_ptail.t")).otherwise(F.col("_pt0"))
-        )
-        .withColumn(
-            "_pv", F.when(use_tail, F.col("_ptail.v")).otherwise(F.col("_pv0"))
-        )
-        .drop("_pt0", "_pv0", "_ptail", "_c")
-    )
 
 
 def uniform_average(points: DataFrame, interval, max_gap_interpolate: int | None = None,
@@ -124,12 +84,10 @@ def uniform_average(points: DataFrame, interval, max_gap_interpolate: int | None
     All grid arithmetic in epoch-µs longs (the reference uses ms; µs is
     its lossless refinement for our µs-precision timestamps).
 
-    Scale note: ``Window.partitionBy(series_key)`` places a whole series
-    in one task. ``chunk`` (duration, e.g. "1d") switches to the bounded
-    two-phase plan (:func:`_chunked_lag_state` — lag within (series,
-    chunk) + previous-chunk-tail handoff; the grid anchor comes from the
-    chunk-tail table) with IDENTICAL results: each output row depends
-    only on one consecutive input pair plus the series' first timestamp.
+    ``chunk`` (duration, e.g. "1d") bounds task size for arbitrarily
+    long series (:func:`mutate._with_predecessor`) with IDENTICAL
+    results: each output row depends only on one consecutive input pair
+    plus the series' first timestamp.
     """
     interval_us = parse_duration_ms(interval) * _US
     pts = _with_key(points)
@@ -139,16 +97,9 @@ def uniform_average(points: DataFrame, interval, max_gap_interpolate: int | None
     i = F.lit(interval_us)
     base = (F.col("_ts0") - F.col("_ts0") % i).alias("base")
 
-    if chunk is None:
-        w = Window.partitionBy(SERIES_KEY_COL).orderBy("_t")
-        wall = Window.partitionBy(SERIES_KEY_COL)
-        df = (
-            pts.withColumn("_pt", F.lag("_t").over(w))
-            .withColumn("_pv", F.lag("dval").over(w))
-            .withColumn("_ts0", F.min("_t").over(wall))
-        )
-    else:
-        df = _chunked_lag_state(pts, chunk)
+    df = _with_predecessor(
+        pts, "_t", {"_pt": "_t", "_pv": "dval"}, chunk, series_min={"_ts0": "_t"}
+    )
     df = (
         df.filter(F.col("_pt").isNotNull() & (F.col("_t") > F.col("_pt")))
         .withColumn("_base", base)
@@ -711,18 +662,13 @@ def _interpolate_sql(points: DataFrame, interval, chunk=None,
     kernel. An on-grid FIRST input additionally passes through
     (mutations.go:100-102).
 
-    Plan (r5 window form — measured 2.4× over the former join form at
-    sf0.1, row-identical): the first-of-cell pair rides along as a
-    ``min(struct(_t, dval))`` window over (series, cell) — the lag of
-    that struct IS the previous cell's first input, because the
-    immediately preceding row always belongs to the previous cell — so
-    the per-row state needs one (series, cell) window + one per-series
-    lag window instead of two aggregates joined back (two exchanges vs
-    five plan nodes; the second window reuses the first's partitioning
-    where Catalyst allows). With ``chunk`` set, the lag runs per
-    (series, chunk) with a tail-struct handoff (bounded tasks) and the
-    anchor cell comes from a series-cardinality aggregate join instead
-    of an unbounded window, preserving the bounded-task guarantee.
+    Plan: the first-of-cell pair rides along as a ``min(struct(_t,
+    dval))`` window over (series, cell) — the lag of that struct IS the
+    previous cell's first input, because the immediately preceding row
+    always belongs to the previous cell — so the per-row state is one
+    (series, cell) window plus the series predecessor
+    (:func:`mutate._with_predecessor`, which also bounds task size when
+    ``chunk`` is set), with no aggregate joined back.
     Validated row-identical to interpolate_kernel (golden vectors +
     whole-table equivalence tests)."""
     interval_us = parse_duration_ms(interval) * _US
@@ -740,38 +686,9 @@ def _interpolate_sql(points: DataFrame, interval, chunk=None,
     pts = pts_base.withColumn(
         "_f", F.min(F.struct(F.col("_t"), F.col("dval"))).over(wcell)
     )
-    if chunk is None:
-        w = Window.partitionBy(SERIES_KEY_COL).orderBy("_t")
-        df = (
-            pts.withColumn("_pcell", F.lag("_cell").over(w))
-            .withColumn("_pf", F.lag("_f").over(w))
-            .withColumn(
-                "_c0", F.min("_cell").over(Window.partitionBy(SERIES_KEY_COL))
-            )
-        )
-    else:
-        chunk_us = parse_duration_ms(chunk) * _US
-        pts_c = pts.withColumn("_c", F.floor(F.col("_t") / F.lit(chunk_us)))
-        wc = Window.partitionBy(SERIES_KEY_COL, "_c").orderBy("_t")
-        df = pts_c.withColumn(
-            "_p0", F.lag(F.struct(F.col("_cell"), F.col("_f"))).over(wc)
-        )
-        tails = pts_c.groupBy(SERIES_KEY_COL, "_c").agg(
-            F.max_by(F.struct(F.col("_cell"), F.col("_f")), "_t").alias("_tp")
-        )
-        wprev = Window.partitionBy(SERIES_KEY_COL).orderBy("_c")
-        state = tails.select(
-            SERIES_KEY_COL, "_c", F.lag("_tp").over(wprev).alias("_ptp")
-        )
-        anchors = pts_base.groupBy(SERIES_KEY_COL).agg(F.min("_cell").alias("_c0"))
-        df = (
-            df.join(state, [SERIES_KEY_COL, "_c"], "left")
-            .withColumn("_p", F.coalesce("_p0", "_ptp"))
-            .withColumn("_pcell", F.col("_p._cell"))
-            .withColumn("_pf", F.col("_p._f"))
-            .join(anchors, SERIES_KEY_COL)
-        )
-
+    df = _with_predecessor(
+        pts, "_t", {"_pcell": "_cell", "_pf": "_f"}, chunk, series_min={"_c0": "_cell"}
+    )
     accepted = (
         df.filter(F.col("_pcell").isNotNull() & (F.col("_cell") > F.col("_pcell")))
         .withColumn(

@@ -32,6 +32,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, Row
 
+from open_instrument_spark.canonical import variable_pattern
 from open_instrument_spark.model import POINTS_SCHEMA
 from open_instrument_spark.plans.api import GetRequest, get as api_get
 from open_instrument_spark.session import local_df
@@ -69,15 +70,11 @@ def _ms(ts) -> int:
 
 def _variable_str(var) -> str:
     """A request 'variable' is the canonical string or the proto's
-    structured {"name":..., "label": {...}} (StreamVariable)."""
+    structured {"name":..., "label": {...}} (StreamVariable), rendered
+    through :func:`canonical.variable_pattern`."""
     if isinstance(var, str):
         return var
-    name = var["name"]
-    labels = var.get("label") or {}
-    if not labels:
-        return name
-    inner = ",".join(f"{k}={labels[k]}" for k in sorted(labels))
-    return f"{name}{{{inner}}}"
+    return variable_pattern(var["name"], var.get("label"))
 
 
 def parse_get_request(obj: dict) -> GetRequest:

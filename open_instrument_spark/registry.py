@@ -47,9 +47,9 @@ from open_instrument_spark.queries.tsdb import run_entry  # noqa: F401
 # Driver-window ordering
 # ===========================================================================
 # The driver verifies queries() in dict order and stops after 50 entries
-# (round-1 evidence: CORRECTNESS_r01.json holds exactly the first 50
-# registered names). Registration order above follows the narrative; the
-# rebuild below decides WHICH queries the driver replays:
+# (CORRECTNESS_r01.json holds exactly the first 50 registered names).
+# Registration order above follows the narrative; the rebuild below
+# decides WHICH queries the driver replays:
 #   - DRIVER_WINDOW: exactly 50 oracled queries, one per distinct
 #     operator/semantic — every one gets rows+schema+hash checked.
 #   - _PAST_WINDOW_ORACLED: redundant oracled variants (chunked twins,
@@ -58,200 +58,56 @@ from open_instrument_spark.queries.tsdb import run_entry  # noqa: F401
 #     DuckDB locally, so demotion loses no rigor.
 #   - _PAST_WINDOW_ROWS_ONLY: approximate / sequential ops with no
 #     portable oracle, each pinned by golden or recall pytests.
-
-# r8 rotation (judge r7 "Next round" #1): after r7's rotation, 46
-# oracled queries had STILL never earned a driver CORRECTNESS row — they
-# had only ever been replayed by tests/test_oracle_parity.py. This round
-# swaps ALL 46 in at once (every oracled query in the registry has now
-# been scheduled for a driver row across r1-r8), keeping four cheap
-# r7-driver-green keepers as canaries that the harness itself is healthy
-# (flagship + one per major family). Everything demoted is r7-green in
-# CORRECTNESS_r07.json AND keeps its identical pytest-hosted DuckDB gate,
-# so the rotation trades no rigor, only which process replays what.
-# r10 rotation (judge r9 "Next round" #1): the 21 r9-new oracled queries
-# (alerts, histogram_quantile, CMS/Bloom, SemDeDup, spans, PII, weighted/
-# mixture sampling, trend family) earn their driver CORRECTNESS rows.
-# Displaced: 21 r8-rotated keepers that each carry 2+ driver-green rows
-# (r8+r9, most also r1-r7); every displaced query keeps its identical
-# pytest-hosted DuckDB gate (tests/test_oracle_parity.py). Kept: the
-# three standing canaries, one diversity canary per major family, and
-# the 14 single-driver-row r8/r9-new entries (their evidence is thinnest).
-# After this round every oracled query in the registry has a driver row
-# AND no query has fewer than one.
-# r11 rotation (judge r10 "Next round" #1): the two r10-new pytest-gated
-# queries (agg_count_values, embed_coarse_rerank) plus the r11-new S13
-# tail (collector_varnish_status, collector_http_fetch) take driver
-# rows, displacing four twice-green (r9+r10) keepers — each displaced
-# family keeps at least one in-window representative and every
-# displaced query stays under the pytest-hosted DuckDB gate.
+# Rotation invariant: a newly added oracled query enters DRIVER_WINDOW
+# when it lands; the query it displaces is the one with the most driver
+# correctness rows whose family keeps an in-window representative, and
+# it moves to _PAST_WINDOW_ORACLED. Which query held which slot when is
+# in the CORRECTNESS_r*.json reports and the git history.
 DRIVER_WINDOW = [
     "flagship_rate_sum",            # keeper: the smoke-check flagship
     "select_exact_name_label_range",  # keeper: select family canary
     "agg_sum_by_name",              # keeper: aggregate family canary
-    # r10-new retrieval pair (BM25 + hybrid RRF — new this round, so
-    # they take their driver rows immediately, displacing
-    # text_lm_score_topk (green r8+r9) and ann_lsh_topk (green r8+r9;
-    # the ANN family keeps ann_pq_seeded_topk + ann_ivfpq_seeded_topk
-    # in-window), both staying under the pytest-hosted DuckDB gate):
-    # r12: the BATCHED BM25 gate (inverted-index join, per-query df,
-    # three queries under one hash gate) supersedes the single-query
-    # text_bm25_topk (driver-green r10+r11) as the lexical-retrieval
-    # window entry; the single-query path stays oracle-gated under
-    # pytest and pinned row-equal to this one by test_text_index.py.
     "text_bm25_multiquery",
     "retrieval_hybrid_rrf",
-    # r10-new in-plan k-means Lloyd iteration — displaces
-    # resample_interpolate_go, the registry's most-verified query
-    # (driver-green r1-r9; its chunked/max_gap siblings and the Go
-    # goldens keep the family pinned under pytest).
     "embed_kmeans_step",
-    # r10-new MAD robust-outlier sweep — displaces
-    # multimodal_video_stats (driver-green r8+r9; the multimodal
-    # family keeps its four oracle-parity twins under pytest).
     "agg_mad_outliers",
-    # -- family-diversity canaries retained from the r8 rotation --
     "ingest_validate_strict",
-    # r10-new (PromQL counter trio — new this round, so they take their
-    # driver rows immediately, displacing retention_report, mutate_ewma
-    # and corpus_pack_bpe, each green r8+r9 and most rounds before):
-    # r14 mid-round rotation (the standing invariant: new oracled
-    # queries enter the window the round they land; displaced = the
-    # thickest-evidence keepers whose family stays represented):
-    # - agg_cross_family (PromQL aggregator tail: count/stddev/stdvar/
-    #   group in one exchange) displaces mutate_increase (driver-green
-    #   r10-r13 — four rows; the counter family keeps mutate_irate,
-    #   mutate_idelta and mutate_counter_resets in-window).
     "agg_cross_family",
     "mutate_irate",
-    # - mutate_scalar_math_family (12 PromQL math functions under one
-    #   hash) displaces agg_quantile_over_time (driver-green r10-r13;
-    #   the over-time family keeps mutate_over_time_family in-window
-    #   and quantile_over_time keeps its hand-traced pytests).
     "mutate_scalar_math_family",
     "corpus_dsir_sample",
     "select_label_replace",
-    # - mutate_calendar_family (8 calendar components, integer-exact)
-    #   displaces select_label_join (driver-green r10-r13; the label-
-    #   manipulation family keeps select_label_replace in-window).
     "mutate_calendar_family",
     "alert_slo_burn",
-    # - embed_knn_graph_multiprobe (the graph recall lever: top-2-cell
-    #   candidate pools, dedup, global top-k — all replayed) displaces
-    #   corpus_mixture_temperature (driver-green r10-r13; the mixture/
-    #   sampling family keeps corpus_mixture_tokens and
-    #   corpus_dsir_sample in-window).
     "embed_knn_graph_multiprobe",
-    # r12-new cisco config-blob collector (string-sample RLE + daily
-    # LATEST at blob size — the last reference collector data shape);
-    # displaces mutate_holt_winters (driver-green r10+r11; the trend
-    # family keeps mutate_holt_forecast oracle-gated under pytest).
     "collector_cisco_config",
-    # r12-new PromQL *_over_time range-aggregation family (one-exchange
-    # avg/min/max/sum/count/last/present); displaces mutate_cusum
-    # (driver-green r10+r11; CUSUM keeps its streaming-twin pytests and
-    # the oracle parity replay).
     "mutate_over_time_family",
-    # r12-new leakage-safe split (near-dup clusters land whole in one
-    # split; component fixpoint + md5 split grammar both replayed);
-    # displaces mutate_predict_linear (driver-green r10+r11; the trend
-    # family keeps predict_linear's hand-traced pytests + parity).
     "corpus_split_leakage_safe",
-    # -- r10 rotation: the 21 r9-new oracled queries --
     "mutate_counter_resets",
     "dedup_semantic",
     "dedup_spans",
     "corpus_mixture_tokens",
-    # r12: the PSI drift monitor takes corpus_chunk's slot (driver-
-    # green r10+r11; chunking keeps its no-Exchange plan pin + parity).
     "corpus_drift_psi",
-    # r12: contrastive triplet mining takes text_quality_classifier's
-    # slot (driver-green r10+r11; the classifier keeps its plan pin,
-    # probe row, and parity replay).
     "embed_triplet_mining",
-    # r12: the fully-oracled scalar-quantization search (train + encode
-    # + asymmetric L2 all replayed) takes embed_range_search's slot
-    # (driver-green r10+r11; radius search keeps its parity replay and
-    # the ≥τ-margin pytest).
     "ann_sq_topk",
-    # r12-late: PromQL absent() (one-pass conditional-count selectors)
-    # takes agg_cms_label_counts' slot (driver-green r10+r11; the
-    # sketch family keeps dedup_bloom_contaminated in-window).
     "select_absent",
-    # r13: absent_over_time — absent()'s windowed sibling over an
-    # in-plan time spine; displaces retrieval_eval_funnel (driver-green
-    # r11 AND r12; the retrieval family keeps text_bm25_multiquery and
-    # retrieval_hybrid_rrf in-window, and the funnel eval keeps its
-    # parity replay + recall pytests).
     "select_absent_over_time",
     "dedup_bloom_contaminated",
     "agg_histogram_quantile",
-    # r12-late: the in-cell kNN graph takes corpus_weighted_sample's
-    # slot (driver-green r10+r11; the sampling family keeps
-    # corpus_mixture_tokens / _temperature / dsir in-window).
     "embed_knn_graph",
     "list_stale_series",
     "text_pii_scrub",
     "corpus_safety_pipeline",
-    # r12-late: canonical-per-cluster materialization takes
-    # agg_topk_series' slot (driver-green r10+r11; the agg family keeps
-    # seven in-window representatives).
     "dedup_cluster_canonical",
-    # r12-late: Moore-Lewis cross-entropy selection takes
-    # mutate_offset_compare's slot (driver-green r10+r11; the mutate
-    # family keeps increase/irate/idelta/counter_resets/over_time).
     "corpus_moore_lewis",
-    # r12-late: the incremental semantic probe (embedding sibling of
-    # dedup_minhash_incremental) takes alert_rule_states' slot
-    # (driver-green r10+r11; the alert family keeps alert_slo_burn and
-    # alert_rule_transitions in-window).
     "dedup_semantic_incremental",
     "alert_rule_transitions",
-    # -- r13 rotation (judge r12 "Next round" #4/#6) -- the two r13-new
-    # kNN-graph consumers take their driver rows immediately. Rotation
-    # invariant, explicit: every oracled query in the registry has ≥1
-    # driver-green CORRECTNESS row across r01-r13 (union-checked by the
-    # judge each round), newly-added oracled queries enter the window
-    # the round they land, and the displaced entries are always the
-    # thickest-evidence keepers whose family stays represented.
-    # Displaced here: agg_count_values and embed_coarse_rerank (each
-    # driver-green r11 AND r12; the agg family keeps seven in-window
-    # representatives, the embed family keeps kmeans_step/iterate2,
-    # triplet_mining and knn_graph) — both stay under the identical
-    # pytest-hosted DuckDB gate (tests/test_oracle_parity.py).
     "embed_mutual_knn_clusters",
     "embed_knn_density",
-    # consumer #3, one-round kNN label propagation — displaces
-    # embed_kmeans_iterate2 (driver-green r11 AND r12; the embed family
-    # keeps kmeans_step in-window, the 2-round chain keeps its
-    # oracle-parity replay + chained-equality pytest).
     "embed_label_propagation",
-    # the curation endpoint composing consumers #1+#2 (clusters +
-    # density → per-cluster keep set) — displaces
-    # ann_ivfpq_coarse_rerank (driver-green r11 AND r12; the ANN
-    # family keeps ann_ivfpq_seeded_topk and ann_sq_topk in-window,
-    # and the funnel keeps its parity replay + recall pytests).
     "embed_knn_coreset",
-    # -- r14 rotation (judge r13 "Next round" #1/#3/#5/#8) --
-    # embed_label_propagation KEEPS its slot from r13: it is the one
-    # oracled query whose only driver row was red (the oracle's un-cast
-    # HUGEINT vote_w, fixed this round) — it stays in-window until it
-    # has a green row. The two r14-new oracled queries take slots
-    # immediately per the standing invariant:
-    # - embed_knn_graph_store (the materialized graph store end-to-end:
-    #   build − batch, absorb, read) displaces ann_ivfpq_seeded_topk
-    #   (driver-green r9, r11, r12, r13 + the r1-era rows — 5 greens,
-    #   the thickest non-canary ANN evidence; the ANN family keeps
-    #   ann_sq_topk in-window and IVFPQ keeps its recall-floor +
-    #   maintenance pytests and the parity replay).
     "embed_knn_graph_store",
-    # - embed_label_propagation2 (two-round propagation, chained-CTE
-    #   oracle) displaces agg_anchored_median_user0 (5 driver greens —
-    #   the thickest aggregate evidence after the canary; the agg
-    #   family keeps agg_sum_by_name, agg_mad_outliers,
-    #   agg_quantile_over_time and agg_histogram_quantile in-window,
-    #   and the anchored kernel keeps its Go goldens + parity replay).
     "embed_label_propagation2",
-    # -- r11 rotation additions --
     "collector_varnish_status",
     "collector_http_fetch",
     "mutate_idelta",
@@ -261,30 +117,18 @@ DRIVER_WINDOW = [
 ]
 
 _PAST_WINDOW_ORACLED = [
-    # r14 demotions — displaced by the two r14-new window entries
-    # (embed_knn_graph_store, embed_label_propagation2); both among the
-    # registry's thickest driver evidence (5 green rows each) and both
-    # still replayed by the identical pytest-hosted DuckDB gate below.
     "ann_ivfpq_seeded_topk",
     "agg_anchored_median_user0",
-    # r13 demotions — each driver-green r11 AND r12; displaced by the
-    # kNN-graph consumers (embed_mutual_knn_clusters, embed_knn_density,
-    # embed_label_propagation).
     "agg_count_values",
     "embed_coarse_rerank",
     "embed_kmeans_iterate2",
     "retrieval_eval_funnel",
     "ann_ivfpq_coarse_rerank",
-    # r12-late demotions — each driver-green r10 AND r11; displaced by
-    # embed_knn_graph / dedup_cluster_canonical / corpus_moore_lewis.
     "corpus_weighted_sample",
     "agg_topk_series",
     "mutate_offset_compare",
     "alert_rule_states",
     "agg_cms_label_counts",
-    # r12 demotions — each driver-green r10 AND r11; displaced by
-    # collector_cisco_config / mutate_over_time_family
-    # (mutate_holt_forecast keeps the trend family oracle-gated below).
     "mutate_holt_winters",
     "mutate_cusum",
     "mutate_predict_linear",
@@ -292,8 +136,6 @@ _PAST_WINDOW_ORACLED = [
     "embed_range_search",
     "corpus_chunk",
     "text_quality_classifier",
-    # r11 demotions — each driver-green in r9 AND r10, each family keeps
-    # an in-window representative; replayed by test_oracle_parity.py.
     "collector_mysql_status",
     "collector_system_status",
     "ann_pq_seeded_topk",
@@ -305,14 +147,10 @@ _PAST_WINDOW_ORACLED = [
     "corpus_source_filter",
     "collector_snmp_hoststats",
     "analytics_cohort_retention",
-    # r10 late demotions (displaced by the retrieval pair) — driver-green
-    # r8 AND r9, replayed by test_oracle_parity.py like the rest.
     "text_lm_score_topk",
     "ann_lsh_topk",
     "resample_interpolate_go",
     "multimodal_video_stats",
-    # r10 demotions — each was driver-green in r8 AND r9 (most also
-    # r1-r7) and stays under the pytest-hosted DuckDB gate.
     "corpus_pack_partitioned",
     "mutate_min_resample",
     "mutate_max_resample",
@@ -337,19 +175,11 @@ _PAST_WINDOW_ORACLED = [
     "retention_report",
     "mutate_ewma",
     "corpus_pack_bpe",
-    # r10 late demotions: the four r10-new LLM/label/SLO queries take
-    # their rows now, displacing four more multiply-green canaries
-    # (text_scrub r1-r9; rate/rle chunked twins and export_render each
-    # green r8+r9 and most earlier rounds; every family keeps at least
-    # one in-window representative).
     "text_scrub",
     "mutate_rate_chunked",
     "rle_encode_chunked",
     "export_render",
     "dedup_simhash_md5",
-    # r8 demotions — every entry is driver-green in CORRECTNESS_r07.json
-    # (or r1-r6 for the pre-r7 window) and stays under the pytest-hosted
-    # DuckDB gate.
     "dedup_exact",
     "select_prefix_glob",
     "select_label_present",
@@ -397,9 +227,6 @@ _PAST_WINDOW_ORACLED = [
     "temporal_asof_join",
     "temporal_sessionize",
     "temporal_funnel",
-    # r9 demotions — each was driver-green in 6-8 rounds (r1-r8, plus
-    # list_max_variables at r2+r8) and stays under the pytest-hosted
-    # DuckDB gate (test_oracle_parity.py).
     "list_max_variables",
     "multimodal_decode_fake",
     "select_label_absent",
@@ -413,10 +240,6 @@ _PAST_WINDOW_ORACLED = [
     "multimodal_frame_sample",
     "analytics_top_orders_per_customer",
     "api_get_fanout",
-    # r14 mid-round demotions (each displaced by an r14-new window
-    # entry — see the rotation comments inside DRIVER_WINDOW; every
-    # one is driver-green r10-r13 and stays under the pytest-hosted
-    # DuckDB gate):
     "mutate_increase",
     "agg_quantile_over_time",
     "select_label_join",

@@ -24,6 +24,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from open_instrument_spark.canonical import variable_pattern
 from open_instrument_spark.functions.match import VariableMatcher
 from open_instrument_spark.operators.retention import PolicyItem
 
@@ -121,31 +122,11 @@ _SAMPLE_TYPE = {
 
 def _variable_pattern(var: dict) -> str:
     """StreamVariable message → the canonical pattern string our
-    VariableMatcher parses (name + {label=value,...}), through THE
-    shared grammar kernel so values containing grammar characters
-    (comma, quote, backslash) come out quoted — a raw f-string join
-    here produced unparseable patterns for such values (caught by
-    test_render_round_trip_property). The matcher-grammar specials
-    (bare ``*`` presence, empty absence, ``/re/``) are value chars and
-    pass through unquoted, preserving their meaning."""
-    from open_instrument_spark.canonical import canonical_variable_py
-
-    name = var.get("name", ["*"])[0]
-    labels = {
-        l.get("label", [""])[0]: l.get("value", [""])[0]
-        for l in var.get("label", [])
-    }
-    # canonical_variable_py drops empty values; the matcher grammar needs
-    # `k=` (absence) preserved, so splice those back verbatim.
-    absent = [k for k, v in labels.items() if v == "" and k]
-    pat = canonical_variable_py(name, {k: v for k, v in labels.items() if v})
-    if absent:
-        body = ",".join(f"{k}=" for k in sorted(absent))
-        if pat.endswith("}"):
-            pat = pat[:-1] + "," + body + "}"
-        else:
-            pat = f"{pat}{{{body}}}"
-    return pat
+    VariableMatcher parses (:func:`canonical.variable_pattern`)."""
+    return variable_pattern(
+        var.get("name", ["*"])[0],
+        {l.get("label", [""])[0]: l.get("value", [""])[0] for l in var.get("label", [])},
+    )
 
 
 def _policy_item(p: dict) -> PolicyItem:

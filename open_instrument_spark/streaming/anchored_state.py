@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from open_instrument_spark.functions.durations import parse_duration_ms
+from open_instrument_spark.model import label_value
 from open_instrument_spark.operators.aggregate import _drift_calc_fns, drift_walk
 
 OUT_SCHEMA = "name string, ts timestamp, value double"
@@ -190,7 +191,7 @@ def anchored_stream(points_stream: DataFrame, agg_type: str,
         # (name, label_value), so each label group closes separately
         src = points_stream.select(
             "name",
-            F.col("labels").getItem(by_label).alias("label_value"),
+            label_value(points_stream, by_label).alias("label_value"),
             "series_key", "ts", "dval",
         ).where(
             F.col("label_value").isNotNull() & (F.col("label_value") != "")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from open_instrument_spark.model import POINTS_SCHEMA
+from open_instrument_spark.model import POINTS_SCHEMA, label_value
 from open_instrument_spark.sources import ingest as batch_ingest
 
 
@@ -133,7 +133,7 @@ def windowed_agg(points_stream: DataFrame, kind: str = "sum",
         # A10 drop-missing (Go MergeStreamsBy): streams lacking the
         # grouping label (absent OR empty-valued — same predicate as the
         # batch aggregate_by_label) are skipped, not grouped under NULL.
-        lv = F.col("labels").getItem(label)
+        lv = label_value(src, label)
         src = src.filter(lv.isNotNull() & (lv != ""))
         keys.append(lv.alias("label_value"))
     # slide=None → tumbling; a slide makes the windows HOPPING (each
@@ -186,9 +186,4 @@ def windowed_rate_sum(points_stream: DataFrame, interval: str = "5 minutes",
     ``streaming.recurrence.rate_stream``, applyInPandasWithState keyed
     on the series.)
     """
-    return (
-        points_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", interval), F.col("name"))
-        .agg(F.sum("dval").alias("value"))
-        .select(F.col("window.start").alias("ts"), "name", "value")
-    )
+    return windowed_agg(points_stream, "sum", interval, watermark)

@@ -226,6 +226,20 @@ def test_interpolate_unchunked_plan_is_join_free(spark, tables):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
+def test_uniform_average_unchunked_plan_is_join_free(spark, tables):
+    """Unchunked M4: the predecessor lag and the series-minimum anchor
+    share one shuffle on the series key, with no join, with or without
+    the max_gap cap."""
+    from open_instrument_spark.model import events_to_points
+    from open_instrument_spark.operators import resample
+
+    pts = events_to_points(tables.table("events"))
+    for max_gap in (None, 2):
+        plan = plan_of(resample.uniform_average(pts, "6h", max_gap_interpolate=max_gap))
+        assert plan.count("Exchange") == 1
+        assert "Join" not in plan
+
+
 def test_contamination_broadcasts_benchmark_side(spark, tables):
     """Decontamination's 100 TB contract: the benchmark side is
     broadcast (map-side join — the corpus is never shuffled for the

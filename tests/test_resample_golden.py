@@ -214,23 +214,30 @@ def test_interpolate_sql_equals_kernel_on_events(spark):
     assert sql == kernel and len(sql) > 0
 
 
+# "1h" is below the 6 h grid, so almost every predecessor crosses a
+# chunk boundary; "1000d" puts each whole series in one chunk.
+CHUNKS = ("1h", "2d", "1000d")
+
+
 def test_interpolate_chunked_equals_unchunked(spark):
     pts = _events_points(spark)
     plain = _rows(resample.interpolate(pts, "6h"))
-    chunked = _rows(resample.interpolate(pts, "6h", chunk="2d"))
-    assert plain == chunked and len(plain) > 0
+    assert len(plain) > 0
+    for chunk in CHUNKS:
+        assert _rows(resample.interpolate(pts, "6h", chunk=chunk)) == plain, chunk
 
 
 def test_uniform_average_chunked_equals_unchunked(spark):
     pts = _events_points(spark)
     plain = _rows(resample.uniform_average(pts, "6h"))
-    chunked = _rows(resample.uniform_average(pts, "6h", chunk="2d"))
-    assert plain == chunked and len(plain) > 0
+    assert len(plain) > 0
+    for chunk in CHUNKS:
+        assert _rows(resample.uniform_average(pts, "6h", chunk=chunk)) == plain, chunk
 
 
 def test_interpolate_max_gap_sql_equals_kernel_on_events(spark):
     """max_gap path over the full sf0.001 events table: the pure-SQL
-    plan, its chunked variant, and the Arrow kernel must be
+    plan, its chunked variants, and the Arrow kernel must be
     ROW-IDENTICAL (bit-exact floats), and the cap must actually bite
     (fewer rows than the uncapped plan)."""
     pts = _events_points(spark)
@@ -238,23 +245,27 @@ def test_interpolate_max_gap_sql_equals_kernel_on_events(spark):
     kernel = _rows(
         resample.interpolate(pts, "6h", impl="kernel", max_gap_interpolate=2)
     )
-    chunked = _rows(
-        resample.interpolate(pts, "6h", chunk="2d", max_gap_interpolate=2)
-    )
-    assert sql == kernel == chunked and len(sql) > 0
+    assert sql == kernel and len(sql) > 0
+    for chunk in CHUNKS:
+        chunked = _rows(
+            resample.interpolate(pts, "6h", chunk=chunk, max_gap_interpolate=2)
+        )
+        assert chunked == sql, chunk
     uncapped = _rows(resample.interpolate(pts, "6h"))
     assert len(sql) < len(uncapped)
 
 
 def test_uniform_max_gap_chunked_equals_unchunked(spark):
-    """The M4 max_gap gate sits downstream of the chunk branch — pin that
-    the chunked two-phase plan reproduces it row-for-row on real data."""
+    """The M4 max_gap gate sits downstream of the predecessor handoff —
+    pin that every chunked plan reproduces it row-for-row on real data."""
     pts = _events_points(spark)
     plain = _rows(resample.uniform_average(pts, "6h", max_gap_interpolate=2))
-    chunked = _rows(
-        resample.uniform_average(pts, "6h", max_gap_interpolate=2, chunk="2d")
-    )
-    assert plain == chunked and len(plain) > 0
+    assert len(plain) > 0
+    for chunk in CHUNKS:
+        chunked = _rows(
+            resample.uniform_average(pts, "6h", max_gap_interpolate=2, chunk=chunk)
+        )
+        assert chunked == plain, chunk
     assert len(plain) < len(_rows(resample.uniform_average(pts, "6h")))
 
 

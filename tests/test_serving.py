@@ -124,6 +124,33 @@ def test_serving_get_list_add_roundtrip(spark, pts, tmp_path):
         srv.shutdown()
 
 
+def test_structured_variable_matches_exact_series(spark):
+    """A structured {"name", "label"} variable selects exactly the series
+    it names, on /get and /list, whatever the label value holds: a comma
+    and a trailing space are values, not grammar. Bare ``*``, the empty
+    value (or null) and ``/re/`` keep their matcher meaning."""
+    jobs = ["a,b", "a", "b", "has space ", "has space", None]
+    rows = [("/m", {"job": j} if j is not None else {"host": "h"}, BASE,
+             float(i), None) for i, j in enumerate(jobs)]
+    pts = spark.createDataFrame(rows, serving.POINTS_SCHEMA)
+    srv = serving.serve(spark, lambda: pts)
+    try:
+        for job, want in [("a,b", {"a,b"}), ("has space ", {"has space "}),
+                          ("*", set(jobs) - {None}), ("", {None}), (None, {None}),
+                          ("/has.*/", {"has space ", "has space"})]:
+            var = {"name": "/m", "label": {"job": job}}
+            code, got = _post(srv, "/get", {"variable": var})
+            assert code == 200, (job, got)
+            assert {s["variable"]["label"].get("job") for s in got["stream"]} == want, job
+            assert len(got["stream"]) == len(want), job
+            code, got = _post(srv, "/list", {"variable": var, "max_age": None})
+            assert code == 200, (job, got)
+            assert {v["label"].get("job") for v in got["variable"]} == want, job
+            assert len(got["variable"]) == len(want), job
+    finally:
+        srv.shutdown()
+
+
 def test_parse_get_request_shapes():
     req = serving.parse_get_request({
         "variable": "/x", "min_timestamp": 0, "max_timestamp": 60_000,
